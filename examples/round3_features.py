@@ -1,6 +1,6 @@
-"""Round-3 features tour: paragraph dedup, repeated-n-gram scrub,
-benchmark decontamination, the batch judge client, and the API
-collector — each runnable without network or external data.
+"""Round-3 features tour: CCNet-style paragraph-level dedup, the batch
+judge client, and the API collector — each runnable without network or
+external data.
 
     python examples/round3_features.py
 """
@@ -11,8 +11,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from incident_pii_redactor_spark.plans import build_session  # noqa: E402
 
@@ -65,23 +63,6 @@ def main() -> None:
 
     c = IncidentCollector(fake_api, sleep=lambda s: None)
     print([r["id"] for r in c.collect_incidents()], c.stats)
-
-    print("== real MP4 container metadata ==")
-    import struct
-
-    from incident_pii_redactor_spark.functions.multimodal import (
-        decode_video_meta,
-    )
-
-    def box(t, payload):
-        return struct.pack(">I", 8 + len(payload)) + t + payload
-
-    mvhd = box(b"mvhd", bytes(12) + struct.pack(">II", 600, 5400)
-               + bytes(80))
-    mp4 = box(b"ftyp", b"isom") + box(b"moov", mvhd + box(b"trak", b""))
-    vids = spark.createDataFrame([(1, bytearray(mp4))],
-                                 "id long, blob binary")
-    decode_video_meta(vids, "id", "blob").show()
 
     spark.stop()
 

@@ -13,14 +13,21 @@ core/       pure per-document functions (span model, detectors,
             arbitration, splice, validation) — shared verbatim by the
             Spark UDFs and the single-node oracle used in tests, which
             is what guarantees byte-identical output per url.
-quality/    langid, perplexity, heuristic keep/drop rules (numpy).
+quality/    langid, perplexity, heuristic keep/drop rules, classifier
+            and DSIR selection, toxicity, compression ratio (numpy).
 functions/  Spark Column-level helpers (JVM-side expressions): text
-            stats, dedup (exact / MinHash-LSH / SimHash), similarity.
-operators/  DataFrame-level operators: the fused mapInPandas scrub
-            stage, quality filter, manifest resume, salting.
-sources/    input table readers + deterministic fixture synthesis.
+            stats, HTML extraction, dedup (exact / MinHash-LSH /
+            SimHash), similarity and ANN, Bloom filters, connected
+            components / PageRank, BPE, ranking, sampling.
+operators/  DataFrame-level operators: the fused mapInPandas quality +
+            scrub stage, manifest resume, salting, as-of and bucketed
+            joins.
+sources/    page-table and WARC / CDX / robots.txt readers, catalog
+            adapter, deterministic fixture synthesis, the reference's
+            incident-record reader (parity tests only) and its platform
+            API collector.
 plans/      SparkSession builders with scale-tuned configs.
-streaming/  Structured Streaming wrapper over the same UDFs.
+streaming/  Structured Streaming scrub plus exact and near-dup dedup.
 """
 
 __version__ = "0.1.0"

@@ -422,11 +422,19 @@ def embedding_near_dup_pairs(
 def _verify_pairs_arrow(pairs_vecs: DataFrame, dim: int) -> DataFrame:
     """(id_a, id_b, ea, eb) -> (id_a, id_b, _cos_raw double) with the
     UNROUNDED fold-order cosine; null where either vector is null or has
-    zero norm (see caller). Fast path: reshape each Arrow list column's
-    flattened value buffer to (n, dim) — no per-row allocation; batches
-    containing null vectors fall back to the per-row path (flatten()
-    drops null slots, which would misalign the reshape)."""
+    zero norm (see caller). The id columns pass through with their input
+    types. Fast path: reshape each Arrow list column's flattened value
+    buffer to (n, dim) — no per-row allocation — taken only when every
+    row holds exactly ``dim`` values; batches containing null vectors
+    fall back to the per-row path (flatten() drops null slots, which
+    would misalign the reshape). A non-null vector whose length is not
+    ``dim`` raises ValueError."""
     import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    def uniform(col) -> bool:
+        return col.null_count == 0 and bool(
+            (np.diff(np.asarray(col.offsets)) == dim).all())
 
     def verify(batches):
         for batch in batches:
@@ -434,9 +442,7 @@ def _verify_pairs_arrow(pairs_vecs: DataFrame, dim: int) -> DataFrame:
             if n == 0:
                 continue
             ea, eb = batch.column("ea"), batch.column("eb")
-            if ea.null_count == 0 and eb.null_count == 0 \
-                    and len(ea.flatten()) == n * dim \
-                    and len(eb.flatten()) == n * dim:
+            if uniform(ea) and uniform(eb):
                 A = np.asarray(ea.flatten()).astype(np.float64) \
                     .reshape(n, dim)
                 B = np.asarray(eb.flatten()).astype(np.float64) \
@@ -451,6 +457,10 @@ def _verify_pairs_arrow(pairs_vecs: DataFrame, dim: int) -> DataFrame:
                 def row(v):
                     if v is None:
                         return zero
+                    if len(v) != dim:
+                        raise ValueError(
+                            f"embedding of length {len(v)} in a dim-{dim} "
+                            "column")
                     return np.asarray(
                         [np.nan if x is None else x for x in v],
                         dtype=np.float64)
@@ -479,8 +489,9 @@ def _verify_pairs_arrow(pairs_vecs: DataFrame, dim: int) -> DataFrame:
                  pa.array(out, type=pa.float64(), from_pandas=True)],
                 ["id_a", "id_b", "_cos_raw"])
 
-    return pairs_vecs.mapInArrow(
-        verify, "id_a long, id_b long, _cos_raw double")
+    schema = StructType([pairs_vecs.schema["id_a"], pairs_vecs.schema["id_b"],
+                         StructField("_cos_raw", DoubleType())])
+    return pairs_vecs.mapInArrow(verify, schema)
 
 
 def embedding_norms(df: DataFrame, id_col: str = "vec_id",

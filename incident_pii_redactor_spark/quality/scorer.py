@@ -8,7 +8,7 @@ One config dataclass holds every threshold (SURVEY.md §7 step 2); presets:
   both keep and drop branches.
 
 ``quality_signals`` is the single batch entry point used by the Spark
-operator (`operators/quality_filter.py`) and the test oracle alike.
+operator (`operators/scrub.py`) and the test oracle alike.
 """
 
 from __future__ import annotations

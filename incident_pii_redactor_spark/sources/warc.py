@@ -3,12 +3,11 @@
 The engine's authoritative input is a table of pages
 ``(url, warc_ts, html, text, lang)`` — but a real Common-Crawl pass
 starts one step earlier, at the crawl's WARC files (reference scope
-analogue: the JSONL/platform collectors in ``sources/incidents.py`` /
-``sources/collector.py`` are the reference's ingestion edge; WARC is
-the web corpus's). This module closes that gap with a distributed
-reader that lands exactly the ``pages`` shape, so everything
-downstream (``--from-html`` extraction, quality_scrub, dedup) is
-unchanged.
+analogue: the JSONL incident reader in ``sources/incidents.py`` is the
+reference's ingestion edge; WARC is the web corpus's). This module
+closes that gap with a distributed reader that lands exactly the
+``pages`` shape, so everything downstream (``--from-html`` extraction,
+quality_scrub, dedup) is unchanged.
 
 Scale model — why per-FILE parallelism is the right unit:
 a Common-Crawl snapshot ships ~72k WARC files of ~1 GB each. A WARC
@@ -26,9 +25,8 @@ task (~1 GB for CC). Parsing walks that buffer one gzip member /
 record at a time and yields output in bounded pandas batches, so the
 additional working set is one decompressed record, not the
 decompressed file. Records whose payload exceeds ``max_record_bytes``
-(default 64 MB, same philosophy as the bounded PNG inflate in
-``functions/multimodal.py``) are skipped, not inflated — a crafted
-multi-GB record cannot OOM an executor.
+(default 64 MB) are skipped, not inflated — a crafted multi-GB
+record cannot OOM an executor.
 """
 
 from __future__ import annotations
@@ -83,8 +81,7 @@ def _stream_records(fh, max_record_bytes: int
     block (lines to the first blank line), ``Content-Length`` payload
     bytes, CRLF CRLF separator, repeat. Memory is bounded by ONE
     record's payload; oversized payloads are discarded in 1 MB chunks
-    without ever materializing (the zip-bomb guard — same philosophy as
-    the bounded PNG inflate in ``functions/multimodal.py``)."""
+    without ever materializing (the zip-bomb guard)."""
     while True:
         # sync to the next record's version line
         line = fh.readline()

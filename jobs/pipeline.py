@@ -28,7 +28,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
-import os
 
 from incident_pii_redactor_spark.plans import build_session
 

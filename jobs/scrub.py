@@ -36,7 +36,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
-import sys
 
 from pyspark.sql import functions as F
 

@@ -1,6 +1,8 @@
 """Scale-machinery tests: bucketed exchange-free joins, salted holistic
-aggregation correctness, streaming checkpoint recovery."""
+aggregation correctness, streaming checkpoint recovery, exchange-free
+near-dup and range joins."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -142,7 +144,30 @@ def test_embedding_near_dup_lsh_equals_exact(spark):
         .filter(F.col("cos_sim") >= 0.30)
         .orderBy("id_a", "id_b")
     )
-    assert [tuple(r) for r in lsh.collect()] == [tuple(r) for r in exact.collect()]
+    want = [tuple(r) for r in exact.collect()]
+    assert [tuple(r) for r in lsh.collect()] == want
+
+    # string ids pass through the Arrow verify with their own type
+    # (zero-padded so id_a < id_b keeps the numeric pairing)
+    s = e.withColumn("vec_id", F.format_string("v%06d", "vec_id"))
+    got = embedding_near_dup_pairs(s, threshold=0.30).orderBy("id_a", "id_b")
+    assert dict(got.dtypes)["id_a"] == "string"
+    assert [tuple(r) for r in got.collect()] == [
+        (f"v{a:06d}", f"v{b:06d}", c) for a, b, c in want]
+
+    # ragged rows whose lengths sum to n*dim (3 + 5 = 2*4) in one batch
+    # must fail loudly, never reshape misaligned
+    from incident_pii_redactor_spark.functions.similarity import (
+        _verify_pairs_arrow,
+    )
+
+    ragged = spark.createDataFrame(
+        [(1, 2, [1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0]),
+         (3, 4, [1.0, 2.0, 3.0, 4.0, 5.0], [1.0, 2.0, 3.0, 4.0])],
+        "id_a long, id_b long, ea array<float>, eb array<float>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="embedding of length 3 in a dim-4"):
+        _verify_pairs_arrow(ragged, 4).collect()
 
 
 def test_asof_join_semantics(spark):

@@ -1,7 +1,6 @@
-"""Custom stateful/grouped operators: streaming exact dedup
-(applyInPandasWithState) and host boilerplate strip (applyInPandas)."""
+"""Cross-document state: streaming exact and canonical-URL dedup
+(applyInPandasWithState) and pseudonym consistency across documents."""
 
-from incident_pii_redactor_spark.operators.boilerplate import host_boilerplate_strip
 from incident_pii_redactor_spark.streaming.dedup_stream import streaming_exact_dedup
 from incident_pii_redactor_spark.streaming.scrub_stream import read_pages_stream
 
@@ -46,64 +45,25 @@ def test_streaming_exact_dedup(spark, tmp_path):
     assert set(got) == {"https://a/1", "https://a/3", "https://a/5"}
 
 
-def test_host_boilerplate_strip(spark):
-    footer = "subscribe to our newsletter | cookie policy"
-    rows = []
-    for i in range(10):
-        rows.append((f"https://big.example.com/p{i}",
-                     f"unique content number {i}\n{footer}"))
-    rows.append(("https://small.example.com/p0", f"tiny site\n{footer}"))
-    df = spark.createDataFrame(rows, "url string, text string")
-    out = {r.url: r for r in host_boilerplate_strip(df, min_pages=5).collect()}
+def test_pseudonym_consistency_cross_doc():
+    """A10 cross-doc variant: the same (entity_type, matched_text) must map
+    to exactly one replacement across ALL documents — pseudonyms are
+    md5-derived in ``core``, never per-document state."""
+    from incident_pii_redactor_spark.core.pipeline import scrub_document
 
-    big = out["https://big.example.com/p3"]
-    assert footer not in big.text_clean
-    assert "unique content number 3" in big.text_clean
-    assert big.n_lines_removed == 1
-    # small host: insufficient evidence -> untouched
-    small = out["https://small.example.com/p0"]
-    assert footer in small.text_clean and small.n_lines_removed == 0
-
-
-def test_scrub_spans_table(spark):
-    from incident_pii_redactor_spark.operators.spans_table import scrub_spans
-
-    df = spark.createDataFrame(
-        [("u1", "Mail alice.j@corp1.com or call +1-555-123-4567. "
-                "Also see support@example.com.")],
-        "url string, text string")
-    spans = scrub_spans(df).collect()
-    by_type = {s.entity_type: s for s in spans}
-    assert by_type["email"].action == "REDACT"
-    assert by_type["email"].matched_text == "alice.j@corp1.com"
-    assert by_type["phone"].replacement == "[REDACTED_PHONE]"
-    assert "Mail" in by_type["email"].context
-    # offsets point into the original text
-    for s in spans:
-        assert df.collect()[0].text[s.start:s.end] == s.matched_text
-
-
-def test_pseudonym_consistency_cross_doc(spark):
-    """A10 cross-doc variant: same (entity_type, matched_text) must map to
-    exactly one replacement across ALL documents — groupBy + countDistinct
-    over the spans table."""
-    from pyspark.sql import functions as F
-
-    from incident_pii_redactor_spark.operators.spans_table import scrub_spans
-
-    df = spark.createDataFrame(
-        [("u1", "John Smith logged in from 10.0.0.7 yesterday."),
-         ("u2", "Later John Smith connected again via 10.0.0.7 and left."),
-         ("u3", "An unrelated Mary Jones used 10.9.9.9 all day today.")],
-        "url string, text string")
-    bad = (
-        scrub_spans(df)
-        .filter(F.col("action") != "RETAIN")
-        .groupBy("entity_type", "matched_text")
-        .agg(F.countDistinct("replacement").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    assert bad.count() == 0
+    docs = [
+        "John Smith logged in from 10.0.0.7 yesterday.",
+        "Later John Smith connected again via 10.0.0.7 and left.",
+        "An unrelated Mary Jones used 10.9.9.9 all day today.",
+    ]
+    seen: dict[tuple[str, str], set[str]] = {}
+    for text in docs:
+        for s in scrub_document(text).spans:
+            if s.action != "RETAIN":
+                seen.setdefault((s.entity_type, s.text), set()).add(
+                    s.replacement)
+    assert ("person_name", "John Smith") in seen
+    assert {k: v for k, v in seen.items() if len(v) > 1} == {}
 
 
 def test_streaming_canonical_url_dedup(spark, tmp_path):
