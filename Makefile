@@ -1,4 +1,4 @@
-.PHONY: test correctness bench scaling package submit-smoke clean
+.PHONY: test correctness bench scaling loc package submit-smoke clean
 
 test:
 	python -m pytest tests/ -x -q
@@ -11,6 +11,10 @@ bench:
 
 scaling:
 	python tools/bench_scaling.py --passes 2 --rows 100000
+
+# package size in lines, the figure CHANGES.md and ROADMAP.md track
+loc:
+	@find incident_pii_redactor_spark -name '*.py' | xargs cat | wc -l
 
 # spark-submit --py-files artifact (north rule packaging requirement)
 package:

@@ -1,6 +1,6 @@
 """Data-selection tour (round-3 second wave): canonical-URL dedup,
-hashed linear classifier, NB distillation, DSIR weights, PQ + ADC
-search, and deterministic shard layout — all runnable offline.
+hashed linear classifier, NB distillation, DSIR weights, PQ codes,
+BPE training and deterministic shard layout — all runnable offline.
 
     python examples/data_selection_tour.py
 """
@@ -67,14 +67,11 @@ def main() -> None:
     corpus = labeled.withColumnRenamed("label", "tgt")
     dsir_weights(corpus, F.col("tgt")).orderBy("doc_id").show()
 
-    print("== PQ codes + ADC top-k with exact rerank ==")
-    from incident_pii_redactor_spark.functions.similarity import (
-        pq_ann_topk, pq_codes)
+    print("== PQ codes ==")
+    from incident_pii_redactor_spark.functions.similarity import pq_codes
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     pq_codes(emb, m=16).orderBy("vec_id").show(3, truncate=False)
-    qv = emb.filter(F.col("vec_id") == 0).head()["embedding"]
-    pq_ann_topk(emb.filter(F.col("vec_id") != 0), list(qv), k=5).show()
 
     print("== HTML -> text extraction (pure Catalyst) ==")
     from incident_pii_redactor_spark.functions.html import extract_text
@@ -92,17 +89,13 @@ def main() -> None:
     sd.groupBy("keep").count().show()
 
     print("== BPE tokenizer training on the corpus ==")
-    from incident_pii_redactor_spark.functions.bpe import (
-        bpe_encode_udf, train_bpe)
+    from incident_pii_redactor_spark.functions.bpe import train_bpe
 
     corpus = spark.createDataFrame(
         [(1, "low low low lower lower newest newest widest")],
         "doc_id long, text string")
     merges = train_bpe(corpus, n_merges=6)
     print("merges:", [(a, b) for a, b, _ in merges])
-    enc = bpe_encode_udf([(a, b) for a, b, _ in merges])
-    corpus.select(enc(F.col("text")).alias("e")).select(
-        "e.tokens").show(truncate=False)
 
     print("== deterministic training-shard layout ==")
     from incident_pii_redactor_spark.functions.sampling import shard_assignment

@@ -18,8 +18,8 @@ from incident_pii_redactor_spark.core import scrub_document
 from incident_pii_redactor_spark.core.arbitration import judge_spans
 from incident_pii_redactor_spark.functions.dedup import winnow_fingerprints
 from incident_pii_redactor_spark.functions.sampling import (
-    deterministic_sample,
-    stratified_deterministic_sample,
+    sample_hash,
+    sample_threshold,
 )
 from incident_pii_redactor_spark.functions.similarity import (
     embedding_near_dup_pairs,
@@ -49,14 +49,9 @@ def main() -> None:
     ).show(truncate=60)
 
     print("== deterministic sampling (stable across partitionings) ==")
-    big = spark.range(1000).select(F.col("id").alias("doc_id"),
-                                   F.when(F.col("id") % 2 == 0, "en")
-                                   .otherwise("de").alias("lang"))
+    big = spark.range(1000).select(F.col("id").alias("doc_id"))
     print("10% sample size:",
-          deterministic_sample(big, 0.10, "doc_id").count())
-    stratified_deterministic_sample(
-        big, {"en": 1.0, "de": 0.2}, "lang", "doc_id"
-    ).groupBy("lang").count().show()
+          big.filter(sample_hash("doc_id") < sample_threshold(0.10)).count())
 
     print("== winnowing fingerprints (shift-robust) ==")
     docs.select("doc_id", winnow_fingerprints("text").alias("fps")).show(

@@ -1,6 +1,5 @@
-"""Round-3 features tour: CCNet-style paragraph-level dedup, the batch
-judge client, and the API collector — each runnable without network or
-external data.
+"""Round-3 features tour: CCNet-style paragraph-level dedup, runnable
+without network or external data.
 
     python examples/round3_features.py
 """
@@ -34,35 +33,6 @@ def main() -> None:
     from incident_pii_redactor_spark.functions.dedup import paragraph_dedup
 
     paragraph_dedup(docs).orderBy("doc_id").show(truncate=60)
-
-    print("== batch judge client behind the judge seam ==")
-    from incident_pii_redactor_spark.core.judge_client import (
-        BatchJudgeClient,
-        simulation_transport,
-    )
-    from incident_pii_redactor_spark.core.pipeline import scrub_document
-
-    client = BatchJudgeClient(transport=simulation_transport,
-                              sleep=lambda s: None)
-    out = scrub_document(
-        "Reach Alice Johnson at alice.johnson@corpmail.com", judge_fn=client)
-    print(out.text_scrubbed, "|", client.stats)
-
-    print("== API collector with injected transport ==")
-    from incident_pii_redactor_spark.sources.collector import (
-        IncidentCollector,
-    )
-
-    def fake_api(endpoint, params):
-        if endpoint == "incidents":
-            return {"data": [{"id": f"inc-{params['page']}",
-                              "title": "Demo outage",
-                              "description": "mail ops@corpmail.com"}],
-                    "meta": {"pagination": {"pages": 2}}}
-        return {"data": []}
-
-    c = IncidentCollector(fake_api, sleep=lambda s: None)
-    print([r["id"] for r in c.collect_incidents()], c.stats)
 
     spark.stop()
 

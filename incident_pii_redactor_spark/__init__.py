@@ -18,14 +18,13 @@ quality/    langid, perplexity, heuristic keep/drop rules, classifier
 functions/  Spark Column-level helpers (JVM-side expressions): text
             stats, HTML extraction, dedup (exact / MinHash-LSH /
             SimHash), similarity and ANN, Bloom filters, connected
-            components / PageRank, BPE, ranking, sampling.
+            components, BPE training, ranking, sampling.
 operators/  DataFrame-level operators: the fused mapInPandas quality +
-            scrub stage, manifest resume, salting, as-of and bucketed
+            scrub stage, manifest resume, salting, as-of and range
             joins.
 sources/    page-table and WARC / CDX / robots.txt readers, catalog
-            adapter, deterministic fixture synthesis, the reference's
-            incident-record reader (parity tests only) and its platform
-            API collector.
+            adapter, deterministic fixture synthesis and the reference's
+            incident-record reader (parity tests only).
 plans/      SparkSession builders with scale-tuned configs.
 streaming/  Structured Streaming scrub plus exact and near-dup dedup.
 """

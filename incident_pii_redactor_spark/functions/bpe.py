@@ -27,9 +27,6 @@ same word counts.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,8 +36,8 @@ END = "</w>"  # word-end marker, standard BPE
 
 
 def _segment(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Apply merges in rank order to one word (shared by training,
-    encoding, and the fixture replay)."""
+    """Apply merges in rank order to one word (shared by training and
+    the fixture replay)."""
     syms = list(word) + [END]
     for a, b in merges:
         out = []
@@ -106,31 +103,3 @@ def train_bpe(
             f"train_bpe: > {max_vocab_rows} distinct words; apply a "
             f"frequency floor first (filter n >= k on word_count_table)")
     return train_bpe_from_counts(rows, n_merges)
-
-
-def bpe_encode_udf(merges: list[tuple[str, str]]):
-    """text -> (tokens array<string>, n_tokens) under a trained merge
-    list; Arrow-batched, merges travel in the closure."""
-    from pyspark.sql.functions import pandas_udf
-
-    ms = list(merges)
-
-    # ASCII \s+ split — str.split() treats U+00A0 etc. as separators
-    # while training's words()/Java/RE2 \s does not (review round 3);
-    # encode must tokenize exactly like training
-    _ws = re.compile(r"\s+", re.ASCII)
-
-    @pandas_udf("struct<tokens: array<string>, n_tokens: long>")
-    def enc(text: pd.Series) -> pd.DataFrame:
-        toks_col, n_col = [], []
-        for t in text:
-            toks: list[str] = []
-            for w in _ws.split((t or "").lower()):
-                if not w:
-                    continue
-                toks.extend(_segment(w, ms))
-            toks_col.append(toks)
-            n_col.append(len(toks))
-        return pd.DataFrame({"tokens": toks_col, "n_tokens": n_col})
-
-    return enc

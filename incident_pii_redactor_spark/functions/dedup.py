@@ -53,14 +53,6 @@ def exact_dedup_stats(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Keep exactly one doc (min id) per identical text."""
-    w = df.select(id_col, content_hash(text_col).alias("h"))
-    keepers = w.groupBy("h").agg(F.min(id_col).alias(id_col))
-    return df.join(keepers, on=id_col, how="left_semi")
-
-
 # --- MinHash ---------------------------------------------------------------
 
 def word_shingles(text_col: str, n: int = 3) -> Column:

@@ -225,75 +225,6 @@ def connected_components_star(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """(node, rank) after ``n_iter`` power iterations of PageRank
-    (Brin & Page 1998) over a directed edge list — the host-authority
-    signal web pipelines derive from the outlink graph (see
-    ``functions/html.py:count_links`` for the extraction side).
-
-    Scale shape: each iteration is one equi-join (rank -> out-edges) +
-    one key-partitioned sum — the same bounded-round pattern as
-    ``connected_components``, with per-round ``localCheckpoint`` lineage
-    truncation. Dangling-node mass (pages with no outlinks) is
-    redistributed uniformly via a 1-row broadcast cross join, never a
-    driver action, so the whole computation stays one lazy DAG per
-    round. Duplicate edges are weighted (a page linking twice
-    contributes twice), matching the multigraph convention; self-loops
-    count as ordinary out-edges. Fixed iteration count (no float
-    convergence compare) keeps the result deterministic up to float
-    summation order."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
-             .localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # materialize once: every iteration joins against outdeg, and the
-    # per-round eager checkpoints would otherwise re-run this full-edge
-    # aggregation n_iter times (review round 4)
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg")) \
-              .localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(n_iter):
-        with_deg = ranks.join(
-            outdeg.withColumnRenamed("src", "node"), "node", "left")
-        # mass leaving via links; dangling nodes (deg NULL) emit nothing
-        contrib = (
-            with_deg.join(e, with_deg["node"] == e["src"])
-            .select(F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node").agg(F.sum("c").alias("in_mass"))
-        )
-        dangling = (
-            with_deg.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d_mass"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .join(F.broadcast(dangling))  # 1-row scalar, no action
-            .select(
-                "node",
-                (F.lit((1.0 - damping) / n)
-                 + F.lit(damping)
-                 * (F.coalesce("in_mass", F.lit(0.0))
-                    + F.col("d_mass") / n)).alias("rank"),
-            )
-            .localCheckpoint(eager=True)  # truncate iterative lineage
-        )
-    return ranks
-
-
 def cluster_keepers(edges: DataFrame, src: str = "id_a",
                     dst: str = "id_b", max_iter: int = 20,
                     algorithm: str = "auto") -> DataFrame:

@@ -42,30 +42,6 @@ def sample_hash(key: str | Column, seed: int = 42) -> Column:
     return md5_int(F.concat(c.cast("string"), F.lit(str(seed))), _BUCKETS)
 
 
-def deterministic_sample(
-    df: DataFrame, fraction: float, key_col: str, seed: int = 42
-) -> DataFrame:
-    """Keep each row iff its hash bucket < fraction * 1e6 — an exact-rate
-    Bernoulli sample that is a pure function of (key, seed)."""
-    return df.filter(sample_hash(key_col, seed) < sample_threshold(fraction))
-
-
-def stratified_deterministic_sample(
-    df: DataFrame, fractions: dict, strata_col: str, key_col: str,
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum fractions (e.g. downsample 'en' to 10%, keep 'mi' at
-    100%) with the same hash-stability guarantees. Unknown strata are
-    dropped, mirroring ``DataFrameStatFunctions.sampleBy`` semantics."""
-    bucket = sample_hash(key_col, seed)
-    cond = F.lit(False)
-    for stratum, frac in sorted(fractions.items()):
-        cond = cond | (
-            (F.col(strata_col) == stratum) & (bucket < sample_threshold(frac))
-        )
-    return df.filter(cond)
-
-
 def shard_assignment(
     df: DataFrame,
     n_shards: int,

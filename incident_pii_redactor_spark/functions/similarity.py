@@ -48,49 +48,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d != 0, dot(a, b) / d)
 
 
-def cosine_pairs_udf(dim: int):
-    """Arrow-batched pairwise cosine, BIT-IDENTICAL to the Column-fold
-    ``cosine()``: accumulates column-at-a-time in float64, so every pair
-    sees the exact IEEE op order of the sequential fold (dot then norms
-    then sqrt/mul/div) while numpy vectorizes ACROSS pairs. The fold
-    version allocates per-pair arrays inside zip_with/aggregate — ~35x
-    slower on pairwise workloads (measured 68 s -> ~2 s on 2M pairs at
-    bench sf0.1). Null input OR zero-norm vector -> null, matching the
-    Column version's guarded NULL (NaN in a float64 pandas Series is
-    coerced to null by the Arrow serializer — that coercion is the
-    mechanism, there is no separate null mask)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        n = len(ea)
-        null = np.fromiter(
-            ((x is None) or (y is None) for x, y in zip(ea, eb)),
-            dtype=bool, count=n,
-        )
-        zero = np.zeros(dim, dtype=np.float64)
-        A = np.stack([zero if m else np.asarray(v, dtype=np.float64)
-                      for v, m in zip(ea, null)])
-        B = np.stack([zero if m else np.asarray(v, dtype=np.float64)
-                      for v, m in zip(eb, null)])
-        d = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for i in range(dim):  # sequential per pair = the fold's op order
-            x, y = A[:, i], B[:, i]
-            d = d + x * y
-            na = na + x * x
-            nb = nb + y * y
-        denom = np.sqrt(na) * np.sqrt(nb)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(denom != 0, d / np.where(denom == 0, 1.0, denom),
-                           np.nan)
-        out[null] = np.nan  # NaN -> null at the Arrow boundary
-        return pd.Series(out)
-
-    return cos
-
-
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -494,12 +451,6 @@ def _verify_pairs_arrow(pairs_vecs: DataFrame, dim: int) -> DataFrame:
     return pairs_vecs.mapInArrow(verify, schema)
 
 
-def embedding_norms(df: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """L2 norm per vector — JVM-side. DuckDB twin: sqrt(list_sum(...))."""
-    return df.select(F.col(id_col), F.round(norm(F.col(vec_col)), 6).alias("l2_norm"))
-
-
 # --- product quantization (IVF's companion: vector compression) -------------
 
 def train_pq_codebooks(
@@ -628,73 +579,6 @@ def pq_codes(
             F.array_join(F.col("_e.codes"), "|").alias("code"),
             F.round(F.col("_e.recon_err"), 6).alias("recon_err"),
         )
-    )
-
-
-def pq_ann_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 16,
-    ksub: int = 16,
-    seed: int = 42,
-    rerank: int = 10,
-) -> DataFrame:
-    """ADC (asymmetric distance computation) shortlist + exact rerank —
-    the query-side half of IVF-PQ. The query builds one tiny
-    per-subspace lookup table ``lut[j][c] = ||q_j - centroid_c||^2``
-    driver-side; every stored vector is scored by summing m table
-    lookups over its CODES — the shortlist scan never touches the
-    embedding column (m bytes/row instead of 4*dim; the LUT rides the
-    plan as array literals, pure Catalyst element_at + sum). The
-    ``k * rerank`` ADC-nearest candidates are then reranked by EXACT L2
-    over their real embeddings — the standard two-stage shape (PQ is a
-    candidate generator; iid-random corpora like the test tables are
-    its adversarial worst case, which reranking absorbs).
-
-    Returns (id, l2_dist round-6) ascending, exact over the shortlist.
-    In production the codes table is precomputed (``pq_codes``) and
-    stage 1 scans ONLY (id, codes); training is in-line here for
-    self-containment."""
-    if rerank < 1:
-        raise ValueError(f"rerank must be >= 1, got {rerank}")
-    books = train_pq_codebooks(df, vec_col, m, ksub, seed, id_col=id_col)
-    dsub = books[0].shape[1]
-    q = np.asarray(query_vec, dtype=np.float64)
-    if len(q) != m * dsub:
-        raise ValueError(f"query dim {len(q)} != {m * dsub}")
-    luts = []
-    for j in range(m):
-        qj = q[j * dsub:(j + 1) * dsub]
-        luts.append(((books[j] - qj[None, :]) ** 2).sum(axis=1))
-
-    enc = pq_encode_udf(books)
-    coded = df.withColumn("_codes", enc(F.col(vec_col)).getField("codes"))
-    adc = None
-    for j in range(m):
-        lut = F.array(*[F.lit(float(v)) for v in luts[j]])
-        term = F.element_at(lut, F.col("_codes")[j] + 1)
-        adc = term if adc is None else adc + term
-    shortlist = (
-        coded.select(F.col(id_col), adc.alias("_adc"))
-        .orderBy(F.asc("_adc"), F.asc(id_col))
-        .limit(k * rerank)
-    )
-    # exact L2 on the tiny shortlist only (broadcast semi-join back to
-    # the embeddings; k*rerank rows)
-    qcol = F.array(*[F.lit(float(v)) for v in q])
-    diff2 = F.aggregate(
-        F.zip_with(F.col(vec_col), qcol, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        df.join(F.broadcast(shortlist.select(id_col)), id_col)
-        .select(F.col(id_col), F.round(F.sqrt(diff2), 6).alias("l2_dist"))
-        .orderBy(F.asc("l2_dist"), F.asc(id_col))
-        .limit(k)
     )
 
 
@@ -841,7 +725,7 @@ def semdedup(
     same cluster is cosine-similar above ``threshold`` (one-step
     min-id-wins, the dedup job's standard policy). Bit-deterministic
     end-to-end: kmeans_fit is deterministic and the pairwise cosine is
-    the fold-order ``cosine_pairs_udf``."""
+    the fold-order ``_verify_pairs_arrow``."""
     cents = kmeans_fit(df, k=k, n_iter=n_iter, vec_col=vec_col,
                        id_col=id_col, seed=seed)
     assigned = kmeans_assign(df, cents, vec_col=vec_col, id_col=id_col) \

@@ -37,35 +37,3 @@ def salted_repartition(
     return df.repartition(
         num_partitions, F.col(key_col), salted_key(F.col(key_col), n_salts, seed)
     )
-
-
-def url_host(url: Column) -> Column:
-    """Extract the host from a url, JVM-side (no UDF)."""
-    return F.parse_url(url, F.lit("HOST"))
-
-
-def salted_host_agg(
-    df: DataFrame,
-    url_col: str,
-    aggs: list,
-    n_salts: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Two-phase (salted partial -> final) aggregation per host.
-
-    For algebraic aggregates Spark already does map-side partial
-    aggregation; this helper exists for the *holistic* cases (e.g.
-    collect_set-flavored metrics) where an explicit salted pre-aggregation
-    is the difference between one straggler task and an even stage. ``aggs``
-    are (colname, "sum"|"count"|"max"|"min") pairs applied at both phases.
-    """
-    host = url_host(F.col(url_col)).alias("host")
-    salt = salted_key(F.col(url_col), n_salts, seed).alias("_salt")
-    fn = {"sum": F.sum, "count": F.count, "max": F.max, "min": F.min}
-    partial = df.groupBy(host, salt).agg(
-        *[fn[how](c).alias(c) for c, how in aggs]
-    )
-    refn = {"count": F.sum}  # counts re-combine by summing
-    return partial.groupBy("host").agg(
-        *[refn.get(how, fn[how])(c).alias(c) for c, how in aggs]
-    )

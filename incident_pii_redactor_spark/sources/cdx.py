@@ -33,10 +33,6 @@ CDXJ_JSON_SCHEMA = ("url string, digest string, mime string, "
                     "status string, filename string, offset string, "
                     "length string")
 
-CDX_SCHEMA = ("url string, warc_ts timestamp, digest string, "
-              "mime string, status int, warc_file string, "
-              "warc_offset bigint, warc_length bigint")
-
 
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     """CDXJ text shards -> typed capture table. Lines that don't parse

@@ -95,7 +95,14 @@ def parse_args(argv=None):
                         "loss should be an explicit operator decision")
     p.add_argument("--fail-after-groups", type=int, default=0,
                    help="TESTING ONLY: exit(1) after N completed groups")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    # zero buckets would run zero groups and report success with nothing
+    # written; a zero group size would crash in range()
+    for opt, v in (("--n-buckets", args.n_buckets),
+                   ("--bucket-group-size", args.bucket_group_size)):
+        if v < 1:
+            p.error(f"{opt} must be >= 1, got {v}")
+    return args
 
 
 def run(args, spark=None) -> dict:

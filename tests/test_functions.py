@@ -20,17 +20,11 @@ def docs(spark):
 
 
 def test_exact_dedup(spark, docs):
-    from incident_pii_redactor_spark.functions.dedup import (
-        exact_dedup,
-        exact_dedup_stats,
-    )
+    from incident_pii_redactor_spark.functions.dedup import exact_dedup_stats
 
     stats = exact_dedup_stats(docs).collect()
     assert len(stats) == 1
     assert stats[0].n_dups == 2 and stats[0].keeper_id == 1
-    kept = exact_dedup(docs)
-    assert kept.count() == 4
-    assert kept.filter("doc_id = 2").count() == 0
 
 
 def test_minhash_near_dup_pair(spark, docs):
@@ -243,23 +237,25 @@ def test_anonymize_containment_prefix_casing(spark):
 
 def test_cosine_zero_norm_is_null_both_paths(spark):
     """Zero-norm embeddings: Column cosine() must yield NULL (not an ANSI
-    divide-by-zero abort) and cosine_pairs_udf must agree."""
+    divide-by-zero abort) and the Arrow verify path that
+    embedding_near_dup_pairs and semdedup run must agree."""
     from pyspark.sql import functions as F
 
     from incident_pii_redactor_spark.functions.similarity import (
+        _verify_pairs_arrow,
         cosine,
-        cosine_pairs_udf,
     )
 
     df = spark.createDataFrame(
-        [([0.0, 0.0], [1.0, 2.0]), ([1.0, 0.0], [0.0, 3.0])],
-        "a array<float>, b array<float>",
+        [(0, 1, [0.0, 0.0], [1.0, 2.0]), (2, 3, [1.0, 0.0], [0.0, 3.0])],
+        "id_a bigint, id_b bigint, ea array<float>, eb array<float>",
     )
-    col = df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()
-    udf = df.select(cosine_pairs_udf(2)(F.col("a"), F.col("b"))
-                    .alias("c")).collect()
-    assert col[0].c is None and udf[0].c is None  # zero-norm -> null
-    assert abs(col[1].c) < 1e-12 and abs(udf[1].c) < 1e-12  # orthogonal -> 0
+    col = {r.id_a: r.c for r in df.select(
+        "id_a", cosine(F.col("ea"), F.col("eb")).alias("c")).collect()}
+    arrow = {r.id_a: r._cos_raw
+             for r in _verify_pairs_arrow(df, 2).collect()}
+    assert col[0] is None and arrow[0] is None  # zero-norm -> null
+    assert abs(col[2]) < 1e-12 and abs(arrow[2]) < 1e-12  # orthogonal -> 0
 
 
 def test_winnow_fingerprints_shift_robust(spark):
@@ -287,27 +283,19 @@ def test_deterministic_sample_stability(spark):
     """Hash sampling is a pure function of (key, seed): invariant under
     repartitioning (df.sample is not), seed-sensitive, near-rate."""
     from incident_pii_redactor_spark.functions.sampling import (
-        deterministic_sample,
-        stratified_deterministic_sample,
+        sample_hash,
+        sample_threshold,
     )
 
-    df = spark.range(5000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 3 == 0, "en").otherwise("de").alias("lang"),
-    )
-    a = {r.doc_id for r in deterministic_sample(df, 0.2, "doc_id").collect()}
-    b = {r.doc_id for r in
-         deterministic_sample(df.repartition(17), 0.2, "doc_id").collect()}
+    def sample(df, seed=42):
+        keep = sample_hash("doc_id", seed) < sample_threshold(0.2)
+        return {r.doc_id for r in df.filter(keep).collect()}
+
+    df = spark.range(5000).select(F.col("id").alias("doc_id"))
+    a = sample(df)
+    b = sample(df.repartition(17))
     assert a == b and 0.17 < len(a) / 5000 < 0.23
-    c = {r.doc_id for r in
-         deterministic_sample(df, 0.2, "doc_id", seed=7).collect()}
-    assert c != a
-    s = stratified_deterministic_sample(
-        df, {"en": 1.0, "de": 0.1}, "lang", "doc_id"
-    ).groupBy("lang").count().collect()
-    got = {r.lang: r["count"] for r in s}
-    assert got["en"] == 1667  # full stratum kept
-    assert 230 < got["de"] < 440  # ~10% of 3333
+    assert sample(df, seed=7) != a
 
 
 def test_keyword_gate_unicode_case_variants():
@@ -326,14 +314,13 @@ def test_sample_fraction_rounding(spark):
     """Review regression: int() truncation lost a bucket for fractions
     like 0.29 (0.29*1e6 == 289999.99999999994)."""
     from incident_pii_redactor_spark.functions.sampling import (
-        _BUCKETS,
-        deterministic_sample,
         sample_hash,
+        sample_threshold,
     )
 
     df = spark.range(20000).select(F.col("id").alias("doc_id"))
-    got = {r.doc_id for r in
-           deterministic_sample(df, 0.29, "doc_id").collect()}
+    got = {r.doc_id for r in df.filter(
+        sample_hash("doc_id") < sample_threshold(0.29)).collect()}
     by_bucket = {r.doc_id: r.b for r in df.select(
         "doc_id", sample_hash("doc_id").alias("b")).collect()}
     expected = {k for k, b in by_bucket.items() if b < 290000}
@@ -501,43 +488,3 @@ def test_connected_components_star_matches_union_find(spark):
     got = {r.node: r.comp
            for r in connected_components_star(edges).collect()}
     assert got == want
-
-
-def test_pagerank_matches_python_power_iteration(spark):
-    """pagerank equals a plain-python power iteration with the same
-    dangling-mass redistribution (to float tolerance — summation order
-    differs), conserves total mass, and ranks the authority hub highest
-    on a star-into-hub graph."""
-    import math
-
-    from incident_pii_redactor_spark.functions.graph import pagerank
-
-    #    1,2,3 -> 0 (hub);  0 -> 4;  4 dangles;  5 -> 5 self-loop;
-    #    duplicate edge 2 -> 0 counts twice in 2's out-degree
-    raw = [(1, 0), (2, 0), (2, 0), (3, 0), (0, 4), (5, 5)]
-    d, iters = 0.85, 10
-
-    nodes = sorted({v for ab in raw for v in ab})
-    n = len(nodes)
-    out = {}
-    for a, _ in raw:
-        out[a] = out.get(a, 0) + 1
-    rank = {v: 1.0 / n for v in nodes}
-    for _ in range(iters):
-        mass = {v: 0.0 for v in nodes}
-        for a, b in raw:
-            mass[b] += rank[a] / out[a]
-        dangle = sum(rank[v] for v in nodes if v not in out)
-        rank = {v: (1 - d) / n + d * (mass[v] + dangle / n)
-                for v in nodes}
-
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    got = {r.node: r.rank
-           for r in pagerank(edges, damping=d, n_iter=iters).collect()}
-    assert set(got) == set(rank)
-    for v in nodes:
-        assert math.isclose(got[v], rank[v], rel_tol=1e-9), (v, got[v], rank[v])
-    assert math.isclose(sum(got.values()), 1.0, rel_tol=1e-9)
-    # the link-receiving hub outranks its leaf linkers; the self-loop
-    # node hoards mass and tops everything (classic PageRank artifact)
-    assert got[0] > got[1] and got[5] == max(got.values())

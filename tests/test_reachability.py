@@ -1,20 +1,25 @@
-"""Every package module must be reachable from a program entry point.
+"""Every package module and top-level definition must be reachable from a
+program entry point.
 
 The entry points are the jobs (``jobs/``), the tools (``tools/``), the
-query registry (``__spark_entry__.py``) and ``bench.py``. A
-module only its own tests or ``examples/`` import is dead weight: this
-test walks the static import graph (``ast``, no Spark) from those seeds
-and names every package module it never reaches.
+benchmark (``perfbench/``), the query registry (``__spark_entry__.py``)
+and ``bench.py``. Code that only its own tests or ``examples/`` use is
+dead weight. These tests walk the code statically (``ast``, no Spark)
+from those seeds: first the import graph between modules, then the names
+each reached definition uses. They name every package module, and every
+top-level ``def``, ``class`` or assignment in a reached module, that the
+walk never reaches.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "incident_pii_redactor_spark"
-SEED_DIRS = ("jobs", "tools")
+SEED_DIRS = ("jobs", "tools", "perfbench")
 SEED_FILES = ("__spark_entry__.py", "bench.py")
 
 # sources.incidents is the reference's incident-record reader: no job
@@ -23,14 +28,25 @@ SEED_FILES = ("__spark_entry__.py", "bench.py")
 # reference's outputs.
 EXEMPT = {f"{PKG}.sources.incidents"}
 
-# Unreached modules kept with their own tests until a later change deletes
-# them (ROADMAP "Open items"). The list only shrinks: a new unreached
-# module still fails this test.
-PENDING_DELETION = {
-    f"{PKG}.core.judge_client",       # tests/test_judge_client.py
-    f"{PKG}.operators.bucketing",     # test_bucketed_join_has_no_exchange
-    f"{PKG}.sources.collector",       # tests/test_collector.py
+# Top-level definitions in reached modules that no entry point uses but
+# that stay, each for the reason given. They seed the definition walk.
+EXEMPT_DEFS = {
+    # synthetic page input for tests and `make submit-smoke`
+    f"{PKG}.sources.pages.write_pages_parquet",
+    # writes CDX test inputs
+    f"{PKG}.sources.cdx.write_cdxj",
+    # reference parity (COVERAGE.md A6)
+    f"{PKG}.core.validate.recommendations",
+    # reference parity (COVERAGE.md D8)
+    f"{PKG}.core.detectors.context_window",
 }
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
 
 
 def _package_modules() -> dict[str, str]:
@@ -44,13 +60,20 @@ def _package_modules() -> dict[str, str]:
     return mods
 
 
+def _seed_files() -> list[str]:
+    seeds = [os.path.join(REPO, f) for f in SEED_FILES]
+    for d in SEED_DIRS:
+        seeds += [os.path.join(REPO, d, f)
+                  for f in sorted(os.listdir(os.path.join(REPO, d)))
+                  if f.endswith(".py")]
+    return seeds
+
+
 def _imports(path: str, mods: dict[str, str]) -> set[str]:
     """Package modules a file imports, with every parent package (the
     interpreter runs each ``__init__`` on the way down)."""
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
     names = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom) and node.module:
@@ -65,24 +88,114 @@ def _imports(path: str, mods: dict[str, str]) -> set[str]:
     return out
 
 
-def test_every_package_module_is_reached():
-    mods = _package_modules()
-    seeds = [os.path.join(REPO, f) for f in SEED_FILES]
-    for d in SEED_DIRS:
-        seeds += [os.path.join(REPO, d, f)
-                  for f in sorted(os.listdir(os.path.join(REPO, d)))
-                  if f.endswith(".py")]
-    stack = [m for s in seeds for m in _imports(s, mods)]
+def _reached_modules(mods: dict[str, str]) -> set[str]:
+    stack = [m for s in _seed_files() for m in _imports(s, mods)]
     reached = set()
     while stack:
         m = stack.pop()
         if m not in reached:
             reached.add(m)
             stack.extend(_imports(mods[m], mods))
-    unreached = sorted(set(mods) - reached - EXEMPT - PENDING_DELETION)
+    return reached
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every name a piece of code may use: names, attributes, import
+    aliases and identifier-shaped string constants (``getattr`` keys,
+    registry tables)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+            if n.asname:
+                out.add(n.asname)
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and _IDENT.match(n.value)):
+            out.add(n.value)
+    return out
+
+
+def _definitions(tree: ast.Module) -> tuple[dict[str, list[ast.AST]],
+                                            list[ast.AST]]:
+    """A module's top-level definitions by name, and the rest of its
+    top-level statements (code that runs on import)."""
+    defs: dict[str, list[ast.AST]] = {}
+    rest = []
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            targets = [stmt.name]
+        elif isinstance(stmt, ast.Assign):
+            targets = [n.id for t in stmt.targets for n in ast.walk(t)
+                       if isinstance(n, ast.Name)]
+        elif isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target,
+                                                             ast.Name):
+            targets = [stmt.target.id]
+        else:
+            targets = []
+        targets = [t for t in targets
+                   if not (t.startswith("__") and t.endswith("__"))]
+        if targets:
+            for t in targets:
+                defs.setdefault(t, []).append(stmt)
+        else:
+            rest.append(stmt)
+    return defs, rest
+
+
+def test_every_package_module_is_reached():
+    mods = _package_modules()
+    reached = _reached_modules(mods)
+    unreached = sorted(set(mods) - reached - EXEMPT)
     assert not unreached, (
         f"package modules no job, tool, registry query or bench path "
         f"imports: {unreached}")
     assert EXEMPT <= set(mods), "exempt module no longer exists"
-    stale = sorted(PENDING_DELETION - (set(mods) - reached))
-    assert not stale, f"drop from PENDING_DELETION (deleted or now reached): {stale}"
+
+
+def test_every_top_level_definition_is_reached():
+    """A definition in a reached module is reached when a seed file, the
+    import-time code of a reached module or the body of a reached
+    definition names it. Names match across modules (a collision can only
+    keep a definition, never flag one)."""
+    mods = _package_modules()
+    reached_mods = _reached_modules(mods)
+    defs: dict[str, dict[str, list[ast.AST]]] = {}  # name -> module -> nodes
+    names = set()
+    for s in _seed_files():
+        names |= _names(_parse(s))
+    for m in sorted(reached_mods):
+        mod_defs, rest = _definitions(_parse(mods[m]))
+        for stmt in rest:
+            names |= _names(stmt)
+        for name, nodes in mod_defs.items():
+            defs.setdefault(name, {})[m] = nodes
+
+    def walk(names: set[str]) -> set[str]:
+        stack, seen = list(names), set()
+        while stack:
+            n = stack.pop()
+            if n in seen:
+                continue
+            seen.add(n)
+            for nodes in defs.get(n, {}).values():
+                for node in nodes:
+                    stack.extend(_names(node) - seen)
+        return seen
+
+    reached = walk(names)
+    exempt = {e.rpartition(".")[::2] for e in EXEMPT_DEFS}
+    stale = sorted(f"{m}.{n}" for m, n in exempt
+                   if m not in defs.get(n, {}) or n in reached)
+    assert not stale, (
+        f"drop from EXEMPT_DEFS (no longer defined or now reached): {stale}")
+    reached = walk(reached | {n for _, n in exempt})
+    unreached = sorted(f"{m}.{n}" for n, by_mod in defs.items()
+                       if n not in reached for m in by_mod)
+    assert not unreached, (
+        f"top-level definitions no job, tool, registry query or bench "
+        f"path uses: {unreached}")

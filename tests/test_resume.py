@@ -50,6 +50,14 @@ def test_interrupted_then_resumed_equals_cold(spark, pages_parquet,
     pd.testing.assert_frame_equal(warm, cold_run)
 
 
+@pytest.mark.parametrize("opt", ["--n-buckets", "--bucket-group-size"])
+def test_bucket_options_below_one_are_rejected(opt):
+    base = ["--input", "in", "--output", "out", "--manifest", "mf"]
+    for v in ("0", "-1"):
+        with pytest.raises(SystemExit):
+            parse_args(base + [opt, v])
+
+
 def test_rerun_when_complete_is_noop(spark, pages_parquet, tmp_path_factory):
     d = tmp_path_factory.mktemp("noop")
     base = ["--input", pages_parquet, "--output", str(d / "out"),

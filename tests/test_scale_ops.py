@@ -1,74 +1,8 @@
-"""Scale-machinery tests: bucketed exchange-free joins, salted holistic
-aggregation correctness, streaming checkpoint recovery, exchange-free
+"""Scale-machinery tests: streaming checkpoint recovery, exchange-free
 near-dup and range joins."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    from incident_pii_redactor_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    # uses the session's default warehouse (spark-warehouse/, gitignored);
-    # also clear stale dirs from interrupted runs (the in-memory catalog
-    # forgets tables across sessions but leaves their directories)
-    import shutil
-
-    for t in ("t_scores", "t_labels"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    a = spark.range(500).select(
-        F.concat(F.lit("https://h/"), F.col("id")).alias("url"),
-        (F.col("id") * 2).alias("score"),
-    )
-    b = spark.range(500).select(
-        F.concat(F.lit("https://h/"), F.col("id")).alias("url"),
-        (F.col("id") % 7).alias("label"),
-    )
-    write_bucketed(a, "t_scores", n_buckets=4)
-    write_bucketed(b, "t_labels", n_buckets=4)
-    # force a sort-merge join: at real scale neither side broadcasts, and
-    # SMJ-on-bucketed-tables is precisely the shuffle-free case to prove
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_scores", "t_labels")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan  # no shuffle: bucketed
-        assert "Bucketed: true" in plan
-        assert joined.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_salted_host_agg_matches_naive(spark):
-    from incident_pii_redactor_spark.operators.salting import salted_host_agg
-
-    df = spark.range(2000).select(
-        F.concat(
-            F.lit("https://host"), (F.col("id") % 3).cast("string"),
-            F.lit(".com/p"), F.col("id"),
-        ).alias("url"),
-        (F.col("id") % 11).cast("double").alias("v"),
-    )
-    salted = {
-        r.host: (r.v, r.n)
-        for r in salted_host_agg(
-            df.withColumn("n", F.lit(1)), "url",
-            [("v", "sum"), ("n", "count")], n_salts=8,
-        ).collect()
-    }
-    naive = {
-        r.host: (r.v, r.n)
-        for r in df.groupBy(
-            F.parse_url("url", F.lit("HOST")).alias("host")
-        ).agg(F.sum("v").alias("v"), F.count("*").alias("n")).collect()
-    }
-    assert salted == naive
 
 
 def test_streaming_checkpoint_recovery(spark, tmp_path_factory):

@@ -342,7 +342,7 @@ def make_semdedup_fixture(sf_dir: str, out_path: str, k: int = 8,
                           seed: int = 42) -> int:
     """Replay ``functions.similarity.semdedup``: kmeans assignment, then
     within-cluster pairwise fold-cosine (the column-sequential op order
-    of cosine_pairs_udf == fold_dot/fold_norm), spark_round6, min-id-
+    of _verify_pairs_arrow == fold_dot/fold_norm), spark_round6, min-id-
     wins keep."""
     ids, mat, rows = _load_embeddings(sf_dir)
     _, cl = _kmeans_replay(mat, k, n_iter, seed)
