@@ -8,39 +8,23 @@ run MUST restart where it stopped. Design (SURVEY.md §3.4, FIXTURES.md F4):
   ``pmod(xxhash64(url), n_buckets)`` — stable across runs, cluster sizes,
   and input re-partitioning (file order never matters);
 * the job processes buckets in groups, writing output partitioned by
-  bucket and appending one manifest row per completed bucket;
-* on restart, pending work = input anti-joined against the manifest's
-  completed buckets. The manifest is tiny (one row per bucket), so the
-  anti join is a **broadcast hash anti join** — zero shuffle of the
-  10^12-row side.
+  bucket and appending one manifest row per completed bucket, built from
+  the group's written partitions;
+* on restart, the driver collects the manifest's completed buckets (one
+  row per bucket, tiny) and runs only the groups of the rest. Each group
+  filters the input on its bucket ids, so no join against the manifest
+  touches the 10^12-row side.
+
+"Committed" means a ``_SUCCESS`` marker on the path's own filesystem
+(:func:`committed`): a manifest whose first append crashed holds only
+``_temporary/`` and counts as empty, while a committed manifest that
+fails to read raises instead of silently restarting from scratch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("input_fingerprint", StringType()),
-        StructField("rows_in", LongType()),
-        StructField("rows_kept", LongType()),
-        StructField("rows_dropped", LongType()),
-        StructField("redactions_by_type", MapType(StringType(), LongType())),
-        StructField("completed_ts", TimestampType()),
-    ]
-)
 
 BUCKET_COL = "_bucket"
 
@@ -52,36 +36,26 @@ def with_bucket(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
     )
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        # ONLY a missing path means "first run". Any other failure
-        # (corrupt footer, permissions, storage blip) must raise: treating
-        # it as first-run would silently re-append every completed bucket.
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-        raise
+def committed(spark: SparkSession, path: str) -> bool:
+    """True when ``path/_SUCCESS`` exists on the path's OWN filesystem
+    (Hadoop FS API — a driver-local ``os.path.exists`` always said
+    False for hdfs://, s3a:// paths, so every restart silently
+    recomputed; review round 5)."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(p))
 
 
-def completed_buckets(manifest: DataFrame, run_id: str | None = None) -> list[int]:
-    m = manifest
-    if run_id is not None:
-        m = m.filter(F.col("run_id") == run_id)
-    return sorted(r[0] for r in m.select("partition_id").distinct().collect())
-
-
-def pending(df_bucketed: DataFrame, manifest: DataFrame,
-            run_id: str | None = None) -> DataFrame:
-    """Anti-join input against completed buckets. The manifest side is one
-    row per bucket -> forced broadcast, so this never shuffles the input."""
-    m = manifest
-    if run_id is not None:
-        m = m.filter(F.col("run_id") == run_id)
-    done = m.select(F.col("partition_id").alias(BUCKET_COL)).distinct()
-    return df_bucketed.join(F.broadcast(done), on=BUCKET_COL, how="left_anti")
+def completed_buckets(spark: SparkSession, path: str, run_id: str) -> set[int]:
+    """Bucket ids the manifest at ``path`` records as done for ``run_id``.
+    An uncommitted manifest is empty and costs no Spark job; any failure
+    to read a committed one (corrupt footer, permissions, storage blip)
+    raises, because treating it as a first run would redo every bucket."""
+    if not committed(spark, path):
+        return set()
+    m = spark.read.parquet(path).filter(F.col("run_id") == run_id)
+    return {r[0] for r in m.select("partition_id").distinct().collect()}
 
 
 def manifest_rows_from_output(

@@ -48,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.functions.dedup import (
@@ -334,14 +335,16 @@ def run(args, spark=None) -> dict:
             hashed = df.withColumn("_h", content_hash("text"))
             null_text = hashed.filter(F.col("_h").isNull()).drop("_h")
             content = hashed.filter(F.col("_h").isNotNull())
-            keepers = (
-                content.groupBy("_h")
-                .agg(F.min("url").alias("url"))
-                .select("url", "_h")
-            )
-            df = (content.join(keepers, ["url", "_h"], "left_semi")
-                  .drop("_h")
-                  .unionByName(null_text))
+            # NULL-SAFE url key: a group whose only url is NULL has a
+            # NULL keeper, and a plain equi join would drop its row
+            keepers = content.groupBy(F.col("_h").alias("_k_h")).agg(
+                F.min("url").alias("_k_url"))
+            df = (content.join(
+                keepers,
+                content["url"].eqNullSafe(keepers["_k_url"])
+                & (content["_h"] == keepers["_k_h"]),
+                "left_semi",
+            ).drop("_h").unionByName(null_text))
             df = ctr.checkpoint(df, stats, "rows_after_exact")
 
         if args.mode in ("near", "both"):
@@ -373,8 +376,10 @@ def run(args, spark=None) -> dict:
             df = keyed.drop("text").join(rewritten, on="_pid").drop("_pid")
             df = ctr.checkpoint(df, stats, "rows_after_paragraph")
 
-        df.write.mode("overwrite").parquet(args.output)
-        stats["rows_out"] = spark.read.parquet(args.output).count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows_out")) \
+            .write.mode("overwrite").parquet(args.output)
+        stats["rows_out"] = obs.get["rows_out"]
         return stats
     finally:
         ctr.release()

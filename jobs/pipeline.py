@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
 
+from incident_pii_redactor_spark.operators.resume import committed
 from incident_pii_redactor_spark.plans import build_session
 
 
@@ -76,17 +77,6 @@ def parse_args(argv=None):
     return args
 
 
-def _committed(spark, path: str) -> bool:
-    """True when ``path/_SUCCESS`` exists on the path's OWN filesystem
-    (Hadoop FS API — a driver-local ``os.path.exists`` always said
-    False for hdfs://, s3a:// workdirs, so every restart silently
-    recomputed the whole dedup stage; review round 5)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def run(args, spark=None) -> dict:
     from jobs.dedup import parse_args as dedup_args, run as dedup_run
     from jobs.scrub import parse_args as scrub_args, run as scrub_run
@@ -99,7 +89,7 @@ def run(args, spark=None) -> dict:
         stats: dict = {}
         if args.dedup_mode == "none":
             deduped = args.input
-        elif _committed(spark, deduped):
+        elif committed(spark, deduped):
             stats["dedup"] = "skipped (committed output present)"
         else:
             dargs = ["--input", args.input, "--output", deduped,

@@ -10,12 +10,15 @@ Usage (local test; on a cluster swap --master / add --py-files engine.zip):
         --completed-ts 2025-01-01T00:00:00
 
 Execution model (SURVEY.md §3.4):
-  read input -> content-derived bucket ids -> broadcast ANTI JOIN vs the
-  manifest's completed buckets (resume) -> loop over bucket GROUPS: one
-  narrow mapInPandas scrub pass per group, output written partitioned by
-  bucket, one manifest row appended per completed bucket. A crash loses at
-  most one in-flight group; restart skips everything manifested. Output is
-  byte-identical to a cold run because every per-row value is a pure
+  read input -> content-derived bucket ids -> collect the manifest's
+  completed buckets (none, with no Spark job, while it has no _SUCCESS)
+  -> loop over the GROUPS of the remaining buckets: filter the input on
+  the group's bucket ids, one narrow mapInPandas scrub pass, ONE write
+  partitioned by bucket (its row count observed on the write, no extra
+  count job), then one manifest row per bucket appended, built by
+  reading back only this group's written partitions. A crash loses at
+  most one in-flight group; restart skips everything manifested. Output
+  is byte-identical to a cold run because every per-row value is a pure
   function of the row (md5 pseudonyms, no wall clock — completed_ts is a
   job ARG, FIXTURES.md F4).
 
@@ -37,14 +40,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.operators.resume import (
     BUCKET_COL,
     completed_buckets,
     manifest_rows_from_output,
-    pending,
-    read_manifest,
     with_bucket,
 )
 from incident_pii_redactor_spark.operators.salting import salted_repartition
@@ -153,18 +155,16 @@ def run(args, spark=None) -> dict:
             df = (df.filter(c4_page_keep("text", cleaned=cleaned))
                     .withColumn("text", cleaned))
         df = with_bucket(df, "url", args.n_buckets)
-        manifest = read_manifest(spark, args.manifest)
-        todo = pending(df, manifest, args.run_id)
 
-        done = set(completed_buckets(manifest, args.run_id))
+        done = completed_buckets(spark, args.manifest, args.run_id)
         remaining = sorted(set(range(args.n_buckets)) - done)
         groups = [
             remaining[i: i + args.bucket_group_size]
             for i in range(0, len(remaining), args.bucket_group_size)
         ]
         stats = {"groups_run": 0, "buckets_done": len(done), "rows": 0}
-        for gi, group in enumerate(groups):
-            chunk = todo.filter(F.col(BUCKET_COL).isin(group))
+        for group in groups:
+            chunk = df.filter(F.col(BUCKET_COL).isin(group))
             if args.salt:
                 nparts = args.num_partitions or spark.sparkContext.defaultParallelism
                 chunk = salted_repartition(chunk, "url", nparts)
@@ -172,18 +172,26 @@ def run(args, spark=None) -> dict:
                 chunk, id_cols=("url", "warc_ts", "lang", BUCKET_COL),
                 cfg=WEB_DEFAULT,
             )
-            out = out.persist()
-            n = out.count()
+            # an Observation is single-use: one per group's write
+            obs = Observation()
             # dynamic partition OVERWRITE (not append): re-running a group
             # after a crash-between-output-and-manifest replaces the same
             # bucket partitions instead of duplicating them — the write is
             # idempotent per bucket, which is what makes resume exact
-            out.write.mode("overwrite").partitionBy(BUCKET_COL) \
+            out.observe(obs, F.count(F.lit(1)).alias("rows")) \
+                .write.mode("overwrite").partitionBy(BUCKET_COL) \
                 .option("partitionOverwriteMode", "dynamic") \
                 .parquet(args.output)
-            manifest_rows_from_output(out, args.run_id, args.completed_ts) \
-                .write.mode("append").parquet(args.manifest)
-            out.unpersist()
+            n = obs.get["rows"]
+            if n:
+                # only this group's partitions, never the whole output
+                # root (its listing grows with every group written); the
+                # glob skips buckets that got no rows
+                written = spark.read.option("basePath", args.output).parquet(
+                    f"{args.output}/{BUCKET_COL}={{{','.join(map(str, group))}}}")
+                manifest_rows_from_output(
+                    written, args.run_id, args.completed_ts,
+                ).write.mode("append").parquet(args.manifest)
             stats["groups_run"] += 1
             stats["buckets_done"] += len(group)
             stats["rows"] += n

@@ -2,6 +2,8 @@
 rerun, output must be byte-identical to a cold full run with no
 re-scrubbing of manifested buckets."""
 
+import shutil
+
 import pandas as pd
 import pytest
 
@@ -28,6 +30,7 @@ def cold_run(spark, pages_parquet, tmp_path_factory):
     )
     stats = run(args, spark=spark)
     assert stats["buckets_done"] == 8
+    assert stats["rows"] == 2000
     return _read_all(spark, str(d / "out"))
 
 
@@ -48,6 +51,74 @@ def test_interrupted_then_resumed_equals_cold(spark, pages_parquet,
     assert stats["buckets_done"] == 8
     warm = _read_all(spark, str(d / "out"))
     pd.testing.assert_frame_equal(warm, cold_run)
+
+
+def test_resume_after_uncommitted_first_manifest_append(
+        spark, pages_parquet, tmp_path_factory, cold_run):
+    """The first manifest append crashed before its job commit, so the
+    manifest directory holds only ``_temporary/`` and no ``_SUCCESS``.
+    That is not a committed manifest: the rerun must run every bucket
+    and equal a cold run, with no hand clean-up of the directory."""
+    d = tmp_path_factory.mktemp("uncommitted_mf")
+    base = ["--input", pages_parquet, "--output", str(d / "out"),
+            "--manifest", str(d / "mf"), "--n-buckets", "8",
+            "--bucket-group-size", "8"]
+    # the crashed attempt's output partitions were written
+    run(parse_args(base), spark=spark)
+    shutil.rmtree(str(d / "mf"))
+    attempt = d / "mf" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.snappy.parquet").write_bytes(b"PAR1 partial")
+
+    stats = run(parse_args(base), spark=spark)
+    assert stats["groups_run"] == 1 and stats["buckets_done"] == 8
+    assert stats["rows"] == 2000
+    manifest = spark.read.parquet(str(d / "mf"))
+    assert manifest.select("partition_id").distinct().count() == 8
+    pd.testing.assert_frame_equal(_read_all(spark, str(d / "out")), cold_run)
+
+
+def test_resume_raises_on_corrupt_committed_manifest(spark, pages_parquet,
+                                                     tmp_path_factory):
+    """A committed manifest that fails to read must fail the job: taking
+    it for a first run would silently redo every completed bucket."""
+    d = tmp_path_factory.mktemp("corrupt_mf")
+    base = ["--input", pages_parquet, "--output", str(d / "out"),
+            "--manifest", str(d / "mf"), "--n-buckets", "4",
+            "--bucket-group-size", "4"]
+    run(parse_args(base), spark=spark)
+    assert (d / "mf" / "_SUCCESS").exists()
+    part = sorted((d / "mf").glob("part-*.parquet"))[0]
+    data = part.read_bytes()
+    part.write_bytes(data[: len(data) // 2])
+    with pytest.raises(Exception):
+        run(parse_args(base), spark=spark)
+
+
+def test_scrub_job_caches_nothing_and_runs_no_count(
+        spark, pages_parquet, tmp_path_factory, monkeypatch):
+    """Rows are counted by an Observation on the write and the manifest
+    is built from the written partitions: no group caches its output or
+    runs a separate count job."""
+    d = tmp_path_factory.mktemp("no_cache")
+    cls = type(spark.range(1))
+
+    def forbidden(name):
+        def fail(self, *a, **k):
+            raise AssertionError(f"scrub job called DataFrame.{name}")
+        return fail
+
+    for name in ("persist", "cache", "count"):
+        monkeypatch.setattr(cls, name, forbidden(name))
+    stats = run(parse_args(
+        ["--input", pages_parquet, "--output", str(d / "out"),
+         "--manifest", str(d / "mf"), "--n-buckets", "4",
+         "--bucket-group-size", "2"]), spark=spark)
+    monkeypatch.undo()
+    assert stats["groups_run"] == 2 and stats["rows"] == 2000
+    m = spark.read.parquet(str(d / "mf")).toPandas()
+    assert sorted(m["partition_id"]) == [0, 1, 2, 3]
+    assert m["rows_in"].sum() == 2000
 
 
 @pytest.mark.parametrize("opt", ["--n-buckets", "--bucket-group-size"])
@@ -162,6 +233,43 @@ def test_dedup_exact_mode_keeps_null_text_rows(spark, tmp_path_factory):
     assert stats["rows_after_exact"] == 3  # one dup gone, both NULLs kept
     urls = {r.url for r in spark.read.parquet(str(d / "out")).collect()}
     assert urls == {"https://a/1", "https://a/3", "https://a/4"}
+
+
+def test_dedup_exact_mode_keeps_null_url_row(spark, tmp_path_factory):
+    """A NULL-url row with unique text is its own hash group's keeper,
+    and that keeper url is NULL. The keeper join must match it NULL-safe,
+    or exact mode silently drops the row."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.dedup import parse_args as dedup_args, run as dedup_run
+
+    d = tmp_path_factory.mktemp("dedup_null_url")
+    ts = dt.datetime(2025, 1, 1)
+    rows = [
+        ("https://a/1", ts, b"", "shared content body one", "en"),
+        ("https://a/2", ts, b"", "shared content body one", "en"),  # dup
+        (None, ts, b"", "a page whose url was lost", "en"),
+        ("https://a/4", ts, b"", "another unique body", "en"),
+    ]
+    tbl = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text",
+                                    "lang"]),
+        schema=pa.schema([("url", pa.string()),
+                          ("warc_ts", pa.timestamp("us")),
+                          ("html", pa.binary()), ("text", pa.string()),
+                          ("lang", pa.string())]),
+        preserve_index=False)
+    pq.write_table(tbl, str(d / "pages.parquet"))
+
+    stats = dedup_run(dedup_args(
+        ["--input", str(d / "pages.parquet"), "--output", str(d / "out"),
+         "--mode", "exact"]), spark=spark)
+    assert stats["rows_after_exact"] == 3 and stats["rows_out"] == 3
+    texts = {r.text for r in spark.read.parquet(str(d / "out")).collect()}
+    assert "a page whose url was lost" in texts
 
 
 def test_dedup_input_scans_once_per_stage(spark, tmp_path_factory,
