@@ -29,17 +29,24 @@ SMOKE_SUBMIT = cd /tmp/submit_smoke && spark-submit --master 'local[8]' \
 	  --output /tmp/submit_smoke/out --manifest /tmp/submit_smoke/mf \
 	  --n-buckets 4 --bucket-group-size 4 --salt --from-html
 
+SMOKE_DEDUP = cd /tmp/submit_smoke && spark-submit --master 'local[8]' \
+	  --py-files $(CURDIR)/dist/engine.zip \
+	  --conf spark.ui.enabled=false \
+	  $(CURDIR)/jobs/dedup.py --input /tmp/submit_smoke/pages.parquet \
+	  --output /tmp/submit_smoke/dedup_out --mode both
+
 # prove the packaged job runs under spark-submit with --py-files — from a
 # NEUTRAL cwd so the package can only resolve through the zip — and that
 # a second run finds the committed manifest (Hadoop FS API) and runs no
-# group
+# group; then run the dedup job's exact and near paths the same way
 submit-smoke: package
 	python -c "from incident_pii_redactor_spark.sources.pages import write_pages_parquet; import os; os.makedirs('/tmp/submit_smoke', exist_ok=True); write_pages_parquet('/tmp/submit_smoke/pages.parquet', 500)"
-	rm -rf /tmp/submit_smoke/out /tmp/submit_smoke/mf
+	rm -rf /tmp/submit_smoke/out /tmp/submit_smoke/mf /tmp/submit_smoke/dedup_out
 	$(SMOKE_SUBMIT)
 	$(SMOKE_SUBMIT) > /tmp/submit_smoke/rerun.txt
 	cat /tmp/submit_smoke/rerun.txt
 	grep -qF "'groups_run': 0" /tmp/submit_smoke/rerun.txt
+	$(SMOKE_DEDUP)
 
 clean:
 	rm -rf dist .bench_cache .pytest_cache

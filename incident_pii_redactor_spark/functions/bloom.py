@@ -27,7 +27,7 @@ h1/h2 = two 60-bit slices of the hex digest, h2 forced odd) — no RNG,
 no seed, same bits on every run.
 
 No reference counterpart (the reference dedups nothing); this is the
-engine's own scale machinery, same family as the manifest anti-join.
+engine's own scale machinery.
 """
 
 from __future__ import annotations

@@ -9,9 +9,11 @@ reproduce signatures bit-for-bit (Spark ``xxhash64`` has no DuckDB twin).
 Scale design:
 * exact dedup = one hash-aggregate on md5(text) — map-side partial
   aggregation makes the shuffle carry (hash, count, min_id), not text.
-* MinHash LSH = signatures per doc (narrow), then a self-join on
-  (band_id, band_hash) — candidate pairs only; never all-pairs. Band
-  keys are high-entropy hashes, so the join keys are uniform — no skew.
+* MinHash LSH = signatures per doc (narrow), then one key per (doc,
+  band) — the band id followed by that band's minhashes, exact — and
+  ``band_pairs``, the candidate-pair skeleton embedding LSH shares: a
+  self equi-join on the key, candidate pairs only; never all-pairs.
+  Minhashes are uniform, so the join keys are too — no skew.
 * SimHash = 64-bit signature, bucket on 4x16-bit sub-bands (Hamming
   neighbors share a band with prob 1 for distance <= band count - 1).
 """
@@ -128,6 +130,35 @@ def minhash_signature(text_col: str = "text", n: int = 3,
     return F.aggregate(shingle_base_hashes(text_col, n), init, step)
 
 
+def band_pairs(keys: DataFrame) -> DataFrame:
+    """The banded-LSH candidate-pair skeleton shared by MinHash and
+    embedding LSH: ``(_id, band_key)`` rows, one per document and band,
+    -> distinct ``(id_a, id_b)`` pairs with ``id_a < id_b`` of documents
+    that share at least one key. Each key must encode its band id AND
+    that band's values exactly — never a hash of them: a collision would
+    add candidate pairs (and so change unverified dedup output). The join
+    is a single-column equi-join — never a cross join — and the
+    ``distinct`` dedupes pairs that agree in several bands over narrow
+    (two-id) rows."""
+    # Materialization barrier: without it Catalyst inlines the signature
+    # or band-key expression into BOTH join sides (measured 31 s -> ~3 s
+    # on 5k docs for MinHash; 9.9 s -> 7.8 s warm at sf0.1 for the
+    # embedding UDF). localCheckpoint, not persist: it severs the lineage
+    # eagerly and its blocks are released when the DataFrame is
+    # garbage-collected, so repeated calls in a long-lived session leak
+    # nothing (a persist had no unpersist point: the caller owns the
+    # action). At real scale persist signatures to a table instead.
+    keys = keys.localCheckpoint(eager=True)
+    a = keys.select(F.col("_id").alias("id_a"), "band_key")
+    b = keys.select(F.col("_id").alias("id_b"), "band_key")
+    return (
+        a.join(b, "band_key")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -141,12 +172,11 @@ def minhash_lsh_pairs(
     CANDIDATE pairs with id_a < id_b — banding has false positives
     (P ~ 1-(1-s^rows_per_band)^bands for true shingle-Jaccard s), so
     dedup decisions should verify candidates with ``jaccard_on_pairs``
-    (jobs/dedup.py does by default). The join is per (band_id, band_key)
-    — never a cross join."""
-    if n_perm % bands:
+    (jobs/dedup.py does by default). Pairs come from ``band_pairs``."""
+    if bands < 1 or n_perm % bands:
         raise ValueError(
-            f"bands ({bands}) must divide n_perm ({n_perm}) — trailing "
-            "minhashes would silently be ignored"
+            f"bands ({bands}) must be >= 1 and divide n_perm ({n_perm}) "
+            "— trailing minhashes would silently be ignored"
         )
     rows_per_band = n_perm // bands
     from incident_pii_redactor_spark.plans.session import (
@@ -166,52 +196,17 @@ def minhash_lsh_pairs(
     # delete k-1 unrelated short docs). Shingle-based similarity is simply
     # undefined for them; they never enter LSH.
     sig = sig.filter(F.element_at("_sig", 1) != F.lit(_MH_P).cast("long"))
-    # Materialization barrier: without it Catalyst's CollapseProject inlines
-    # the (expensive) signature expression into every band-key expression on
-    # BOTH join sides — ~2*bands x redundant MinHash computation (measured
-    # 31s -> ~3s on 5k docs). localCheckpoint (not persist): it severs the
-    # lineage eagerly AND its blocks are released when this DataFrame is
-    # garbage-collected, so repeated calls in a long-lived session leak
-    # nothing (a persist here had no unpersist point — the caller owns the
-    # action — and accumulated cached partitions; ADVICE.md round 1). At
-    # real scale you would persist signatures to a table instead.
-    sig = sig.localCheckpoint(eager=True)
-    banded = sig.select(
+    # band key = [band id, that band's minhashes] as one array<bigint>:
+    # exact, so equal values in different bands never meet
+    keys = sig.select(
         "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.array_join(
-                            F.transform(
-                                F.slice(F.col("_sig"), b * rows_per_band + 1,
-                                        rows_per_band),
-                                lambda v: v.cast("string"),
-                            ),
-                            "|",
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("_id", "band.band_id", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-        )
-        .distinct()
+        F.explode(F.array(*[
+            F.concat(F.array(F.lit(b).cast("long")),
+                     F.slice("_sig", b * rows_per_band + 1, rows_per_band))
+            for b in range(bands)
+        ])).alias("band_key"),
     )
+    return band_pairs(keys)
 
 
 # --- paragraph-level dedup ---------------------------------------------------

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from incident_pii_redactor_spark.functions.dedup import band_pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     """<a, b> in double precision (floats cast first — matches DuckDB's
@@ -309,11 +311,12 @@ def embedding_near_dup_pairs(
     buckets split under AQE.
 
     Plan shape: the band shuffle carries only (id, band_key) — candidate
-    ID pairs are deduped FIRST (narrow rows), then vectors join back from
-    the base table and the ``_verify_pairs_arrow`` mapInArrow stage
-    verifies (exact, bit-identical to the Column fold — round 6: it
-    replays the same fold op order over zero-copy (n, dim) buffer views,
-    removing the per-pair numpy materialization the pandas_udf paid).
+    ID pairs are deduped FIRST (narrow rows, ``band_pairs``), then
+    ``_cosine_pairs`` joins vectors back from the base table and the
+    ``_verify_pairs_arrow`` mapInArrow stage verifies (exact,
+    bit-identical to the Column fold — round 6: it replays the same fold
+    op order over zero-copy (n, dim) buffer views, removing the per-pair
+    numpy materialization the pandas_udf paid).
     Carrying vectors through the band shuffle + dedupe was ~2x the
     shuffle bytes and the per-pair Column fold was ~35x slower than the
     Arrow batch."""
@@ -328,50 +331,39 @@ def embedding_near_dup_pairs(
     # parallelism floor before the band-key UDF: a one-row-group source
     # is a single unsplittable task, serializing the matmul + explode on
     # one core (no-op at real scale — see scan_parallelism_floor)
-    sig = scan_parallelism_floor(
+    banded = scan_parallelism_floor(
         df.select(F.col(id_col).alias("_id"), F.col(vec_col))
     ).select(
         "_id",
         F.explode(keys(F.col(vec_col))).alias("band_key"),
     )
-    # materialization barrier (same rationale as minhash_lsh_pairs): the
-    # self-join would otherwise evaluate the band-key UDF (vector scan +
-    # matmul) once per side — measured 9.9 s -> 7.8 s warm at sf0.1.
-    # localCheckpoint blocks release with the DataFrame; at real scale
-    # persist signatures to a table instead.
-    sig = sig.localCheckpoint(eager=True)
-    a = sig.select(F.col("_id").alias("id_a"), "band_key")
-    b = sig.select(F.col("_id").alias("id_b"), "band_key")
-    pair_ids = (
-        a.join(b, "band_key")  # equi-join on the packed (band, bits) key
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()  # dedupe across bands — narrow (two longs) rows
-    )
+    return _cosine_pairs(band_pairs(banded), df, id_col, vec_col, dim,
+                         threshold)
+
+
+def _cosine_pairs(pair_ids: DataFrame, df: DataFrame, id_col: str,
+                  vec_col: str, dim: int, threshold: float) -> DataFrame:
+    """(id_a, id_b) candidate pairs -> (id_a, id_b, cos_sim) for the
+    pairs whose exact cosine, rounded to 6 places, is >= ``threshold``:
+    the verify tail of ``embedding_near_dup_pairs`` and ``semdedup``.
+    Vectors join back from ``df`` by id, then ``_verify_pairs_arrow``
+    computes the fold-order cosine, bit-identical to ``cosine()``."""
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("ea"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("eb"))
-    # Verify via mapInArrow on the CONTIGUOUS list buffers (guide §4.2):
-    # the former per-pair pandas_udf spent most of its time materializing
-    # two small numpy arrays per row (Arrow list -> object Series); here
-    # each batch's vectors are two zero-copy (n, dim) views and the
-    # accumulation below replays cosine()'s exact sequential IEEE op
-    # order column-at-a-time, so values stay bit-identical. Rounding and
-    # thresholding stay on the JVM side exactly as before: Spark ROUND
-    # is HALF_UP BigDecimal (numpy's is half-even — never round floats
-    # for the gate in Python), and NaN (null input / zero norm) becomes
-    # an Arrow NULL via from_pandas so the `>= threshold` filter drops
-    # it (bare NaN would PASS — Spark orders NaN above every double).
     raw = _verify_pairs_arrow(
         pair_ids.join(va, "id_a").join(vb, "id_b")
         .select("id_a", "id_b", "ea", "eb"), dim)
-    # no ORDER BY here: a library-level global sort would shuffle every
-    # surviving pair at corpus scale; callers needing deterministic
-    # output order (the driver gate) sort the result themselves
+    # Rounding and thresholding stay on the JVM side: Spark ROUND is
+    # HALF_UP BigDecimal (numpy's is half-even — never round floats for
+    # the gate in Python), and NaN (null input / zero norm) arrives as an
+    # Arrow NULL so the `>= threshold` filter drops it (bare NaN would
+    # PASS — Spark orders NaN above every double). No ORDER BY: a
+    # library-level global sort would shuffle every surviving pair at
+    # corpus scale; callers needing deterministic output order (the
+    # registry queries) sort the result themselves.
     return (
-        raw.select(
-            "id_a", "id_b",
-            F.round(F.col("_cos_raw"), 6).alias("cos_sim"),
-        )
+        raw.select("id_a", "id_b",
+                   F.round(F.col("_cos_raw"), 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -730,25 +722,15 @@ def semdedup(
                        id_col=id_col, seed=seed)
     assigned = kmeans_assign(df, cents, vec_col=vec_col, id_col=id_col) \
         .select(id_col, "cluster")
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("ea"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("eb"))
-    a = assigned.select(F.col(id_col).alias("id_a"),
-                        F.col("cluster").alias("cluster"))
-    b = assigned.select(F.col(id_col).alias("id_b"),
-                        F.col("cluster").alias("cluster"))
-    # same zero-per-row-allocation verify as embedding_near_dup_pairs
-    # (bit-identical fold-order cosine; JVM-side HALF_UP round + NaN->
-    # NULL threshold semantics — see _verify_pairs_arrow)
-    raw = _verify_pairs_arrow(
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", "ea", "eb"), int(cents.shape[1]))
-    pairs = (
-        raw.select("id_a", "id_b",
-                   F.round(F.col("_cos_raw"), 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    a = assigned.select(F.col(id_col).alias("id_a"), "cluster")
+    b = assigned.select(F.col(id_col).alias("id_b"), "cluster")
+    # every id has exactly one cluster, so these pairs are already
+    # distinct: no band_pairs checkpoint or distinct needed
+    pair_ids = (a.join(b, "cluster")
+                .filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b"))
+    pairs = _cosine_pairs(pair_ids, df, id_col, vec_col,
+                          int(cents.shape[1]), threshold)
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
     # NO forced broadcast: a SemDeDup drop list is 30-50% of the corpus
     # at production thresholds — let AQE pick the join strategy

@@ -8,19 +8,22 @@ jobs/scrub.py; its output is the scrub job's input).
 Scale design:
 * exact: one hash-aggregate on md5(normalized text) — the shuffle carries
   (32-hex, url) pairs, never document text; keeper = min(url).
-* near: MinHash signatures (single-pass expression) -> banded LSH
-  self-join -> candidate pairs -> exact n-gram Jaccard VERIFICATION of
-  each candidate (on by default: with n_perm=8/bands=4 the banding FP
-  rate is ~1-(1-s^2)^4, so unrelated docs with ~20% shingle overlap
-  would otherwise be deleted ~15% of the time; --no-verify-jaccard
-  restores the unverified path and documents that rate) -> per-pair
-  min-url-wins drop set. Verification runs on candidates only, never
-  the corpus. The final filter is a plain LEFT ANTI join on the
+* near: MinHash signatures (single-pass expression) -> one exact key
+  per (row, band) -> candidate pairs from ``band_pairs`` (the banded-LSH
+  skeleton in functions/dedup.py, shared with embedding near-dup: one
+  self equi-join on the key, distinct id_a < id_b pairs) -> exact n-gram
+  Jaccard VERIFICATION of each candidate (on by default: with
+  n_perm=8/bands=4 the banding FP rate is ~1-(1-s^2)^4, so unrelated
+  docs with ~20% shingle overlap would otherwise be deleted ~15% of the
+  time; --no-verify-jaccard restores the unverified path and documents
+  that rate) -> per-pair min-url-wins drop set. Verification runs on
+  candidates only, never the corpus. The final filter is a plain LEFT ANTI join on the
   uniform url key — NOT a forced broadcast: at web scale the near-dup
   fraction runs 20-40% of the corpus, so the drop list is unbounded
   (round-4 verdict: force-broadcasting it OOMs the driver at 10^12
   docs). AQE still picks a broadcast at runtime whenever the list
-  measures small, so small jobs lose nothing.
+  measures small, so small jobs lose nothing. Near-dup options that
+  cannot run are rejected by parse_args, before any stage runs.
 * per-stage row counts (the job's lineage metrics) persist each
   stage's output before counting and release the previous stage's
   cache once the next is materialized, so every stage's lineage
@@ -33,7 +36,8 @@ Scale design:
   components: for a chain A-B-C it keeps A and drops B and C, which is
   the standard first-order near-dup policy (full CC costs an iterative
   join; at 10^12 docs the chain-length distribution makes one step
-  capture ~all mass).
+  capture ~all mass). --exact-clusters runs full CC instead: label
+  propagation with a large-star/small-star fallback past 50 rounds.
 """
 
 from __future__ import annotations
@@ -96,19 +100,9 @@ def parse_args(argv=None):
                    help="resolve near-dup CHAINS with connected "
                         "components (one keeper per full cluster) instead "
                         "of the default one-step min-url-wins per pair — "
-                        "O(cluster diameter) extra join rounds; see "
+                        "O(cluster diameter) extra join rounds, with a "
+                        "large-star/small-star fallback past 50; see "
                         "functions/graph.py")
-    p.add_argument("--cc-max-iter", type=int, default=50,
-                   help="round budget for --exact-clusters label "
-                        "propagation (each round = one join; needs graph "
-                        "diameter + 1 rounds)")
-    p.add_argument("--cc-algorithm", default="auto",
-                   choices=("auto", "label", "star"),
-                   help="connected-components strategy: label propagation "
-                        "(O(diameter) rounds, raises past --cc-max-iter), "
-                        "large-star/small-star (O(log^2 n) rounds for "
-                        "long-chain graphs), or auto = label with star "
-                        "fallback (default)")
     p.add_argument("--from-html", action="store_true",
                    help="derive text = extract_text(html) BEFORE any "
                         "dedup (raw-crawl ingestion: hashing a stale or "
@@ -138,7 +132,21 @@ def parse_args(argv=None):
                         "final write with zero extra actions — the "
                         "production setting at 10^12 docs")
     p.add_argument("--master", default=None)
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    # fail before the input read and the earlier stages run; 0-word
+    # shingles would run as unigrams and a threshold above 1 (or NaN)
+    # would verify no pair, both without an error
+    for opt, v in (("--shingle-words", args.shingle_words),
+                   ("--n-perm", args.n_perm), ("--bands", args.bands)):
+        if v < 1:
+            p.error(f"{opt} must be >= 1, got {v}")
+    if args.n_perm % args.bands:
+        p.error(f"--bands ({args.bands}) must divide --n-perm "
+                f"({args.n_perm})")
+    if not args.jaccard_threshold <= 1.0:
+        p.error(f"--jaccard-threshold must be <= 1, got "
+                f"{args.jaccard_threshold}")
+    return args
 
 
 class _StageCounter:
@@ -203,8 +211,7 @@ def near_dedup(df, args):
         )
 
         drops = (
-            cluster_keepers(pairs, max_iter=args.cc_max_iter,
-                            algorithm=args.cc_algorithm)
+            cluster_keepers(pairs, max_iter=50)
             .filter(F.col("node") != F.col("keeper"))
             .select(F.col("node").alias("_rid"))
         )

@@ -187,6 +187,72 @@ def test_minhash_short_docs_never_pair(spark):
     assert minhash_lsh_pairs(df).count() == 0
 
 
+def test_band_pairs_on_hand_written_keys(spark):
+    """Two docs sharing two bands give ONE pair; equal values in
+    DIFFERENT bands give none (the key encodes the band); string ids
+    holding \x00 (jobs/dedup.py's row ids) come out ordered."""
+    from incident_pii_redactor_spark.functions.dedup import band_pairs
+
+    keys = spark.createDataFrame(
+        [(1, [0, 7, 8]), (2, [0, 7, 8]), (1, [1, 9, 9]), (2, [1, 9, 9]),
+         (3, [0, 5, 5]), (4, [1, 5, 5])],
+        "_id long, band_key array<bigint>")
+    assert sorted(tuple(r) for r in band_pairs(keys).collect()) == [(1, 2)]
+
+    ids = ["b\x00", "a\x00x", "a\x00"]
+    keys = spark.createDataFrame([(i, 3) for i in ids],
+                                 "_id string, band_key int")
+    got = sorted(tuple(r) for r in band_pairs(keys).collect())
+    assert got == [("a\x00", "a\x00x"), ("a\x00", "b\x00"),
+                   ("a\x00x", "b\x00")]
+
+
+def test_minhash_lsh_pairs_equal_python_banding(spark):
+    """minhash_lsh_pairs == a pure-Python banding of the collected
+    signatures: pairs of docs that share all minhashes of any one band,
+    short and NULL-text docs excluded. The plan has no nested-loop or
+    cartesian join, and ``bands=0`` is a ValueError."""
+    from incident_pii_redactor_spark.functions.dedup import (
+        _MH_P,
+        minhash_lsh_pairs,
+        minhash_signature,
+    )
+
+    base = "the cat sat on the mat and watched the quiet river bend"
+    words = base.split()
+    texts = [base, base]
+    for i in range(len(words)):  # one-word edits: some share a band
+        texts.append(" ".join(words[:i] + ["dog"] + words[i + 1:]))
+    texts += ["spark shuffles parquet files across the cluster nodes",
+              "spark shuffles parquet files across the cluster racks",
+              "tiny", "two words", None]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    n_perm, bands = 12, 4
+    r = n_perm // bands
+    sigs = df.select("doc_id", minhash_signature("text", 3, n_perm)
+                     .alias("s")).collect()
+    buckets: dict = {}
+    for row in sigs:
+        if row.s is None or row.s[0] == _MH_P:
+            continue
+        for b in range(bands):
+            key = (b, tuple(row.s[b * r:(b + 1) * r]))
+            buckets.setdefault(key, []).append(row.doc_id)
+    want = {(a, c) for ids in buckets.values()
+            for a in ids for c in ids if a < c}
+    pairs = minhash_lsh_pairs(df, n_perm=n_perm, bands=bands)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    got = [tuple(x) for x in pairs.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert (0, 1) in want and len(want) > 1
+    with pytest.raises(ValueError):
+        minhash_lsh_pairs(df, bands=0)
+
+
 def test_anonymize_emails_methods(spark):
     """R7 parity: Presidio-style hash/mask/replace/remove operator configs
     (reference pii_redactor.py:90-121) as Catalyst expressions."""

@@ -129,6 +129,26 @@ def test_bucket_options_below_one_are_rejected(opt):
             parse_args(base + [opt, v])
 
 
+@pytest.mark.parametrize("extra", [
+    ["--bands", "0"],
+    ["--bands", "-4"],
+    ["--n-perm", "0"],
+    ["--n-perm", "6", "--bands", "4"],
+    ["--shingle-words", "0"],
+    ["--jaccard-threshold", "1.5"],
+    ["--jaccard-threshold", "nan"],
+])
+def test_dedup_near_options_that_cannot_run_are_rejected(extra):
+    """Rejected by the parser, before any stage reads the input: before,
+    --bands 0 raised ZeroDivisionError after the earlier stages ran,
+    0-word shingles ran as unigrams and a threshold above 1 dropped
+    nothing with exit 0."""
+    from jobs.dedup import parse_args as dedup_args
+
+    with pytest.raises(SystemExit):
+        dedup_args(["--input", "in", "--output", "out"] + extra)
+
+
 def test_rerun_when_complete_is_noop(spark, pages_parquet, tmp_path_factory):
     d = tmp_path_factory.mktemp("noop")
     base = ["--input", pages_parquet, "--output", str(d / "out"),
