@@ -1,4 +1,4 @@
-.PHONY: test correctness bench scaling loc package submit-smoke clean
+.PHONY: test correctness bench scaling loc package submit-smoke clean regex-growth
 
 test:
 	python -m pytest tests/ -x -q
@@ -11,6 +11,12 @@ bench:
 
 scaling:
 	python tools/bench_scaling.py --passes 2 --rows 100000
+
+# the linear-time regex gate alone: differential tests of the rewritten
+# patterns and the n -> 4n growth test of every detect/validate pattern,
+# printing each pattern's worst growth ratio
+regex-growth:
+	python -m pytest tests/test_linear_regex.py -q -s -p no:cacheprovider
 
 # package size in lines, the figure CHANGES.md and ROADMAP.md track
 loc:

@@ -31,8 +31,12 @@ detection surface:
   what we replicate.
 * D8  Context-window extraction: ±50 chars (``pii_detector.py:107-119``).
 
-All regexes stay within the common Java-regex/RE2 subset where a DuckDB
-oracle twin exists (no lookbehind/backrefs in those).
+Every pattern here and in ``core/validate.py`` scans in time linear in
+the document length, on any input: ``tests/test_linear_regex.py`` times
+each one at n and 4n characters of adversarial text. Patterns whose plain
+``re`` form would rescan a long run from every start are ``_RunScan``
+objects with the same ``finditer`` results. The Java-regex twin the
+registry queries use (``functions/text.py::EMAIL_RE_SQL``) is separate.
 """
 
 from __future__ import annotations
@@ -49,13 +53,65 @@ from incident_pii_redactor_spark.core.spans import (
 )
 
 # ---------------------------------------------------------------------------
+# Linear-time scans. ``re`` tries a pattern at every start position, so a
+# pattern whose leading run can cover a long token ("a.a.a…" for an email
+# local part, "1-2-3-…" for a pod name) rescans that token from each of
+# its positions: O(n²) per document, or worse when the run is ambiguous.
+# These objects return exactly the ``finditer`` matches of the plain
+# pattern (same spans, groups and order) while reading each run a bounded
+# number of times.
+# ---------------------------------------------------------------------------
+
+
+class _LinearScan:
+    """``_leftmost(text, pos)`` finds where the leftmost match at or after
+    ``pos`` starts; ``body``, a pattern whose single anchored attempt is
+    linear, produces the ``re.Match`` there."""
+
+    body: re.Pattern
+
+    def finditer(self, text: str):
+        pos = 0
+        while (start := self._leftmost(text, pos)) is not None:
+            m = self.body.match(text, start)
+            yield m
+            pos = m.end()  # every body match is non-empty
+
+
+class _RunScan(_LinearScan):
+    """For a ``body`` whose matches all start inside a maximal run of
+    ``run`` characters, and where, within one run, a match from any start
+    implies a match from the first start ``skip`` reaches (an atomic group
+    that moves to the first position the body may start at, after an
+    optional lookahead that rejects a run no match fits in). Then one
+    attempt per run decides the whole run: ``_fast`` rejects every
+    position preceded by a run character in O(1) and attempts each run
+    once, from its first character. A previous match may end inside a run
+    and the next start right there (``"a@b.com_x@y.com"``); ``_resume``
+    makes that one attempt at ``pos``."""
+
+    def __init__(self, run: str, skip: str, body: str):
+        self.body = re.compile(body)
+        self._resume = re.compile(f"{skip}(){body}")
+        self._fast = re.compile(f"(?<!{run}){skip}(){body}")
+
+    def _leftmost(self, text: str, pos: int) -> int | None:
+        m = (pos and self._resume.match(text, pos)) or self._fast.search(text, pos)
+        return m.start(1) if m else None
+
+
+# ---------------------------------------------------------------------------
 # D1 — primary PII regexes (compiled once per process / executor; the Spark
 # layer ships only this module, so compilation happens lazily per worker —
 # the broadcast-config pattern of SURVEY.md §4.1).
 # ---------------------------------------------------------------------------
 
-EMAIL_RE_STR = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-EMAIL_RE = re.compile(EMAIL_RE_STR)
+# every start inside one local-part run shares the same '@' and domain, so
+# the first start decides the run ('@' ends the run: possessive is exact)
+EMAIL_RE = _RunScan(
+    "[A-Za-z0-9._%+-]", "",
+    r"[A-Za-z0-9._%+-]++@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
+)
 
 # +1-555-123-4567 | (555) 123-4567 | 555.123.4567 — separator-FORMATTED
 # numbers only, by design: a bare \d{10} branch would redact every 10-digit
@@ -380,17 +436,29 @@ def detect_pii(text: str) -> list[Span]:
 # (reference deterministic_extractor.py:118-125)
 # ---------------------------------------------------------------------------
 
-CUSTOM_PATTERNS: dict[str, re.Pattern] = {
+CUSTOM_PATTERNS: dict[str, re.Pattern | _RunScan] = {
     "internal_url": re.compile(
         # \b so '.corp1.com' (public) is not clipped into a '.corp' match
         r"https?://[a-z0-9.-]*\.(?:internal|corp|local)\b(?::\d+)?(?:/\S*)?"
     ),
     "jira_ticket": re.compile(r"\b[A-Z]{2,10}-\d{1,6}\b"),
     "aws_arn": re.compile(r"\barn:aws:[a-z0-9-]+:[a-z0-9-]*:\d{12}:\S+"),
-    "kubernetes_pod": re.compile(r"\b[a-z0-9][a-z0-9-]*-[a-f0-9]{8,10}-[a-z0-9]{5}\b"),
+    # the whole match lies in one [a-z0-9-] run; a tail found after a
+    # later start is also after the run's first \b-alnum start (the
+    # lookahead rules out a run with no '-' in one pass)
+    "kubernetes_pod": _RunScan(
+        "[a-z0-9-]", r"(?=[a-z0-9]*+-)(?>[a-z0-9-]*?\b(?=[a-z0-9]))",
+        r"\b[a-z0-9][a-z0-9-]*-[a-f0-9]{8,10}-[a-z0-9]{5}\b",
+    ),
     "slack_channel": re.compile(r"#[a-z0-9][a-z0-9_-]{1,32}\b"),
-    "docker_image": re.compile(
-        r"\b[a-z0-9.-]+/[a-z0-9._/-]+:[a-zA-Z0-9][a-zA-Z0-9._-]{0,48}\b"
+    # name and path lie in one [a-z0-9._/-] run that must end at the ':';
+    # the skip walks its '_'/'/'-separated segments to the first \b whose
+    # [a-z0-9.-] segment ends in '/' followed by a path character
+    "docker_image": _RunScan(
+        "[a-z0-9._/-]",
+        r"(?=[a-z0-9._/-]*+:)(?>(?:[a-z0-9.-]*+[_/])*?(?>[a-z0-9.-]*?\b)"
+        r"(?=[a-z0-9.-]++/[a-z0-9._/-]))",
+        r"\b[a-z0-9.-]++/[a-z0-9._/-]++:[a-zA-Z0-9][a-zA-Z0-9._-]{0,48}\b",
     ),
 }
 
@@ -501,8 +569,12 @@ def detect_deterministic(text: str) -> list[Span]:
 # ---------------------------------------------------------------------------
 
 CONTEXTUAL_PATTERNS: dict[str, re.Pattern] = {
+    # `\s*[:#]?\s*` would split a run of spaces between its two \s* in
+    # every way (quadratic); spaces before the optional [:#] are all
+    # taken first either way, so the possessive form matches the same
     "employment_info": re.compile(
-        r"\b(?:employee|staff)\s+(?:id|number)\s*[:#]?\s*\w{4,12}\b", re.I
+        r"\b(?:employee|staff)\s+(?:id|number)\s*+(?:[:#]\s*+)?\w{4,12}\b",
+        re.I,
     ),
     "salary_info": re.compile(
         r"\$\s?\d{2,3}(?:,\d{3})+(?:\.\d{2})?\b"
@@ -518,7 +590,8 @@ CONTEXTUAL_PATTERNS: dict[str, re.Pattern] = {
         r"\b(?:patent|proprietary algorithm|trade secret)\s+\S+", re.I
     ),
     "investigation_details": re.compile(
-        r"\b(?:case|investigation)\s+(?:id|number)\s*[:#]?\s*\w{4,12}\b", re.I
+        r"\b(?:case|investigation)\s+(?:id|number)\s*+(?:[:#]\s*+)?\w{4,12}\b",
+        re.I,
     ),
 }
 

@@ -32,6 +32,8 @@ from incident_pii_redactor_spark.core.detectors import (
     PHONE_RE,
     SSN_RE,
     _DIGIT_RE,
+    _LinearScan,
+    _RunScan,
     iban_valid,
     luhn_valid,
     nhs_valid,
@@ -53,14 +55,84 @@ _EXCLUSION_RE = re.compile(
     r"|\b(?:SEC|INC|JIRA)-\d+\b"
 )
 
+# The spaced-email local part r"[\w.+-]+(?:\s*\.\s*[\w+-]+)*" as an
+# automaton over character classes, run right to left from the '@' (as a
+# regex, its two ways to read each ".x" make the scan cubic). States: 0
+# start, 1 first run, 2 spaces awaiting a dot, 3 after the dot, 4 word
+# after a dot; 1 and 4 accept. _BACK[cls][s] is the set of states whose
+# cls-edge leads into set s, so walking left from an accepting set keeps
+# exactly the states that can still read the rest.
+_W, _DOT, _SP, _OTHER = range(4)
+_EDGES = (
+    (0, _W, 1), (0, _DOT, 1), (1, _W, 1), (1, _DOT, 1), (1, _DOT, 3),
+    (1, _SP, 2), (2, _SP, 2), (2, _DOT, 3), (3, _SP, 3), (3, _W, 4),
+    (4, _W, 4), (4, _SP, 2), (4, _DOT, 3),
+)
+_BACK = [
+    [sum({1 << a for a, c, b in _EDGES if c == cls and s >> b & 1})
+     for s in range(32)]
+    for cls in range(4)
+]
+
+
+def _char_class(ch: str) -> int:
+    # str.isalnum/isspace are exactly re's \w (plus '_') and \s
+    if ch.isalnum() or ch in "_+-":
+        return _W
+    return _DOT if ch == "." else _SP if ch.isspace() else _OTHER
+
+
+def _is_word(ch: str) -> bool:
+    return ch.isalnum() or ch == "_"
+
+
+class _SpacedEmailScan(_LinearScan):
+    r"""``\b<local>\s+@\s+<domain>``. The local part cannot contain '@', so
+    each match ends at the domain of the first '@' after its start, and the
+    local part ends at the last non-space before that '@'. So: find each
+    '@' with spaces around it and a valid domain (``_at``, linear), then
+    walk left through the automaton to the leftmost \b start that reads
+    the whole local part; the walk stops as soon as no state survives.
+    ``body`` is an unambiguous form of the pattern, used only anchored:
+    the first run is atomic, and a run ending in '.' lends that dot to the
+    next word ("a.b. x" is "a.b" + ". x")."""
+
+    body = re.compile(
+        r"\b(?>[\w.+-]+)(?:(?<=\.)\s+(?:\.\s*)?[\w+-]+)?+"
+        r"(?:\s*\.\s*[\w+-]+)*+\s+@\s+[\w-]+(?:\s*\.\s*[\w-]+)+"
+    )
+    _at = re.compile(r"(?<=\s)@\s+[\w-]+(?:\s*\.\s*[\w-]+)+")
+
+    def _leftmost(self, text: str, pos: int) -> int | None:
+        for at in self._at.finditer(text, pos):
+            i = at.start() - 1
+            while i >= pos and text[i].isspace():
+                i -= 1
+            states, start = 0b10010, None  # accepting: 1 and 4
+            while i >= pos:
+                states = _BACK[_char_class(text[i])][states]
+                if not states:
+                    break
+                if states & 1 and _is_word(text[i]) != (
+                        i > 0 and _is_word(text[i - 1])):
+                    start = i
+                i -= 1
+            if start is not None:
+                return start
+        return None
+
+
 # D11 — obfuscation patterns (reference quality_validator.py:374-382)
-ADVERSARIAL_PATTERNS: dict[str, re.Pattern] = {
-    "spaced_email": re.compile(
-        r"\b[\w.+-]+(?:\s*\.\s*[\w+-]+)*\s+@\s+[\w-]+(?:\s*\.\s*[\w-]+)+"
-    ),
+ADVERSARIAL_PATTERNS: dict[str, re.Pattern | _LinearScan] = {
+    "spaced_email": _SpacedEmailScan(),
     "spaced_phone": re.compile(r"\b\d{3}\s+\d{3}\s+\d{4}\b"),
     "partial_ssn": re.compile(r"\b[Xx*]{3}-[Xx*]{2}-\d{4}\b"),
-    "base64_blob": re.compile(r"\b[A-Za-z0-9+/]{40,}={1,2}(?!\w)"),
+    # a blob is one [A-Za-z0-9+/] run from its first \b: a later start
+    # only shortens it ('=' ends the run: possessive is exact)
+    "base64_blob": _RunScan(
+        "[A-Za-z0-9+/]", r"(?=[A-Za-z0-9+/]{40})(?>[A-Za-z0-9+/]*?\b)",
+        r"\b[A-Za-z0-9+/]{40,}+={1,2}(?!\w)",
+    ),
     "hex_run": re.compile(r"\b[0-9a-fA-F]{32,}\b"),
 }
 

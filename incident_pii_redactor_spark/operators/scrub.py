@@ -6,6 +6,8 @@ Replaces the reference's asyncio 5-stage orchestration
 O1 "chosen design"): per batch — vectorized langid -> perplexity ->
 heuristic rules -> keep/drop verdict (+ per-rule flags), then the
 arbitrated detect/judge/splice/validate scrub on surviving docs only.
+A row whose scrub raises is quarantined (``keep=false``,
+``drop_reason='error:<Type>'``) instead of failing the task.
 
 Why one fused stage and not a ``withColumn`` chain of pandas UDFs:
 each pandas UDF is its own Python-worker round trip (serialize the
@@ -23,6 +25,7 @@ single biggest I/O win on Common-Crawl-shaped input (SURVEY.md §4.2).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,6 +39,8 @@ from incident_pii_redactor_spark.quality.scorer import (
     WEB_DEFAULT,
     quality_signals,
 )
+
+_log = logging.getLogger(__name__)
 
 # appended by the operator after the caller's id/passthrough columns
 RESULT_FIELDS = (
@@ -84,7 +89,16 @@ def _process_batch(
     for i, (flag, text) in enumerate(zip(keep, text_arr)):
         if not (flag or scrub_dropped):
             continue
-        r = scrub_document(text, policy, judge_fn=judge_fn)
+        try:
+            r = scrub_document(text, policy, judge_fn=judge_fn)
+        except Exception as e:
+            # exception path (Tuplex, VLDB'19): the row is quarantined with
+            # its cause and the task goes on; the default outputs above
+            # already read NULL text and no redactions
+            _log.exception("scrub raised; row %d of the batch quarantined", i)
+            out.at[i, "keep"] = False
+            out.at[i, "drop_reason"] = f"error:{type(e).__name__}"
+            continue
         scrubbed[i] = mask_toxic(r.text_scrubbed) if mask_toxicity else r.text_scrubbed
         n_red[i] = r.n_redactions
         by_type[i] = {k: int(v) for k, v in sorted(r.redactions_by_type.items())}

@@ -14,13 +14,15 @@ Execution model (SURVEY.md §3.4):
   completed buckets (none, with no Spark job, while it has no _SUCCESS)
   -> loop over the GROUPS of the remaining buckets: filter the input on
   the group's bucket ids, one narrow mapInPandas scrub pass, ONE write
-  partitioned by bucket (its row count observed on the write, no extra
-  count job), then one manifest row per bucket appended, built by
-  reading back only this group's written partitions. A crash loses at
-  most one in-flight group; restart skips everything manifested. Output
-  is byte-identical to a cold run because every per-row value is a pure
-  function of the row (md5 pseudonyms, no wall clock — completed_ts is a
-  job ARG, FIXTURES.md F4).
+  partitioned by bucket (its row count and quarantined rows observed on
+  the write, no extra count job), then one manifest row per bucket
+  appended, built by reading back only this group's written partitions.
+  A row whose scrub raises is quarantined (keep=false,
+  drop_reason='error:<Type>') and counted; it never fails the task.
+  A crash loses at most one in-flight group; restart skips everything
+  manifested. Output is byte-identical to a cold run because every
+  per-row value is a pure function of the row (md5 pseudonyms, no wall
+  clock — completed_ts is a job ARG, FIXTURES.md F4).
 
 Scale notes: the scrub itself is shuffle-free; the only shuffles are the
 per-bucket metric rollups (tiny) and the optional salted repartition for
@@ -162,7 +164,8 @@ def run(args, spark=None) -> dict:
             remaining[i: i + args.bucket_group_size]
             for i in range(0, len(remaining), args.bucket_group_size)
         ]
-        stats = {"groups_run": 0, "buckets_done": len(done), "rows": 0}
+        stats = {"groups_run": 0, "buckets_done": len(done), "rows": 0,
+                 "quarantined": 0}
         for group in groups:
             chunk = df.filter(F.col(BUCKET_COL).isin(group))
             if args.salt:
@@ -178,8 +181,11 @@ def run(args, spark=None) -> dict:
             # after a crash-between-output-and-manifest replaces the same
             # bucket partitions instead of duplicating them — the write is
             # idempotent per bucket, which is what makes resume exact
-            out.observe(obs, F.count(F.lit(1)).alias("rows")) \
-                .write.mode("overwrite").partitionBy(BUCKET_COL) \
+            out.observe(
+                obs, F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(F.col("drop_reason").startswith("error:"), 1))
+                .alias("quarantined"),
+            ).write.mode("overwrite").partitionBy(BUCKET_COL) \
                 .option("partitionOverwriteMode", "dynamic") \
                 .parquet(args.output)
             n = obs.get["rows"]
@@ -195,6 +201,7 @@ def run(args, spark=None) -> dict:
             stats["groups_run"] += 1
             stats["buckets_done"] += len(group)
             stats["rows"] += n
+            stats["quarantined"] += obs.get["quarantined"]
             if args.fail_after_groups and stats["groups_run"] >= args.fail_after_groups:
                 sys.exit(1)
         return stats

@@ -3,10 +3,12 @@ rerun, output must be byte-identical to a cold full run with no
 re-scrubbing of manifested buckets."""
 
 import shutil
+import sys
 
 import pandas as pd
 import pytest
 
+from incident_pii_redactor_spark.core.arbitration import judge_spans
 from jobs.scrub import parse_args, run
 
 
@@ -30,7 +32,7 @@ def cold_run(spark, pages_parquet, tmp_path_factory):
     )
     stats = run(args, spark=spark)
     assert stats["buckets_done"] == 8
-    assert stats["rows"] == 2000
+    assert stats["rows"] == 2000 and stats["quarantined"] == 0
     return _read_all(spark, str(d / "out"))
 
 
@@ -119,6 +121,78 @@ def test_scrub_job_caches_nothing_and_runs_no_count(
     m = spark.read.parquet(str(d / "mf")).toPandas()
     assert sorted(m["partition_id"]) == [0, 1, 2, 3]
     assert m["rows_in"].sum() == 2000
+
+
+_POISON = "zq-quarantine-marker"
+
+
+def _poison_judge(text, spans):
+    """A judge that fails on the one marked document and otherwise votes
+    like the built-in simulation."""
+    if _POISON in text:
+        raise ValueError("poisoned row")
+    return judge_spans(spans)
+
+
+def test_scrub_job_quarantines_a_row_whose_scrub_raises(
+        spark, pages_parquet, tmp_path_factory, monkeypatch):
+    """One bad row must not fail its task. It comes out keep=false with
+    drop_reason 'error:<Type>', NULL text_scrubbed and no redactions, the
+    job counts it, and every other row equals a run without the judge."""
+    import functools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import cloudpickle
+
+    import jobs.scrub as scrub_job
+    from incident_pii_redactor_spark.operators.scrub import quality_scrub
+    from incident_pii_redactor_spark.quality.scorer import quality_signals
+
+    d = tmp_path_factory.mktemp("quarantine")
+    table = pq.read_table(pages_parquet).slice(0, 400)
+    texts = table.column("text").to_pylist()
+    marked = next(
+        i for i, t in enumerate(texts) if t and quality_signals(
+            pd.Series([f"{t} {_POISON}"]))["keep"][0])
+    texts[marked] += f" {_POISON}"
+    table = table.set_column(table.schema.get_field_index("text"), "text",
+                             pa.array(texts, pa.string()))
+    src = str(d / "in.parquet")
+    pq.write_table(table, src)
+    poisoned_url = table.column("url")[marked].as_py()
+
+    def job(name):
+        stats = run(parse_args(
+            ["--input", src, "--output", str(d / name / "out"),
+             "--manifest", str(d / name / "mf"), "--n-buckets", "2",
+             "--bucket-group-size", "2"]), spark=spark)
+        out = spark.read.parquet(str(d / name / "out")).toPandas()
+        return stats, out.set_index("url").sort_index()
+
+    clean_stats, clean = job("clean")
+    # the judge reaches the Python workers in the UDF closure, where this
+    # test module cannot be imported: ship it by value
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    monkeypatch.setattr(scrub_job, "quality_scrub",
+                        functools.partial(quality_scrub,
+                                          judge_fn=_poison_judge))
+    try:
+        stats, out = job("poisoned")
+    finally:
+        cloudpickle.unregister_pickle_by_value(sys.modules[__name__])
+
+    assert clean_stats["quarantined"] == 0
+    assert stats["rows"] == clean_stats["rows"] == 400
+    assert stats["quarantined"] == 1
+    assert bool(clean.loc[poisoned_url, "keep"])
+    row = out.loc[poisoned_url]
+    assert not row["keep"] and row["drop_reason"] == "error:ValueError"
+    assert pd.isna(row["text_scrubbed"]) and row["n_redactions"] == 0
+    errors = out["drop_reason"].str.startswith("error:")
+    assert list(out.index[errors]) == [poisoned_url]
+    pd.testing.assert_frame_equal(out.drop(index=poisoned_url),
+                                  clean.drop(index=poisoned_url))
 
 
 @pytest.mark.parametrize("opt", ["--n-buckets", "--bucket-group-size"])
