@@ -44,7 +44,6 @@ def distributed_percent_rank(
     order_cols: list[Column | str],
     out: str = "pr",
     num_partitions: int = 32,
-    persist_parts: bool = True,
 ) -> DataFrame:
     """Add ``out`` = exact percent_rank of each row within its
     ``group_col`` group under ``order_cols`` (must end in a unique
@@ -55,22 +54,17 @@ def distributed_percent_rank(
     ``percent_rank()``: (rank-1)/(n-1) with bigint->double division on
     identical integers.
 
-    ``persist_parts`` (default True) persists the range-partitioned
-    frame so its TWO consumers — the offset aggregation and the local
-    ranking — read ONE materialization instead of re-running the whole
-    upstream lineage (measured: AQE does NOT reuse the two range
-    exchanges — the offset branch's is column-pruned narrower, so
-    canonical equality fails and the upstream recomputes). This is the
-    standard materialize-vs-recompute call for a two-pass rank; the
-    cache is keyed by the canonicalized plan (repeat invocations share
-    one entry) and lives until the session drops it — long-lived
-    callers ranking huge frames should pass False and manage their own
-    persist()/unpersist() around the call."""
+    The range-partitioned frame is persisted so its TWO consumers — the
+    offset aggregation and the local ranking — read ONE materialization
+    instead of re-running the whole upstream lineage (measured: AQE
+    does NOT reuse the two range exchanges — the offset branch's is
+    column-pruned narrower, so canonical equality fails and the
+    upstream recomputes). This is the standard materialize-vs-recompute
+    call for a two-pass rank; the cache is keyed by the canonicalized plan (repeat invocations share
+    one entry) and lives until the session drops it."""
     parts = df.repartitionByRange(
         num_partitions, F.col(group_col), *order_cols
-    ).withColumn("_pid", F.spark_partition_id())
-    if persist_parts:
-        parts = parts.persist()
+    ).withColumn("_pid", F.spark_partition_id()).persist()
     # offsets: rows of this group in EARLIER range partitions, and the
     # group total — both from one tiny (group, pid) count
     cnt = parts.groupBy(group_col, "_pid").agg(F.count("*").alias("_c"))

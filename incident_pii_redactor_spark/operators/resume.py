@@ -36,15 +36,18 @@ def with_bucket(df: DataFrame, key_col: str, n_buckets: int) -> DataFrame:
     )
 
 
-def committed(spark: SparkSession, path: str) -> bool:
-    """True when ``path/_SUCCESS`` exists on the path's OWN filesystem
-    (Hadoop FS API — a driver-local ``os.path.exists`` always said
-    False for hdfs://, s3a:// paths, so every restart silently
-    recomputed; review round 5)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
+def exists(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` exists on its OWN filesystem (Hadoop FS API: a
+    driver-local ``os.path.exists`` says False for hdfs://, s3a://)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(p))
+
+
+def committed(spark: SparkSession, path: str) -> bool:
+    """True when ``path/_SUCCESS`` exists (checked driver-locally, every
+    restart on hdfs:// or s3a:// silently recomputed; review round 5)."""
+    return exists(spark, path + "/_SUCCESS")
 
 
 def completed_buckets(spark: SparkSession, path: str, run_id: str) -> set[int]:

@@ -24,14 +24,15 @@ Scale design:
   docs). AQE still picks a broadcast at runtime whenever the list
   measures small, so small jobs lose nothing. Near-dup options that
   cannot run are rejected by parse_args, before any stage runs.
-* per-stage row counts (the job's lineage metrics) persist each
-  stage's output before counting and release the previous stage's
-  cache once the next is materialized, so every stage's lineage
-  executes exactly ONCE (count) + is then served from cache (next
-  stage + final write). Round-4 verdict: counting without persisting
-  replayed the full corpus scan ~6x with all stages enabled.
-  --no-stage-counts drops the counts AND the caches entirely for
-  production runs where the manifest/output row count is enough.
+* every stage ends at one boundary, ``_stage``: an eager
+  ``localCheckpoint`` with an Observation of the stage's row count.
+  Each stage reads its input more than once (self-joins), so each is
+  materialized once and its count rides that one job: no persist, no
+  count job, and the input is scanned once (left to recompute from
+  lineage, --mode both reads it 12 times). Trade-off: localCheckpoint
+  blocks live on the executors and cannot be recomputed, so a lost
+  executor fails the job; the output is overwritten, so rerun it.
+  --no-stage-counts is accepted and ignored.
 * min-url-wins per pair is one union-by-min step, not full connected
   components: for a chain A-B-C it keeps A and drops B and C, which is
   the standard first-order near-dup policy (full CC costs an iterative
@@ -126,11 +127,9 @@ def parse_args(argv=None):
                         "drop. Runs after the doc-level modes, so the "
                         "surviving corpus defines first-occurrence order")
     p.add_argument("--no-stage-counts", action="store_true",
-                   help="skip per-stage row counts (and their persist "
-                        "caches): stats carries rows_out only, each "
-                        "stage's lineage pipelines straight into the "
-                        "final write with zero extra actions — the "
-                        "production setting at 10^12 docs")
+                   help="no-op, kept for old callers: per-stage counts "
+                        "ride each stage's one materialization and cost "
+                        "no extra job")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
     # fail before the input read and the earlier stages run; 0-word
@@ -149,30 +148,13 @@ def parse_args(argv=None):
     return args
 
 
-class _StageCounter:
-    """Persist -> count -> release-previous per stage so lineage never
-    replays: the count materializes the new stage's cache, the next
-    stage (or the final write) reads FROM that cache, and only then is
-    the previous stage's cache dropped. Disabled = identity."""
-
-    def __init__(self, enabled: bool):
-        self.enabled = enabled
-        self._prev = None
-
-    def checkpoint(self, df, stats: dict, key: str):
-        if not self.enabled:
-            return df
-        df = df.persist()
-        stats[key] = df.count()
-        if self._prev is not None:
-            self._prev.unpersist()
-        self._prev = df
-        return df
-
-    def release(self):
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._prev = None
+def _stage(df, stats: dict, key: str):
+    """The stage boundary: materialize ``df`` once, eagerly, and record
+    its row count in ``stats[key]`` from an Observation on that job."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    stats[key] = obs.get["n"]
+    return df
 
 
 def near_dedup(df, args):
@@ -225,7 +207,6 @@ def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
         spark = build_session("pages-dedup", master=args.master)
-    ctr = _StageCounter(enabled=not args.no_stage_counts)
     try:
         df = read_pages(spark, args.input)
         if args.from_html:
@@ -241,7 +222,7 @@ def run(args, spark=None) -> dict:
 
             df = with_clean_text(df)
         stats: dict = {}
-        df = ctr.checkpoint(df, stats, "rows_in")
+        df = _stage(df, stats, "rows_in")
 
         if args.against:
             # Incremental snapshot ingestion: anti-join the NEW
@@ -287,15 +268,14 @@ def run(args, spark=None) -> dict:
                     build_bloom, filter_might_contain,
                 )
 
-                n_new = stats.get("rows_in") or df.count()
                 bloom, k, m = build_bloom(
-                    df, "_h", expected_keys=max(n_new, 1),
+                    df, "_h", expected_keys=max(stats["rows_in"], 1),
                     fpp=args.against_bloom_fpp)
                 stats["against_bloom_bytes"] = m // 8
                 hist = filter_might_contain(hist, "_h", bloom, k, m)
             hist = hist.distinct()
             df = df.join(hist, "_h", "left_anti").drop("_h")
-            df = ctr.checkpoint(df, stats, "rows_after_against")
+            df = _stage(df, stats, "rows_after_against")
 
         if args.url_canonical:
             # latest-wins per canonical URL: one hash-aggregate carrying
@@ -324,7 +304,7 @@ def run(args, spark=None) -> dict:
                 & keyed["warc_ts"].eqNullSafe(keep["_k_ts"]),
                 "left_semi",
             ).drop("_cu"))
-            df = ctr.checkpoint(df, stats, "rows_after_url_canonical")
+            df = _stage(df, stats, "rows_after_url_canonical")
 
         if args.mode in ("exact", "both"):
             # keeper identity is (url, content-hash), not url alone
@@ -352,11 +332,11 @@ def run(args, spark=None) -> dict:
                 & (content["_h"] == keepers["_k_h"]),
                 "left_semi",
             ).drop("_h").unionByName(null_text))
-            df = ctr.checkpoint(df, stats, "rows_after_exact")
+            df = _stage(df, stats, "rows_after_exact")
 
         if args.mode in ("near", "both"):
             df = near_dedup(df, args)
-            df = ctr.checkpoint(df, stats, "rows_after_near")
+            df = _stage(df, stats, "rows_after_near")
 
         if args.paragraph:
             from incident_pii_redactor_spark.functions.dedup import (
@@ -381,7 +361,7 @@ def run(args, spark=None) -> dict:
                 .select("_pid", F.col("text_dedup").alias("text"))
             # inner join: docs with zero surviving paragraphs drop here
             df = keyed.drop("text").join(rewritten, on="_pid").drop("_pid")
-            df = ctr.checkpoint(df, stats, "rows_after_paragraph")
+            df = _stage(df, stats, "rows_after_paragraph")
 
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows_out")) \
@@ -389,7 +369,6 @@ def run(args, spark=None) -> dict:
         stats["rows_out"] = obs.get["rows_out"]
         return stats
     finally:
-        ctr.release()
         if owns:
             spark.stop()
 

@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
 
-from pyspark.sql import Window
+from pyspark.sql import Observation, Window
 from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.functions.sampling import shard_assignment
@@ -77,16 +77,17 @@ def run(args, spark=None) -> dict:
         # sort key must include 'shard': the writer's required ordering
         # is [shard]; sorting by pos alone makes Spark insert its own
         # non-contractually-stable sort on shard above ours, which can
-        # interleave a shard's equal-key runs on spill (review round 3)
-        (out.sortWithinPartitions("shard", "pos")
+        # interleave a shard's equal-key runs on spill (review round 3).
+        # Rows and shards ride the write as an Observation (distinct
+        # aggregates are rejected there; a set of <= n_shards ints is not)
+        obs = Observation()
+        (out.observe(obs, F.count(F.lit(1)).alias("rows"),
+                     F.size(F.collect_set("shard")).alias("shards"))
+            .sortWithinPartitions("shard", "pos")
             .write.mode("overwrite")
             .partitionBy("shard")
             .parquet(args.output))
-        written = spark.read.parquet(args.output)
-        return {
-            "rows": written.count(),
-            "shards": written.select("shard").distinct().count(),
-        }
+        return dict(obs.get)
     finally:
         if owns:
             spark.stop()

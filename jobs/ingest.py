@@ -17,9 +17,10 @@ authoritative pages table, ready for ``jobs/scrub.py`` /
 Stage shapes: CDX parse is pure Catalyst over splittable text; digest
 dedup is one map-side ``min_by`` aggregate (uniform SHA-1 keys); the
 robots verdict is one host equi-join + one ``mapInPandas`` with a
-per-batch parse cache; the fetch is one task per WARC file. A summary
-line per stage goes to stdout (counts come from the SAME persisted
-frame the next stage consumes — no lineage replay)."""
+per-batch parse cache; the fetch is one task per WARC file. Each stage
+has one consumer, so nothing is materialized: the stage counts are
+Observations that ride the one write, and their summary goes to stdout
+as one line."""
 
 from __future__ import annotations
 
@@ -34,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import argparse
 import json
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.plans import build_session
@@ -67,13 +69,17 @@ def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
         spark = build_session("crawl-ingest", master=args.master)
-    stats: dict = {}
     try:
+        obs: dict = {}
+
+        def observed(df, key):
+            obs[key] = Observation()
+            return df.observe(obs[key], F.count(F.lit(1)).alias("n"))
+
         cdx = read_cdx(spark, args.cdx)
-        sel = cdx_prefetch_select(
+        sel = observed(cdx_prefetch_select(
             cdx, mimes=tuple(args.mimes),
-            drop_junk_urls=not args.keep_junk_urls).persist()
-        stats["captures_selected"] = sel.count()
+            drop_junk_urls=not args.keep_junk_urls), "captures_selected")
 
         if args.robots:
             from incident_pii_redactor_spark.sources.robots import (
@@ -82,17 +88,13 @@ def run(args, spark=None) -> dict:
 
             robots = spark.read.parquet(args.robots)
             verdicts = robots_filter(sel, robots, agent=args.agent)
-            allowed = (verdicts.filter(F.col("robots_allowed"))
-                       .drop("robots_allowed").persist())
-            stats["captures_robots_allowed"] = allowed.count()
-            sel.unpersist()
-            sel = allowed
+            sel = observed(verdicts.filter(F.col("robots_allowed"))
+                           .drop("robots_allowed"), "captures_robots_allowed")
 
-        pages = read_warc_selected(spark, args.warc_dir, sel).persist()
-        stats["pages_fetched"] = pages.count()
+        pages = observed(read_warc_selected(spark, args.warc_dir, sel),
+                         "pages_fetched")
         pages.write.mode("overwrite").parquet(args.output)
-        sel.unpersist()
-        pages.unpersist()
+        stats = {key: o.get["n"] for key, o in obs.items()}
         print("INGEST " + json.dumps(stats))
         return stats
     finally:

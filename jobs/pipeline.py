@@ -50,10 +50,6 @@ def parse_args(argv=None):
     p.add_argument("--from-html", action="store_true",
                    help="scrub stage derives text from the html column")
     p.add_argument("--exact-clusters", action="store_true")
-    p.add_argument("--no-stage-counts", action="store_true",
-                   help="forwarded to the dedup stage: skip per-stage "
-                        "row counts and their caches (production "
-                        "setting; see jobs/dedup.py)")
     p.add_argument("--salt", action="store_true")
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--bucket-group-size", type=int, default=8)
@@ -108,8 +104,6 @@ def run(args, spark=None) -> dict:
                 dargs.append("--from-html")
             if args.exact_clusters:
                 dargs.append("--exact-clusters")
-            if args.no_stage_counts:
-                dargs.append("--no-stage-counts")
             stats["dedup"] = dedup_run(dedup_args(dargs), spark=spark)
 
         sargs = ["--input", deduped,

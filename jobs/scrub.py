@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from incident_pii_redactor_spark.operators.resume import (
     BUCKET_COL,
     completed_buckets,
+    exists,
     manifest_rows_from_output,
     with_bucket,
 )
@@ -190,11 +191,14 @@ def run(args, spark=None) -> dict:
                 .parquet(args.output)
             n = obs.get["rows"]
             if n:
-                # only this group's partitions, never the whole output
-                # root (its listing grows with every group written); the
-                # glob skips buckets that got no rows
-                written = spark.read.option("basePath", args.output).parquet(
-                    f"{args.output}/{BUCKET_COL}={{{','.join(map(str, group))}}}")
+                # only this group's bucket dirs that got rows, never the
+                # whole output root (its listing grows with every group
+                # written); concrete dirs, since Spark probes a lone glob
+                # path as a directory and logs a FileNotFoundException
+                parts = [p for p in (f"{args.output}/{BUCKET_COL}={b}"
+                                     for b in group) if exists(spark, p)]
+                written = spark.read.option("basePath", args.output) \
+                    .parquet(*parts)
                 manifest_rows_from_output(
                     written, args.run_id, args.completed_ts,
                 ).write.mode("append").parquet(args.manifest)

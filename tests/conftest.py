@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -16,6 +17,28 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_cache_or_count(spark):
+    """A context manager under which DataFrame.persist, .cache and .count
+    fail: a batch job takes its row counts from Observations on the
+    actions it runs anyway, and caches nothing."""
+    cls = type(spark.range(1))
+
+    def forbidden(name):
+        def fail(self, *a, **k):
+            raise AssertionError(f"batch job called DataFrame.{name}")
+        return fail
+
+    @contextlib.contextmanager
+    def guard():
+        with pytest.MonkeyPatch.context() as m:
+            for name in ("persist", "cache", "count"):
+                m.setattr(cls, name, forbidden(name))
+            yield
+
+    return guard
 
 
 @pytest.fixture(scope="session")

@@ -123,9 +123,10 @@ def test_index_first_selective_fetch_end_to_end(tmp_path, spark):
         assert by_url[row.url] == bytes(row.html)
 
 
-def test_ingest_job_end_to_end_with_robots(tmp_path, spark):
+def test_ingest_job_end_to_end_with_robots(tmp_path, spark,
+                                          no_cache_or_count):
     """jobs/ingest.py: CDX select -> robots filter -> selective fetch ->
-    pages parquet, with per-stage counts."""
+    pages parquet, with per-stage counts observed on the one write."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -151,10 +152,11 @@ def test_ingest_job_end_to_end_with_robots(tmp_path, spark):
     n_blocked = pages.url.str.contains(blocked_host, regex=False).sum()
     assert n_blocked > 0
 
-    stats = run(parse_args(
-        ["--cdx", cdx_path, "--warc-dir", str(d),
-         "--output", str(tmp_path / "out"),
-         "--robots", str(tmp_path / "robots.parquet")]), spark=spark)
+    with no_cache_or_count():
+        stats = run(parse_args(
+            ["--cdx", cdx_path, "--warc-dir", str(d),
+             "--output", str(tmp_path / "out"),
+             "--robots", str(tmp_path / "robots.parquet")]), spark=spark)
     assert stats["captures_selected"] == 25
     assert stats["captures_robots_allowed"] == 25 - n_blocked
     assert stats["pages_fetched"] == 25 - n_blocked

@@ -98,25 +98,16 @@ def test_resume_raises_on_corrupt_committed_manifest(spark, pages_parquet,
 
 
 def test_scrub_job_caches_nothing_and_runs_no_count(
-        spark, pages_parquet, tmp_path_factory, monkeypatch):
+        spark, pages_parquet, tmp_path_factory, no_cache_or_count):
     """Rows are counted by an Observation on the write and the manifest
     is built from the written partitions: no group caches its output or
     runs a separate count job."""
     d = tmp_path_factory.mktemp("no_cache")
-    cls = type(spark.range(1))
-
-    def forbidden(name):
-        def fail(self, *a, **k):
-            raise AssertionError(f"scrub job called DataFrame.{name}")
-        return fail
-
-    for name in ("persist", "cache", "count"):
-        monkeypatch.setattr(cls, name, forbidden(name))
-    stats = run(parse_args(
-        ["--input", pages_parquet, "--output", str(d / "out"),
-         "--manifest", str(d / "mf"), "--n-buckets", "4",
-         "--bucket-group-size", "2"]), spark=spark)
-    monkeypatch.undo()
+    with no_cache_or_count():
+        stats = run(parse_args(
+            ["--input", pages_parquet, "--output", str(d / "out"),
+             "--manifest", str(d / "mf"), "--n-buckets", "4",
+             "--bucket-group-size", "2"]), spark=spark)
     assert stats["groups_run"] == 2 and stats["rows"] == 2000
     m = spark.read.parquet(str(d / "mf")).toPandas()
     assert sorted(m["partition_id"]) == [0, 1, 2, 3]
@@ -250,7 +241,7 @@ def test_manifest_lineage_counters(spark, pages_parquet, tmp_path_factory):
     assert reds.get("email", 0) > 100  # every kept pii doc has 2 emails
 
 
-def test_dedup_job_end_to_end(spark, tmp_path_factory):
+def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
     import pyarrow as pa
     import pyarrow.parquet as pq
     import datetime as dt
@@ -278,9 +269,10 @@ def test_dedup_job_end_to_end(spark, tmp_path_factory):
         preserve_index=False)
     pq.write_table(tbl, str(d / "pages.parquet"))
 
-    stats = dedup_run(dedup_args(
-        ["--input", str(d / "pages.parquet"), "--output", str(d / "out"),
-         "--mode", "both"]), spark=spark)
+    with no_cache_or_count():
+        stats = dedup_run(dedup_args(
+            ["--input", str(d / "pages.parquet"), "--output", str(d / "out"),
+             "--mode", "both"]), spark=spark)
     assert stats["rows_in"] == 4
     assert stats["rows_after_exact"] == 3   # exact dup gone
     urls = {r.url for r in spark.read.parquet(str(d / "out")).collect()}
@@ -367,13 +359,13 @@ def test_dedup_exact_mode_keeps_null_url_row(spark, tmp_path_factory):
 
 
 def test_dedup_input_scans_once_per_stage(spark, tmp_path_factory,
-                                          monkeypatch):
-    """Round-4 verdict: per-stage ``stats[...] = df.count()`` with no
-    persist replayed the whole input lineage ~6x. The fix persists each
-    stage before counting, so the INPUT scan must execute exactly once
-    for the whole job. Instrumented by wrapping read_pages with a
-    row-counting accumulator: rows observed == rows_in proves one scan
-    (the un-persisted job would observe a multiple of it)."""
+                                          monkeypatch, no_cache_or_count):
+    """Every stage reads its input more than once (self-joins), so each
+    is materialized once and counted on that one job: the INPUT scan
+    executes exactly once for the whole job, with no persist and no
+    count. Instrumented by wrapping read_pages with a row-counting
+    accumulator: rows observed == rows_in proves one scan (recomputing
+    each stage from lineage read it 12x with --mode both)."""
     import datetime as dt
 
     import pandas as pd
@@ -398,49 +390,40 @@ def test_dedup_input_scans_once_per_stage(spark, tmp_path_factory,
         preserve_index=False)
     pq.write_table(tbl, str(d / "pages.parquet"))
 
-    acc = spark.sparkContext.accumulator(0)
+    def scanned(out, extra):
+        acc = spark.sparkContext.accumulator(0)
 
-    def counting_read(sp, path):
-        real = read_pages(sp, path)
+        def counting_read(sp, path):
+            real = read_pages(sp, path)
 
-        def tap(it):
-            for pdf in it:
-                acc.add(len(pdf))
-                yield pdf
+            def tap(it):
+                for pdf in it:
+                    acc.add(len(pdf))
+                    yield pdf
 
-        return real.mapInPandas(tap, real.schema)
+            return real.mapInPandas(tap, real.schema)
 
-    monkeypatch.setattr(dmod, "read_pages", counting_read)
-    stats = dmod.run(dmod.parse_args(
-        ["--input", str(d / "pages.parquet"),
-         "--output", str(d / "out"), "--mode", "both",
-         "--url-canonical"]), spark=spark)
-    assert stats["rows_in"] == 8
-    assert acc.value == 8, (
-        f"input scanned {acc.value / 8:.1f}x — a stage count is "
-        "replaying lineage instead of reading the stage cache")
+        monkeypatch.setattr(dmod, "read_pages", counting_read)
+        with no_cache_or_count():
+            stats = dmod.run(dmod.parse_args(
+                ["--input", str(d / "pages.parquet"),
+                 "--output", str(d / out)] + extra), spark=spark)
+        return stats, acc.value
 
-    # opt-out path: zero stage counts, zero persists — stats carries
-    # only the written-output count
-    acc2 = spark.sparkContext.accumulator(0)
+    stats, n_read = scanned("out", ["--mode", "both", "--url-canonical",
+                                    "--paragraph"])
+    assert stats == {k: 8 for k in (
+        "rows_in", "rows_after_url_canonical", "rows_after_exact",
+        "rows_after_near", "rows_after_paragraph", "rows_out")}
+    assert n_read == 8, (
+        f"input scanned {n_read / 8:.1f}x — a stage is replaying "
+        "lineage instead of reading the previous stage's checkpoint")
 
-    def counting_read2(sp, path):
-        real = read_pages(sp, path)
-
-        def tap(it):
-            for pdf in it:
-                acc2.add(len(pdf))
-                yield pdf
-
-        return real.mapInPandas(tap, real.schema)
-
-    monkeypatch.setattr(dmod, "read_pages", counting_read2)
-    stats2 = dmod.run(dmod.parse_args(
-        ["--input", str(d / "pages.parquet"),
-         "--output", str(d / "out2"), "--mode", "exact",
-         "--no-stage-counts"]), spark=spark)
-    assert set(stats2) == {"rows_out"}
-    assert stats2["rows_out"] == 8
+    # --no-stage-counts is a no-op: same one scan, same counts
+    stats2, n_read2 = scanned("out2", ["--mode", "exact",
+                                       "--no-stage-counts"])
+    assert n_read2 == 8
+    assert stats2 == {"rows_in": 8, "rows_after_exact": 8, "rows_out": 8}
 
 
 def test_dedup_drop_list_is_not_force_broadcast(spark):
@@ -811,7 +794,8 @@ def test_dedup_job_url_canonical_latest_wins(spark, tmp_path_factory):
                    "https://a.example/p/2": "unrelated page"}
 
 
-def test_export_job_shard_layout(spark, pages_parquet, tmp_path_factory):
+def test_export_job_shard_layout(spark, pages_parquet, tmp_path_factory,
+                                 no_cache_or_count):
     """jobs/export.py writes shard=K dirs; each shard's files hold rows
     in ascending pos with tiling tok_offsets, and the union equals the
     input — the layout a packed training loader seeks into."""
@@ -822,9 +806,10 @@ def test_export_job_shard_layout(spark, pages_parquet, tmp_path_factory):
     from jobs.export import parse_args as eargs, run as erun
 
     d = tmp_path_factory.mktemp("export")
-    stats = erun(eargs(["--input", pages_parquet,
-                        "--output", str(d / "shards"),
-                        "--n-shards", "8"]), spark=spark)
+    with no_cache_or_count():
+        stats = erun(eargs(["--input", pages_parquet,
+                            "--output", str(d / "shards"),
+                            "--n-shards", "8"]), spark=spark)
     assert stats["shards"] == 8
     n_in = spark.read.parquet(pages_parquet).count()
     assert stats["rows"] == n_in
@@ -1030,7 +1015,8 @@ def test_dedup_job_against_history_respects_clean_unicode(
     assert urls == {"https://n/2"}
 
 
-def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory):
+def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory,
+                                           no_cache_or_count):
     """functions/bloom.py semijoin pushdown: --against-bloom must
     produce EXACTLY the plain --against output (false positives only
     add rows to the exact anti-join; false negatives are impossible),
@@ -1068,10 +1054,11 @@ def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory):
 
     base = ["--input", str(d / "new.parquet"),
             "--against", str(d / "history.parquet"), "--mode", "exact"]
-    plain = drun(dargs(base + ["--output", str(d / "out_plain")]),
-                 spark=spark)
-    bloomed = drun(dargs(base + ["--output", str(d / "out_bloom"),
-                                 "--against-bloom"]), spark=spark)
+    with no_cache_or_count():
+        plain = drun(dargs(base + ["--output", str(d / "out_plain")]),
+                     spark=spark)
+        bloomed = drun(dargs(base + ["--output", str(d / "out_bloom"),
+                                     "--against-bloom"]), spark=spark)
     assert plain["rows_after_against"] == 25
     assert bloomed["rows_after_against"] == 25
     assert bloomed["against_bloom_bytes"] > 0
