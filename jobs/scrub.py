@@ -14,9 +14,11 @@ Execution model (SURVEY.md §3.4):
   completed buckets (none, with no Spark job, while it has no _SUCCESS)
   -> loop over the GROUPS of the remaining buckets: filter the input on
   the group's bucket ids, one narrow mapInPandas scrub pass, ONE write
-  partitioned by bucket (its row count and quarantined rows observed on
-  the write, no extra count job), then one manifest row per bucket
-  appended, built by reading back only this group's written partitions.
+  partitioned by bucket (its row count, quarantined rows and each
+  bucket's manifest counters observed on the write, no extra count job),
+  ONE typed read-back rolling up redactions_by_type over only the bucket
+  dirs the observation says got rows, then one manifest append of the
+  rows the driver built from both.
   A row whose scrub raises is quarantined (keep=false,
   drop_reason='error:<Type>') and counted; it never fails the task.
   A crash loses at most one in-flight group; restart skips everything
@@ -25,9 +27,9 @@ Execution model (SURVEY.md §3.4):
   clock — completed_ts is a job ARG, FIXTURES.md F4).
 
 Scale notes: the scrub itself is shuffle-free; the only shuffles are the
-per-bucket metric rollups (tiny) and the optional salted repartition for
-skewed inputs (--salt on). html:binary is pruned at the parquet scan
-because the operator selects only (url, text).
+per-group redactions_by_type rollup (tiny) and the optional salted
+repartition for skewed inputs (--salt on). html:binary is pruned at the
+parquet scan because the operator selects only (url, text).
 """
 
 from __future__ import annotations
@@ -47,9 +49,9 @@ from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.operators.resume import (
     BUCKET_COL,
+    append_manifest,
+    bucket_counters,
     completed_buckets,
-    exists,
-    manifest_rows_from_output,
     with_bucket,
 )
 from incident_pii_redactor_spark.operators.salting import salted_repartition
@@ -186,26 +188,17 @@ def run(args, spark=None) -> dict:
                 obs, F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(F.col("drop_reason").startswith("error:"), 1))
                 .alias("quarantined"),
+                *bucket_counters(group),
             ).write.mode("overwrite").partitionBy(BUCKET_COL) \
                 .option("partitionOverwriteMode", "dynamic") \
                 .parquet(args.output)
-            n = obs.get["rows"]
-            if n:
-                # only this group's bucket dirs that got rows, never the
-                # whole output root (its listing grows with every group
-                # written); concrete dirs, since Spark probes a lone glob
-                # path as a directory and logs a FileNotFoundException
-                parts = [p for p in (f"{args.output}/{BUCKET_COL}={b}"
-                                     for b in group) if exists(spark, p)]
-                written = spark.read.option("basePath", args.output) \
-                    .parquet(*parts)
-                manifest_rows_from_output(
-                    written, args.run_id, args.completed_ts,
-                ).write.mode("append").parquet(args.manifest)
+            observed = obs.get
+            append_manifest(spark, args.manifest, args.output, group,
+                            observed, args.run_id, args.completed_ts)
             stats["groups_run"] += 1
             stats["buckets_done"] += len(group)
-            stats["rows"] += n
-            stats["quarantined"] += obs.get["quarantined"]
+            stats["rows"] += observed["rows"]
+            stats["quarantined"] += observed["quarantined"]
             if args.fail_after_groups and stats["groups_run"] >= args.fail_after_groups:
                 sys.exit(1)
         return stats

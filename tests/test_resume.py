@@ -99,9 +99,8 @@ def test_resume_raises_on_corrupt_committed_manifest(spark, pages_parquet,
 
 def test_scrub_job_caches_nothing_and_runs_no_count(
         spark, pages_parquet, tmp_path_factory, no_cache_or_count):
-    """Rows are counted by an Observation on the write and the manifest
-    is built from the written partitions: no group caches its output or
-    runs a separate count job."""
+    """Rows and the manifest counters are observed on the write: no group
+    caches its output or runs a separate count job."""
     d = tmp_path_factory.mktemp("no_cache")
     with no_cache_or_count():
         stats = run(parse_args(
@@ -158,6 +157,7 @@ def test_scrub_job_quarantines_a_row_whose_scrub_raises(
             ["--input", src, "--output", str(d / name / "out"),
              "--manifest", str(d / name / "mf"), "--n-buckets", "2",
              "--bucket-group-size", "2"]), spark=spark)
+        _assert_manifest_is_rollup_of_output(spark, d / name)
         out = spark.read.parquet(str(d / name / "out")).toPandas()
         return stats, out.set_index("url").sort_index()
 
@@ -239,6 +239,122 @@ def test_manifest_lineage_counters(spark, pages_parquet, tmp_path_factory):
         for k, v in (d_ or {}).items():
             reds[k] = reds.get(k, 0) + v
     assert reds.get("email", 0) > 100  # every kept pii doc has 2 emails
+
+
+def _rollup_of_output(spark, out, run_id="run1",
+                      completed_ts="2025-01-01T00:00:00"):
+    """Reference manifest: the grouped rollup of the written output that
+    the job ran before the counters rode the write's Observation."""
+    import pyspark.sql.functions as F
+
+    written = spark.read.parquet(out)
+    per_bucket = (
+        written.select("_bucket", F.explode("redactions_by_type")
+                       .alias("key", "value"))
+        .groupBy("_bucket", "key").agg(F.sum("value").alias("cnt"))
+        .groupBy("_bucket")
+        .agg(F.map_from_entries(F.sort_array(F.collect_list(
+            F.struct("key", "cnt")))).alias("redactions_by_type")))
+    stats = written.groupBy("_bucket").agg(
+        F.count("*").alias("rows_in"),
+        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+        F.sum((~F.col("keep")).cast("long")).alias("rows_dropped"),
+        F.hex(F.expr("bit_xor(xxhash64(url))")).alias("input_fingerprint"))
+    return stats.join(per_bucket, "_bucket", "left").select(
+        F.lit(run_id).alias("run_id"),
+        F.col("_bucket").alias("partition_id"),
+        "input_fingerprint", "rows_in", "rows_kept", "rows_dropped",
+        F.coalesce("redactions_by_type",
+                   F.expr("cast(map() as map<string,bigint>)"))
+        .alias("redactions_by_type"),
+        F.lit(completed_ts).cast("timestamp").alias("completed_ts"))
+
+
+def _manifest_pdf(df):
+    """Rows sorted by bucket; maps as item lists, so key order counts."""
+    pdf = df.toPandas().sort_values("partition_id").reset_index(drop=True)
+    pdf["redactions_by_type"] = [list(m.items())
+                                 for m in pdf["redactions_by_type"]]
+    return pdf
+
+
+def _assert_manifest_is_rollup_of_output(spark, d):
+    """The job's manifest equals the reference rollup of its output in
+    schema, values and map key order."""
+    manifest = spark.read.parquet(str(d / "mf"))
+    expected = _rollup_of_output(spark, str(d / "out"))
+    assert manifest.schema.simpleString() == expected.schema.simpleString()
+    pd.testing.assert_frame_equal(_manifest_pdf(manifest),
+                                  _manifest_pdf(expected))
+    return manifest
+
+
+def _redaction_free_bucket_input(spark, pages_parquet, path):
+    """The first 40 pages, where every page of bucket 0 (of 4) gets a
+    PII-free text the quality filter drops: that bucket has rows and no
+    redactions, the others have both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from incident_pii_redactor_spark.operators.resume import with_bucket
+
+    table = pq.read_table(pages_parquet).slice(0, 40)
+    urls = spark.createDataFrame(table.select(["url"]).to_pandas())
+    buckets = with_bucket(urls, "url", 4).toPandas()["_bucket"]
+    texts = ["no pii here" if b == 0 else t
+             for t, b in zip(table.column("text").to_pylist(), buckets)]
+    pq.write_table(table.set_column(
+        table.schema.get_field_index("text"), "text",
+        pa.array(texts, pa.string())), path)
+
+
+@pytest.mark.parametrize("case", ["cold", "resumed", "redaction_free_bucket"])
+def test_manifest_is_rollup_of_written_output(spark, pages_parquet,
+                                              tmp_path_factory, case):
+    """Differential: manifest rows come from the write's observed counters
+    and one redaction rollup. At 8 buckets in groups of 3 the last group
+    is uneven; the resumed run appends to a manifest its first attempt
+    committed after one group."""
+    d = tmp_path_factory.mktemp(f"mf_{case}")
+    src, n_buckets = pages_parquet, "8"
+    if case == "redaction_free_bucket":
+        src, n_buckets = str(d / "in.parquet"), "4"
+        _redaction_free_bucket_input(spark, pages_parquet, src)
+    base = ["--input", src, "--output", str(d / "out"),
+            "--manifest", str(d / "mf"), "--n-buckets", n_buckets,
+            "--bucket-group-size", "3"]
+    if case == "resumed":
+        with pytest.raises(SystemExit):
+            run(parse_args(base + ["--fail-after-groups", "1"]), spark=spark)
+    run(parse_args(base), spark=spark)
+    m = _assert_manifest_is_rollup_of_output(spark, d).toPandas()
+    assert sorted(m["partition_id"]) == list(range(int(n_buckets)))
+    if case == "redaction_free_bucket":
+        free = m.set_index("partition_id").loc[0]
+        assert free["rows_in"] > 0 and free["redactions_by_type"] == {}
+        assert all(m.loc[m.partition_id > 0, "redactions_by_type"])
+
+
+def test_scrub_job_count(spark, pages_parquet, tmp_path_factory):
+    """One run of 2 groups (8 buckets, 4 per group) runs 11 Spark jobs:
+    read_pages' 100-row sample check, then per group 2 for the write (the scan's
+    parallelism exchange and the write), 2 for the redaction rollup and 1
+    for the manifest append. Building the manifest by re-reading the
+    group's output with schema inference, two aggregations and a join
+    took 17."""
+    d = tmp_path_factory.mktemp("job_count")
+    sc = spark.sparkContext
+    sc.setJobGroup("scrub_job_count", "scrub job count")
+    try:
+        stats = run(parse_args(
+            ["--input", pages_parquet, "--output", str(d / "out"),
+             "--manifest", str(d / "mf"), "--n-buckets", "8",
+             "--bucket-group-size", "4"]), spark=spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["groups_run"] == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("scrub_job_count")) == 11
 
 
 def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
