@@ -7,6 +7,13 @@ full sort); for a 10^9-vector corpus the LSH variant hashes each vector
 to sign-bit buckets (deterministic hyperplanes from a seeded hash — no
 RNG), so a query touches only its bucket's candidates. Hot buckets are a
 skew concern -> probe multiple buckets and let AQE split them.
+
+Dim (the vector length) is never probed with a Spark job: UDFs read it
+off their Arrow batch (``_vectors``), trainers off the centroids they
+collect, and ``embedding_near_dup_pairs`` observes it on the band-key
+checkpoint it runs anyway. Vectors of different lengths raise
+ValueError naming the lengths. IVF, PQ and k-means share one quantizer
+core: ``_sign_codes``, ``_centroid_means`` and ``_nearest``.
 """
 
 from __future__ import annotations
@@ -71,7 +78,7 @@ def cosine_topk(
     )
 
 
-# --- LSH ANN -----------------------------------------------------------------
+# --- quantizer core: the kernels every sign-LSH, IVF, PQ and k-means path runs
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Seeded-PCG Gaussian hyperplanes — deterministic for a given seed on
@@ -84,26 +91,87 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def signbit_bucket_udf(dim: int, n_planes: int = 8, seed: int = 42):
-    """Vectorized pandas UDF: embedding -> int bucket of sign bits.
-    One numpy matmul per Arrow batch (no per-row Python)."""
-    from pyspark.sql.functions import pandas_udf
+def _vectors(emb: pd.Series, dim: int | None = None) -> np.ndarray:
+    """One batch of embeddings -> (n, dim) float64 matrix, ``dim`` being
+    the batch's own vector length unless given. A NULL vector becomes a
+    zero row (callers that must not score it mask their output); vectors
+    of different lengths raise ValueError naming the lengths. float64
+    BEFORE any mean or matmul: Arrow delivers array<float> as float32,
+    and a float32 mean drifts ~1e-8 from the float64 fixture replays."""
+    lens = {len(v) for v in emb if v is not None}
+    if dim is not None:
+        lens.add(dim)
+    if len(lens) > 1:
+        raise ValueError(
+            f"ragged embedding column: vector lengths {sorted(lens)}")
+    mat = np.zeros((len(emb), lens.pop() if lens else 0))
+    for i, v in enumerate(emb):
+        if v is not None:
+            mat[i] = v
+    return mat
 
-    planes = _hyperplanes(dim, n_planes, seed)
+
+def _sign_codes(mat: np.ndarray, n_bits: int, seed: int,
+                group: int | None = None) -> np.ndarray:
+    """Sign-LSH codes: the sign bits of each row of ``mat`` against
+    ``_hyperplanes(dim, n_bits, seed)`` for the matrix's own dim, packed
+    LSB first in groups of ``group`` bits (default: one group of all
+    ``n_bits``) -> (n, n_bits // group) int32. One matmul per batch."""
+    group = group or n_bits
+    signs = (mat @ _hyperplanes(mat.shape[1], n_bits, seed).T) > 0
+    return (signs.reshape(len(mat), n_bits // group, group)
+            @ (1 << np.arange(group))).astype(np.int32)
+
+
+def _nearest(mat: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Row-wise index of the L2-nearest row of ``c`` (ties -> lowest,
+    np.argmin): argmin of ||c||^2 - 2 x.c, ||x||^2 being constant per
+    row."""
+    return ((c * c).sum(axis=1)[None, :] - 2.0 * (mat @ c.T)).argmin(axis=1)
+
+
+def _training_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(_i, _v) rows of the non-null embeddings: NULLs cannot train."""
+    return (df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
+            .filter(F.col("_v").isNotNull()))
+
+
+def _centroid_means(rows: DataFrame, *keys: str) -> list:
+    """The module's one group-mean step (IVF lists, PQ sub-codebooks,
+    k-means init and Lloyd steps): ``(_i, _v, *keys)`` rows -> one
+    collected ``Row(*keys, n, centroid)`` per key group. Each group is
+    sorted by ``_i`` before the float64 numpy mean: pairwise summation
+    is order-sensitive and shuffle-read order is not guaranteed. Sorted,
+    every trainer is bit-deterministic, which is what lets the golden
+    fixtures of tools/make_fixtures.py pin the embedding queries."""
+
+    def mean(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("_i")
+        out = {k: [int(pdf[k].iloc[0])] for k in keys}
+        out["n"] = [len(pdf)]
+        out["centroid"] = [_vectors(pdf["_v"]).mean(axis=0).tolist()]
+        return pd.DataFrame(out)
+
+    schema = "".join(f"{k} int, " for k in keys) + \
+        "n long, centroid array<double>"
+    got = rows.groupBy(*keys).applyInPandas(mean, schema=schema).collect()
+    if not got:
+        raise ValueError("no non-null embeddings to train on")
+    return got
+
+
+# --- LSH ANN -----------------------------------------------------------------
+
+def signbit_bucket_udf(dim: int | None, n_planes: int = 8, seed: int = 42):
+    """Vectorized pandas UDF: embedding -> int bucket of sign bits. A
+    ``dim`` of None takes each batch's own dim (the trainers' case)."""
+    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
     def bucket(emb: pd.Series) -> pd.Series:
         # null-tolerant: a NULL embedding hashes to bucket 0 instead of
         # crashing the whole job (brute-force cosine tolerates the row too)
-        mat = np.stack(
-            [np.zeros(dim, dtype=np.float64) if v is None else
-             np.asarray(v, dtype=np.float64) for v in emb]
-        )
-        signs = (mat @ planes.T) > 0  # (batch, n_planes)
-        vals = np.zeros(len(emb), dtype=np.int32)
-        for b in range(n_planes):
-            vals |= signs[:, b].astype(np.int32) << b
-        return pd.Series(vals)
+        return pd.Series(_sign_codes(_vectors(emb, dim), n_planes, seed)[:, 0])
 
     return bucket
 
@@ -120,26 +188,12 @@ def lsh_ann_topk(
     """Approximate top-k: score only vectors in the query's sign-bucket
     (plus Hamming-1 probes to cut misses). At 10^9 vectors this scans
     ~ (1+n_planes)/2^n_planes of the corpus instead of all of it."""
-    dim = len(query_vec)
-    bucket = signbit_bucket_udf(dim, n_planes, seed)
-    planes = _hyperplanes(dim, n_planes, seed)
-    qsig = 0
-    qv = np.asarray(query_vec, dtype=np.float64)
-    for b in range(n_planes):
-        if float(planes[b] @ qv) > 0:
-            qsig |= 1 << b
+    bucket = signbit_bucket_udf(len(query_vec), n_planes, seed)
+    qsig = int(_sign_codes(np.asarray([query_vec], dtype=np.float64),
+                           n_planes, seed)[0, 0])
     probes = [qsig] + [qsig ^ (1 << b) for b in range(n_planes)]
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    return (
-        df.withColumn("_bucket", bucket(F.col(vec_col)))
-        .filter(F.col("_bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    return cosine_topk(df.filter(bucket(F.col(vec_col)).isin(probes)),
+                       query_vec, k, id_col, vec_col)
 
 
 # --- IVF ANN -----------------------------------------------------------------
@@ -149,50 +203,18 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     n_list: int = 16,
     seed: int = 42,
-    dim: int | None = None,
     id_col: str = "vec_id",
 ) -> np.ndarray:
     """One-pass distributed IVF training: seed the coarse quantizer with
     sign-LSH buckets, then take each bucket's mean as its centroid (a
     single k-means step — one groupBy over the corpus). Returns an
     (n_list', dim) float64 array collected to the driver (tiny:
-    n_list x dim), to be shipped in UDF closures.
-
-    Each bucket's rows are sorted by ``id_col`` before the mean: numpy's
-    pairwise float summation is ORDER-sensitive, and shuffle-read order
-    is not guaranteed — without the sort, centroids (and everything
-    probed through them) could drift between runs at the ulp level.
-    Sorted, the whole pipeline is bit-deterministic, which is what lets
-    the driver gate check ``emb_ivf_ann`` against a golden fixture."""
-    if dim is None:
-        first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
-        if first is None:
-            raise ValueError("train_ivf_centroids: no non-null embeddings")
-        dim = len(first[0])
+    n_list x dim), to be shipped in UDF closures."""
     n_planes = max(1, int(math.log2(n_list)))
-    bucket = signbit_bucket_udf(dim, n_planes, seed)
-
-    def mean_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_i")
-        # float64 BEFORE the mean: Arrow delivers array<float> as
-        # float32 — a float32 mean drifts ~1e-8 from the float64 fixture
-        # replay (caught by emb_pq_codes' continuous recon_err; discrete
-        # argmax paths masked it here)
-        mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        return pd.DataFrame({"_b": [int(pdf["_b"].iloc[0])],
-                             "centroid": [mat.mean(axis=0).tolist()]})
-
-    got = (
-        df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
-        # NULL embeddings cannot train (np.stack over None raises in
-        # the worker; review round 5) — signbit_bucket_udf's null
-        # tolerance is for ASSIGNMENT paths, not training
-        .filter(F.col("_v").isNotNull())
-        .withColumn("_b", bucket(F.col("_v")))
-        .groupBy("_b")
-        .applyInPandas(mean_group, schema="_b int, centroid array<double>")
-        .collect()
-    )
+    bucket = signbit_bucket_udf(None, n_planes, seed)
+    got = _centroid_means(
+        _training_rows(df, id_col, vec_col).withColumn(
+            "_b", bucket(F.col("_v"))), "_b")
     return np.array([r.centroid for r in sorted(got, key=lambda r: r._b)])
 
 
@@ -205,14 +227,9 @@ def ivf_assign_udf(centroids: np.ndarray):
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )
 
-    dim = c.shape[1]
-
     @pandas_udf("int")
     def assign(emb: pd.Series) -> pd.Series:
-        mat = np.stack(
-            [np.zeros(dim, dtype=np.float64) if v is None else
-             np.asarray(v, dtype=np.float64) for v in emb]
-        )
+        mat = _vectors(emb, c.shape[1])
         mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
         return pd.Series((mat @ c.T).argmax(axis=1).astype(np.int32))
 
@@ -233,8 +250,7 @@ def ivf_ann_topk(
     among the query's n_probe nearest centroids. At 10^9 vectors this
     scans ~n_probe/n_list of the corpus; in production the assignment
     column is precomputed/partitioned-by so probing prunes whole files."""
-    centroids = train_ivf_centroids(df, vec_col, n_list, seed,
-                                    dim=len(query_vec), id_col=id_col)
+    centroids = train_ivf_centroids(df, vec_col, n_list, seed, id_col=id_col)
     qv = np.asarray(query_vec, dtype=np.float64)
     qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
     cn = centroids / np.maximum(
@@ -242,43 +258,28 @@ def ivf_ann_topk(
     )
     probes = [int(i) for i in (cn @ qn).argsort()[::-1][:n_probe]]
     assign = ivf_assign_udf(centroids)
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    return (
-        df.withColumn("_list", assign(F.col(vec_col)))
-        .filter(F.col("_list").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    return cosine_topk(df.filter(assign(F.col(vec_col)).isin(probes)),
+                       query_vec, k, id_col, vec_col)
 
 
 # --- corpus-level near-dup (bucketed pairwise) -------------------------------
 
-def band_keys_udf(dim: int, bands: int, band_bits: int, seed: int = 42):
+def band_keys_udf(dim: int | None, bands: int, band_bits: int,
+                  seed: int = 42):
     """Vectorized pandas UDF: embedding -> array of ``bands`` band keys.
     Key i packs that band's ``band_bits`` sign bits plus the band index,
     so a single-column equi-join compares (band, bits) at once. One
-    matmul per Arrow batch — no per-row Python."""
+    matmul per Arrow batch — no per-row Python. A ``dim`` of None takes
+    each batch's own dim."""
     from pyspark.sql.functions import pandas_udf
 
-    planes = _hyperplanes(dim, bands * band_bits, seed)
+    band_ids = np.arange(bands, dtype=np.int32) << band_bits
 
     @pandas_udf("array<int>")
     def keys(emb: pd.Series) -> pd.Series:
-        mat = np.stack(
-            [np.zeros(dim, dtype=np.float64) if v is None else
-             np.asarray(v, dtype=np.float64) for v in emb]
-        )
-        bits = (mat @ planes.T) > 0  # (batch, bands*band_bits)
-        out = np.zeros((len(emb), bands), dtype=np.int32)
-        for b in range(bands):
-            for k in range(band_bits):
-                out[:, b] |= bits[:, b * band_bits + k].astype(np.int32) << k
-            out[:, b] |= b << band_bits
-        return pd.Series(list(out))
+        bits = _sign_codes(_vectors(emb, dim), bands * band_bits, seed,
+                           band_bits)
+        return pd.Series(list(bits | band_ids))
 
     return keys
 
@@ -319,26 +320,35 @@ def embedding_near_dup_pairs(
     numpy materialization the pandas_udf paid).
     Carrying vectors through the band shuffle + dedupe was ~2x the
     shuffle bytes and the per-pair Column fold was ~35x slower than the
-    Arrow batch."""
-    dim_row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
-    if dim_row is None:
-        raise ValueError("embedding_near_dup_pairs: no non-null embeddings")
-    dim = len(dim_row[0])
-    keys = band_keys_udf(dim, bands, band_bits, seed)
+    Arrow batch. Dim is observed on ``band_pairs``' checkpoint, so a
+    ragged column raises there, before any pair is scored."""
+    from pyspark.sql import Observation
+
     from incident_pii_redactor_spark.plans.session import (
         scan_parallelism_floor)
 
+    keys = band_keys_udf(None, bands, band_bits, seed)
+    lens = Observation()
     # parallelism floor before the band-key UDF: a one-row-group source
     # is a single unsplittable task, serializing the matmul + explode on
     # one core (no-op at real scale — see scan_parallelism_floor)
     banded = scan_parallelism_floor(
         df.select(F.col(id_col).alias("_id"), F.col(vec_col))
+    ).observe(
+        lens, F.min(F.array_size(vec_col)).alias("lo"),
+        F.max(F.array_size(vec_col)).alias("hi"),
     ).select(
         "_id",
         F.explode(keys(F.col(vec_col))).alias("band_key"),
     )
-    return _cosine_pairs(band_pairs(banded), df, id_col, vec_col, dim,
-                         threshold)
+    pair_ids = band_pairs(banded)
+    lo, hi = lens.get["lo"], lens.get["hi"]
+    if hi is None:
+        raise ValueError("embedding_near_dup_pairs: no non-null embeddings")
+    if lo != hi:
+        raise ValueError(
+            f"ragged embedding column: vector lengths {[lo, hi]}")
+    return _cosine_pairs(pair_ids, df, id_col, vec_col, hi, threshold)
 
 
 def _cosine_pairs(pair_ids: DataFrame, df: DataFrame, id_col: str,
@@ -451,82 +461,54 @@ def train_pq_codebooks(
     m: int = 4,
     ksub: int = 16,
     seed: int = 42,
-    dim: int | None = None,
     id_col: str = "vec_id",
 ) -> list[np.ndarray]:
     """Product-quantization codebooks (Jégou et al. 2011): split each
     vector into ``m`` subvectors and learn ``<=ksub`` centroids per
     subspace. Training uses the SAME deterministic one-step sign-bucket
     k-means as ``train_ivf_centroids`` (per-subspace hyperplanes seeded
-    ``seed + j``, bucket rows sorted by id before the numpy mean), so
-    codebooks — and everything encoded through them — are
-    bit-reproducible, which is what lets the driver gate check
-    ``emb_pq_codes`` against a golden fixture.
+    ``seed + j``; the subvectors, sliced in Spark, take the
+    ``_centroid_means`` sorted mean), so codebooks — and everything
+    encoded through them — are bit-reproducible, which is what lets the
+    driver gate check ``emb_pq_codes`` against a golden fixture.
 
     Returns a list of ``m`` (n_codes_j, dsub) arrays; code k in subspace
     j is row k (buckets sorted ascending — empty sign-buckets simply
     yield fewer codes, never a hole). At 10^9 vectors you'd train on a
     deterministic hash-sample (functions/sampling.py) — training cost is
     one narrow pass + a groupBy bounded by m*ksub groups."""
-    if dim is None:
-        first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
-        if first is None:
-            raise ValueError("train_pq_codebooks: no non-null embeddings")
-        dim = len(first[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    n_planes = max(1, int(math.log2(ksub)))
-    planes = [_hyperplanes(dsub, n_planes, seed + j) for j in range(m)]
-    planes_arr = np.stack(planes)  # (m, n_planes, dsub)
-
     from pyspark.sql.functions import pandas_udf
+
+    n_planes = max(1, int(math.log2(ksub)))
 
     @pandas_udf("array<int>")
     def buckets(emb: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        out = np.zeros((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub:(j + 1) * dsub]
-            signs = (sub @ planes_arr[j].T) > 0  # (n, n_planes)
-            out[:, j] = signs @ (1 << np.arange(n_planes))
-        return pd.Series(list(out))
+        mat = _vectors(emb)
+        if mat.shape[1] % m:
+            raise ValueError(f"dim {mat.shape[1]} not divisible by m {m}")
+        dsub = mat.shape[1] // m
+        return pd.Series(list(np.hstack([
+            _sign_codes(mat[:, j * dsub:(j + 1) * dsub], n_planes, seed + j)
+            for j in range(m)])))
 
-    def mean_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_i")
-        j = int(pdf["_j"].iloc[0])
-        # float64 BEFORE the mean (same reason as train_ivf_centroids)
-        sub = np.stack(pdf["_v"].to_numpy()).astype(np.float64)[
-            :, j * dsub:(j + 1) * dsub]
-        return pd.DataFrame({
-            "_j": [j], "_b": [int(pdf["_b"].iloc[0])],
-            "centroid": [sub.mean(axis=0).tolist()],
-        })
-
-    got = (
-        df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
-        .filter(F.col("_v").isNotNull())  # nulls cannot train
-        .withColumn("_bs", buckets(F.col("_v")))
-        .select("_i", "_v", F.posexplode("_bs").alias("_j", "_b"))
-        .groupBy("_j", "_b")
-        .applyInPandas(mean_group, schema="_j int, _b int, centroid array<double>")
-        .collect()
-    )
-    books: list[np.ndarray] = []
-    for j in range(m):
-        rows = sorted((r for r in got if r._j == j), key=lambda r: r._b)
-        if not rows:
-            raise ValueError(f"train_pq_codebooks: subspace {j} is empty")
-        books.append(np.array([r.centroid for r in rows]))
-    return books
+    dsub = F.expr(f"CAST(size(_v) div {m} AS INT)")
+    got = _centroid_means(
+        _training_rows(df, id_col, vec_col)
+        .select("_i", "_v", F.posexplode(buckets(F.col("_v"))).alias("_j", "_b"))
+        .withColumn("_v", F.slice("_v", F.col("_j") * dsub + 1, dsub)),
+        "_j", "_b")
+    return [np.array([r.centroid for r in
+                      sorted((r for r in got if r._j == j),
+                             key=lambda r: r._b)])
+            for j in range(m)]
 
 
 def pq_encode_udf(codebooks: list[np.ndarray]):
     """embedding -> (codes array<int>, recon_err double): per subspace
-    the L2-nearest centroid index (ties -> lowest, np.argmin), plus the
-    full-vector reconstruction L2 error. One matmul per subspace per
-    Arrow batch; codebooks travel in the closure (m*ksub*dsub doubles —
-    KBs)."""
+    the L2-nearest centroid index (``_nearest``), plus the full-vector
+    reconstruction L2 error; a NULL embedding gets NULL for both. One
+    matmul per subspace per Arrow batch; codebooks travel in the closure
+    (m*ksub*dsub doubles — KBs)."""
     from pyspark.sql.functions import pandas_udf
 
     m = len(codebooks)
@@ -534,18 +516,16 @@ def pq_encode_udf(codebooks: list[np.ndarray]):
 
     @pandas_udf("struct<codes: array<int>, recon_err: double>")
     def encode(emb: pd.Series) -> pd.DataFrame:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        codes = np.zeros((len(mat), m), dtype=np.int32)
-        recon = np.zeros_like(mat)
-        for j in range(m):
-            sub = mat[:, j * dsub:(j + 1) * dsub]
-            c = codebooks[j]
-            # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2 ; ||x||^2 constant per row
-            d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (sub @ c.T)
-            codes[:, j] = d2.argmin(axis=1)
-            recon[:, j * dsub:(j + 1) * dsub] = c[codes[:, j]]
+        mat = _vectors(emb, m * dsub)
+        codes = np.stack([_nearest(mat[:, j * dsub:(j + 1) * dsub], c)
+                          for j, c in enumerate(codebooks)], axis=1)
+        recon = np.hstack([c[codes[:, j]] for j, c in enumerate(codebooks)])
         err = np.sqrt(((mat - recon) ** 2).sum(axis=1))
-        return pd.DataFrame({"codes": list(codes), "recon_err": err})
+        null = emb.isna().to_numpy()
+        return pd.DataFrame({
+            "codes": [None if n else r
+                      for n, r in zip(null, codes.astype(np.int32))],
+            "recon_err": np.where(null, np.nan, err)})
 
     return encode
 
@@ -574,6 +554,27 @@ def pq_codes(
     )
 
 
+def _kmeans_udf(c: np.ndarray):
+    """embedding -> (cluster int, dist double): the ``_nearest`` centroid
+    and the exact L2 distance to it (numpy per batch, the same
+    expressions as the fixture replay); a NULL embedding gets NULL for
+    both. Used by every Lloyd step and by ``kmeans_assign``."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("struct<cluster: int, dist: double>")
+    def assign(emb: pd.Series) -> pd.DataFrame:
+        mat = _vectors(emb, c.shape[1])
+        cl = _nearest(mat, c)
+        diff = mat - c[cl]
+        null = emb.isna().to_numpy()
+        return pd.DataFrame({
+            "cluster": pd.Series(cl, dtype="Int32").mask(null),
+            "dist": np.where(null, np.nan,
+                             np.sqrt((diff * diff).sum(axis=1)))})
+
+    return assign
+
+
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -581,7 +582,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    dim: int | None = None,
 ) -> np.ndarray:
     """Distributed Lloyd's k-means, BIT-DETERMINISTIC (the iterative-
     algorithm pattern: driver holds the tiny model, executors do one
@@ -589,76 +589,32 @@ def kmeans_fit(
 
     * init: the deterministic sign-bucket means (same recipe as IVF),
       sliced to the k buckets with most members (ties -> lower bucket);
-    * assign: argmin squared-L2 via ||c||^2 - 2 x.c (ties -> lowest
-      centroid, np.argmin);
-    * update: per-cluster mean over float64 vectors with rows SORTED by
-      id before the numpy mean (pairwise summation is order-sensitive);
-      empty clusters keep their previous centroid.
+    * assign: ``_nearest`` (ties -> lowest centroid);
+    * update: ``_centroid_means``, the float64 mean with rows SORTED by
+      id (pairwise summation is order-sensitive); empty clusters keep
+      their previous centroid.
 
     Each iteration is one narrow pass + a groupBy bounded by k groups;
     the centroids (k*dim doubles) travel in UDF closures. Scale: at
     10^9 vectors this is the standard Spark k-means shape (MLlib does
     the same with partial aggregates); determinism here additionally
     pins a golden-fixture oracle."""
-    if dim is None:
-        first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).head()
-        if first is None:
-            raise ValueError("kmeans_fit: no non-null embeddings")
-        dim = len(first[0])
-    n_planes = max(1, int(math.log2(max(2, k))))
+    base = _training_rows(df, id_col, vec_col)
     # init from sign-bucket means (more buckets than k; pick k largest)
-    from pyspark.sql.functions import pandas_udf
-
-    planes = _hyperplanes(dim, n_planes + 1, seed)
-
-    @pandas_udf("int")
-    def bucket(emb: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        signs = (mat @ planes.T) > 0
-        return pd.Series((signs @ (1 << np.arange(n_planes + 1)))
-                         .astype(np.int32))
-
-    def mean_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_i")
-        mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        return pd.DataFrame({"_b": [int(pdf["_b"].iloc[0])],
-                             "n": [len(pdf)],
-                             "centroid": [mat.mean(axis=0).tolist()]})
-
-    base = (df.select(F.col(id_col).alias("_i"),
-                      F.col(vec_col).alias("_v"))
-            .filter(F.col("_v").isNotNull()))  # nulls cannot train
-    got = (
-        base.withColumn("_b", bucket(F.col("_v")))
-        .groupBy("_b")
-        .applyInPandas(mean_group,
-                       schema="_b int, n long, centroid array<double>")
-        .collect()
-    )
+    bucket = signbit_bucket_udf(None, max(1, int(math.log2(max(2, k)))) + 1,
+                                seed)
+    got = _centroid_means(base.withColumn("_b", bucket(F.col("_v"))), "_b")
     got.sort(key=lambda r: (-r.n, r._b))
     cents = np.array([r.centroid for r in got[:k]])
     if len(cents) < k:
         raise ValueError(f"kmeans_fit: init produced {len(cents)} < k={k}")
 
     for _ in range(n_iter):
-        c = cents
-
-        @pandas_udf("int")
-        def assign(emb: pd.Series) -> pd.Series:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-            d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (mat @ c.T)
-            return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-        got = (
-            base.withColumn("_b", assign(F.col("_v")))
-            .groupBy("_b")
-            .applyInPandas(mean_group,
-                           schema="_b int, n long, centroid array<double>")
-            .collect()
-        )
+        assign = _kmeans_udf(cents)
         new = cents.copy()  # empty clusters keep previous centroid
-        for r in got:
-            new[int(r._b)] = np.asarray(r.centroid, dtype=np.float64)
+        for r in _centroid_means(
+                base.withColumn("_b", assign(F.col("_v")).cluster), "_b"):
+            new[r._b] = r.centroid
         cents = new
     return cents
 
@@ -670,23 +626,11 @@ def kmeans_assign(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, cluster int, dist double): final assignment + exact L2
-    distance to the assigned centroid (fold-free: numpy per batch, same
-    expression as training so a fixture replay matches bit-for-bit)."""
-    from pyspark.sql.functions import pandas_udf
-
-    c = centroids
-
-    @pandas_udf("struct<cluster: int, dist: double>")
-    def ass(emb: pd.Series) -> pd.DataFrame:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (mat @ c.T)
-        cl = d2.argmin(axis=1)
-        diff = mat - c[cl]
-        dist = np.sqrt((diff * diff).sum(axis=1))
-        return pd.DataFrame({"cluster": cl.astype(np.int32),
-                             "dist": dist})
-
-    return df.withColumn("_a", ass(F.col(vec_col))).select(
+    distance to the assigned centroid (``_kmeans_udf``, the training
+    step's UDF, so a fixture replay matches bit-for-bit); NULL cluster
+    and dist for a NULL embedding."""
+    assign = _kmeans_udf(centroids)
+    return df.withColumn("_a", assign(F.col(vec_col))).select(
         F.col(id_col),
         # bigint per the driver result-type policy (int32 is hash-hostile)
         F.col("_a.cluster").cast("bigint").alias("cluster"),
@@ -717,7 +661,8 @@ def semdedup(
     same cluster is cosine-similar above ``threshold`` (one-step
     min-id-wins, the dedup job's standard policy). Bit-deterministic
     end-to-end: kmeans_fit is deterministic and the pairwise cosine is
-    the fold-order ``_verify_pairs_arrow``."""
+    the fold-order ``_verify_pairs_arrow``. A NULL vector is kept, with
+    a NULL cluster."""
     cents = kmeans_fit(df, k=k, n_iter=n_iter, vec_col=vec_col,
                        id_col=id_col, seed=seed)
     assigned = kmeans_assign(df, cents, vec_col=vec_col, id_col=id_col) \

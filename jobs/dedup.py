@@ -157,6 +157,20 @@ def _stage(df, stats: dict, key: str):
     return df
 
 
+def _row_id():
+    """The row identity of the near and paragraph stages: url, warc_ts
+    and md5(text), NUL-joined with NULL read as "", then one NULL flag
+    per field, so ids differ whenever (url, warc_ts, text) differ, NULLs
+    included (concat_ws alone skips NULLs: two rows with NULL url and ts
+    shared the id "" and neither could drop the other). NUL is the
+    smallest byte and the flags come last, so rows whose url and ts are
+    non-NULL order as (url, ts) does; min-id-wins keeps the same rows."""
+    parts = [F.col("url"), F.col("warc_ts").cast("string"), F.md5("text")]
+    return F.concat_ws(
+        "\x00", *[F.coalesce(p, F.lit("")) for p in parts],
+        F.concat(*[F.when(p.isNull(), "1").otherwise("0") for p in parts]))
+
+
 def near_dedup(df, args):
     """MinHash/LSH near-dup removal: candidate pairs -> (optional)
     Jaccard verification -> drop set -> LEFT ANTI filter. The anti join
@@ -166,14 +180,10 @@ def near_dedup(df, args):
     skew-free, and AQE still broadcasts when the list measures small.
     ``tests/test_resume.py::test_dedup_drop_list_is_not_force_broadcast``
     pins the hint's absence."""
-    # ROW identity is (url, warc_ts), not url (review round 5): url
-    # alone is non-unique across recrawl snapshots, so dropping a url
-    # would also drop a same-url row whose DISTINCT content was never a
-    # near-dup. concat_ws skips NULL ts, degrading to url for tables
-    # without timestamps.
-    keyed = df.withColumn(
-        "_rid",
-        F.concat_ws("\x00", "url", F.col("warc_ts").cast("string")))
+    # ROW identity, not url (review round 5): url alone is non-unique
+    # across recrawl snapshots, so dropping a url would also drop a
+    # same-url row whose DISTINCT content was never a near-dup
+    keyed = df.withColumn("_rid", _row_id())
     pairs = minhash_lsh_pairs(
         keyed, id_col="_rid", text_col="text",
         n=args.shingle_words, n_perm=args.n_perm, bands=args.bands,
@@ -346,16 +356,10 @@ def run(args, spark=None) -> dict:
             # ROW-unique paragraph id (review round 3): url alone is not
             # unique across recrawl snapshots — grouping duplicate-url
             # rows together would interleave two documents' paragraphs
-            # into one garbled text. (url, warc_ts, md5(text)) is unique
-            # per distinct content; byte-identical duplicate rows merge
-            # into one rewrite and fan back out unchanged, which is
-            # exactly right.
-            keyed = df.withColumn(
-                "_pid",
-                F.concat_ws("\x00", "url",
-                            F.col("warc_ts").cast("string"),
-                            F.md5("text")),
-            )
+            # into one garbled text. _row_id is unique per distinct
+            # content; byte-identical duplicate rows merge into one
+            # rewrite and fan back out unchanged, which is exactly right.
+            keyed = df.withColumn("_pid", _row_id())
             rewritten = paragraph_dedup(keyed, id_col="_pid",
                                         text_col="text") \
                 .select("_pid", F.col("text_dedup").alias("text"))

@@ -474,6 +474,41 @@ def test_dedup_exact_mode_keeps_null_url_row(spark, tmp_path_factory):
     assert "a page whose url was lost" in texts
 
 
+@pytest.mark.parametrize("mode", ["near", "both"])
+def test_dedup_near_drops_one_of_two_null_url_and_ts_near_dups(
+        spark, tmp_path_factory, mode):
+    """Two rows with NULL url and NULL warc_ts that are one-word edits of
+    each other are near-dups: one of them drops. Their row ids must
+    differ (concat_ws skipped both NULLs, giving both the id "", so
+    id_a < id_b never held and both rows survived)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.dedup import parse_args as dedup_args, run as dedup_run
+
+    d = tmp_path_factory.mktemp(f"dedup_null_ids_{mode}")
+    base = ("the quick brown fox jumps over the lazy dog and runs through "
+            "the field while the sun rises slowly over the quiet hills")
+    other = ("utterly different content about parquet files shuffles and "
+             "broadcast joins written on a rainy afternoon")
+    tbl = pa.table({
+        "url": pa.array([None, None, "https://a/4"], pa.string()),
+        "warc_ts": pa.array([None, None, None], pa.timestamp("us")),
+        "html": pa.array([b"", b"", b""], pa.binary()),
+        "text": pa.array([base, base.replace("quiet", "green"), other]),
+        "lang": pa.array(["en"] * 3),
+    })
+    pq.write_table(tbl, str(d / "pages.parquet"))
+
+    stats = dedup_run(dedup_args(
+        ["--input", str(d / "pages.parquet"), "--output", str(d / "out"),
+         "--mode", mode]), spark=spark)
+    assert stats["rows_out"] == 2
+    texts = {r.text for r in spark.read.parquet(str(d / "out")).collect()}
+    assert other in texts
+    assert len(texts & {base, base.replace("quiet", "green")}) == 1
+
+
 def test_dedup_input_scans_once_per_stage(spark, tmp_path_factory,
                                           monkeypatch, no_cache_or_count):
     """Every stage reads its input more than once (self-joins), so each

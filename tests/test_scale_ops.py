@@ -348,6 +348,133 @@ def test_embedding_trainers_tolerate_null_vectors(spark):
     assert cents.shape == (3, 8)
 
 
+SF01 = "/root/testdata/sf0.01"
+
+
+def _rand_rows(ids, dim, seed=5):
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    return [(i, [float(x) for x in rng.randn(dim)]) for i in ids]
+
+
+def test_embedding_null_row_gets_null_outputs(spark):
+    """A NULL embedding passes through the assignment UDFs with NULL
+    outputs instead of failing the task or taking the zero vector's
+    code, and SemDeDup keeps it."""
+    from incident_pii_redactor_spark.functions.similarity import (
+        kmeans_assign, kmeans_fit, pq_codes, semdedup)
+
+    df = spark.createDataFrame(_rand_rows(range(40), 8) + [(99, None)],
+                               "vec_id long, embedding array<float>")
+    pq_rows = {r.vec_id: r for r in pq_codes(df, m=2, ksub=4).collect()}
+    assert pq_rows[99].code is None and pq_rows[99].recon_err is None
+    assert all(r.code and r.recon_err is not None
+               for i, r in pq_rows.items() if i != 99)
+    km = {r.vec_id: r for r in
+          kmeans_assign(df, kmeans_fit(df, k=3, n_iter=2)).collect()}
+    assert km[99].cluster is None and km[99].dist is None
+    sd = {r.vec_id: r for r in semdedup(df, k=3, n_iter=2).collect()}
+    assert len(sd) == 41
+    assert sd[99].cluster is None and sd[99].keep is True
+
+
+RAGGED_CALLS = {
+    "ivf_ann_topk": lambda S, df: S.ivf_ann_topk(df, [1.0] * 8, n_list=4),
+    "pq_codes": lambda S, df: S.pq_codes(df, m=2, ksub=4),
+    "semdedup": lambda S, df: S.semdedup(df, k=3, n_iter=2),
+    "embedding_near_dup_pairs": lambda S, df: S.embedding_near_dup_pairs(df),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(RAGGED_CALLS))
+def test_ragged_embedding_column_fails_loudly(spark, entry):
+    """Vectors of two lengths in one partition fail the first UDF that
+    reads them with a ValueError naming both lengths (np.stack used to
+    raise an unnamed shape error, or reshape them misaligned)."""
+    from incident_pii_redactor_spark.functions import similarity as S
+
+    rows = _rand_rows(range(20), 8) + _rand_rows(range(20, 40), 6)
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>").coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: ragged embedding "
+                                        r"column: vector lengths \[6, 8\]"):
+        RAGGED_CALLS[entry](S, df).collect()
+
+
+def test_near_dup_pairs_catch_ragged_rows_across_partitions(spark):
+    """Each partition uniform, the column ragged: no batch sees two
+    lengths, so the band-key UDF cannot tell; the min/max length observed
+    on the band-key materialization raises on the driver before any
+    pair is scored."""
+    from incident_pii_redactor_spark.functions.similarity import (
+        embedding_near_dup_pairs)
+
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(_rand_rows(range(20), 8), schema).union(
+        spark.createDataFrame(_rand_rows(range(20, 40), 6), schema))
+    with pytest.raises(ValueError,
+                       match=r"ragged embedding column: vector lengths "
+                             r"\[6, 8\]"):
+        embedding_near_dup_pairs(df)
+
+
+def test_embedding_paths_spark_job_counts(spark):
+    """Spark jobs per embedding path at sf0.01, counted as
+    test_scrub_job_count does. No path probes the column's dim with a
+    head() job: UDFs read it off their batch, trainers off the
+    centroids they collect, and embedding_near_dup_pairs observes it on
+    the band-key checkpoint. Each count was one higher with the probe."""
+    from incident_pii_redactor_spark.functions import similarity as S
+
+    e = spark.read.parquet(f"{SF01}/embeddings.parquet")
+    sc = spark.sparkContext
+    paths = {
+        "train_ivf_centroids": (lambda: S.train_ivf_centroids(e), 2),
+        "train_pq_codebooks": (lambda: S.train_pq_codebooks(e), 2),
+        "kmeans_fit": (lambda: S.kmeans_fit(e, k=8, n_iter=3), 8),
+        "semdedup": (lambda: S.semdedup(e).collect(), 13),
+        "embedding_near_dup_pairs":
+            (lambda: S.embedding_near_dup_pairs(e).collect(), 6),
+        "pq_codes": (lambda: S.pq_codes(e).collect(), 3),
+    }
+    got = {}
+    for name, (run, _) in paths.items():
+        group = f"emb_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == {name: n for name, (_, n) in paths.items()}
+
+
+@pytest.mark.parametrize("query", ["emb_ann_methods", "emb_pq_codes",
+                                   "emb_semdedup"])
+def test_fixture_backed_embedding_query_matches_oracle(spark, query):
+    """The Spark side of the golden-fixture embedding queries against
+    their oracle SQL at sf0.01, hashed as tools/check_correctness.py
+    does. The fixtures are numpy replays that never call the Spark code,
+    so regenerating them cannot catch a Spark-side drift; this can."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from tools.check_correctness import row_keys, value_hash
+
+    sdf = entry.queries()[query](spark, SF01)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{SF01}/embeddings.parquet')")
+    orel = con.sql(entry.oracle_sql()[query])
+    srows = [tuple(r) for r in sdf.collect()]
+    orows = orel.fetchall()
+    assert len(srows) == len(orows)
+    assert value_hash(sorted(row_keys(srows, sdf.columns))) == \
+        value_hash(sorted(row_keys(orows, orel.columns)))
+
+
 def test_bloom_tolerates_null_hashes(spark):
     """NULL hashes: skipped at build, PASSED THROUGH by the prefilter
     (the exact anti-join keeps NULL-key rows; review round 5)."""

@@ -1,7 +1,9 @@
 """North-rule packaging requirement: the job runs under
 ``spark-submit --py-files engine.zip`` from a NEUTRAL cwd, so the
 package resolves only through the shipped zip (what a real cluster
-submit looks like — the Makefile's ``submit-smoke`` as a pytest gate)."""
+submit looks like — the Makefile's ``submit-smoke`` as a pytest gate),
+and so does one embedding path, whose UDFs import the package on the
+workers."""
 
 from __future__ import annotations
 
@@ -57,3 +59,36 @@ def test_spark_submit_py_files_package(tmp_path):
                       recursive=True)
     n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     assert n > 0
+
+    # the embedding UDFs call the module-level kernels of
+    # functions/similarity.py, so the workers must import the package
+    # from the same zip
+    script = tmp_path / "emb.py"
+    script.write_text(EMB_SCRIPT)
+    out = subprocess.run(
+        ["spark-submit", "--master", "local[2]", "--py-files", zip_path,
+         "--conf", "spark.ui.enabled=false", str(script)],
+        cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=420,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "centroids (3, 8) pairs 1" in out.stdout, out.stdout[-2000:]
+
+
+EMB_SCRIPT = """
+import numpy as np
+from pyspark.sql import SparkSession
+
+from incident_pii_redactor_spark.functions.similarity import (
+    embedding_near_dup_pairs, kmeans_fit)
+
+spark = SparkSession.builder.getOrCreate()
+rng = np.random.RandomState(3)
+rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(40)]
+rows.append((40, [2.0 * x for x in rows[0][1]]))  # cosine 1 to row 0
+df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+cents = kmeans_fit(df, k=3, n_iter=2)
+pairs = embedding_near_dup_pairs(df, threshold=0.99).collect()
+print("centroids", cents.shape, "pairs", len(pairs))
+spark.stop()
+"""
