@@ -20,8 +20,7 @@ functions/  Spark Column-level helpers (JVM-side expressions): text
             SimHash), similarity and ANN, Bloom filters, connected
             components, BPE training, ranking, sampling.
 operators/  DataFrame-level operators: the fused mapInPandas quality +
-            scrub stage, manifest resume, salting, as-of and range
-            joins.
+            scrub stage, manifest resume, as-of and range joins.
 sources/    page-table and WARC / CDX / robots.txt readers, catalog
             adapter, deterministic fixture synthesis and the reference's
             incident-record reader (parity tests only).

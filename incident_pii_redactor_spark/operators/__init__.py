@@ -1,5 +1,5 @@
 """DataFrame-level operators: the fused quality+scrub stage, manifest
-resume, and skew-aware repartitioning."""
+resume, and as-of / range joins."""
 
 from incident_pii_redactor_spark.operators.scrub import RESULT_FIELDS, quality_scrub
 

@@ -19,8 +19,7 @@ Spark-first design (composition of built-ins, no UDF):
 Cost: ONE shuffle on the key (the union is shuffle-free; the window
 sorts within partitions) — at 10^12 rows this is the same shape as any
 keyed aggregation, with none of the range-join blowup. Skewed keys are
-ordinary window skew: pre-split with operators/salting if a single key
-dominates.
+ordinary window skew: all of one key's rows sort in one task.
 
 Determinism: duplicate right rows at the same (key, ts) are broken by
 ``right_order`` (ascending in the window ⇒ the LAST one wins ⇒ equals

@@ -4,8 +4,8 @@ Local test/bench sessions use ``local[N]``; the same config block is what
 the production ``spark-submit`` job would carry (jobs/scrub.py). Key
 choices, each load-bearing at scale:
 
-* AQE on (+ skew-join): runtime coalescing and skew splitting are the
-  backstop behind our explicit salting (SURVEY.md §4.2).
+* AQE on (+ skew-join): runtime coalescing and skew-join splitting size
+  every stage that follows an exchange (SURVEY.md §4.2).
 * Arrow enabled + bounded ``maxRecordsPerBatch``: the scrub stage is a
   ``mapInPandas`` over multi-KB documents. 1024 docs/batch (re-measured
   round 6, best-of-5 on a control run): a ~6k-row task at 8192 was ONE
@@ -30,23 +30,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism
-    when the source yields fewer partitions — a NO-OP at production
-    scale (a 100 TB input is ~800k splits, far above any core count),
-    load-bearing only for small unsplittable inputs: a single parquet
-    file written as one row group cannot be split, so every per-row-
-    expensive projection (minhash signatures, regex chains, Arrow UDF
-    stages) upstream of the first exchange runs in ONE task while the
-    other cores idle (guide §2.5 "input skew ... otherwise repartition
-    immediately after the read").
+    when an exchange-free frame yields fewer partitions — a NO-OP at
+    production scale (a 100 TB input is ~800k splits), load-bearing only
+    for small unsplittable inputs: a single parquet file written as one
+    row group cannot be split, so every per-row-expensive projection
+    (minhash, regex chains, Arrow UDF stages) upstream of the first
+    exchange runs in ONE task while the other cores idle (guide §2.5).
 
     Call it on the NARROW projection (after column pruning) so the
     round-robin exchange carries only the columns the operator needs.
-    Streaming inputs pass through untouched (partitioning is the
-    stream source's concern, and ``.rdd`` is illegal on them)."""
+    Never starts a Spark job: a plan holding an exchange is wrapped in
+    ``AdaptiveSparkPlanExec`` and passes through, since the exchange
+    already sized the stage; an exchange-free plan reads its count from
+    the file index or the checkpointed RDD. Streams pass through."""
     if df.isStreaming:
         return df
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= parallelism:
+    if plan.execute().getNumPartitions() >= parallelism:
         return df
     return df.repartition(parallelism)
 

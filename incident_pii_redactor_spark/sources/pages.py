@@ -5,7 +5,7 @@ Authoritative input shape (BASELINE.json input_hint):
 
 Content classes in known proportion, tagged via the url path so tests can
 assert per-class behavior; hosts are Zipf-skewed over ~50 synthetic
-domains so a few hosts dominate (exercises the salted repartition).
+domains so a few hosts dominate (host skew).
 Everything is seeded per-row (``random.Random(seed<<32 | row)``) so any
 subset of rows can be regenerated independently and in parallel — no
 sequential RNG state, no wall clock.

@@ -10,7 +10,7 @@ ties, empty ``Disallow:`` = allow-all, missing robots = allow-all.
 
 Scale shape: the frontier joins to the per-host robots table on the
 host key (one equi-join — AQE broadcasts a small robots side or
-sort-merges, and a skewed frontier host salts like any hot key), then
+sort-merges, and AQE's skew-join splits a skewed frontier host), then
 one ``mapInPandas`` evaluates rows with an in-batch parse cache keyed
 by the robots body hash, so each distinct robots.txt is parsed once
 per task, not once per URL. No Python in any other stage."""

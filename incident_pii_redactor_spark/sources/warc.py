@@ -39,8 +39,7 @@ from typing import Iterable, Iterator
 
 import pandas as pd
 
-PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
-                "text string, lang string")
+from incident_pii_redactor_spark.sources.catalog import PAGES_SCHEMA
 
 _GZIP_MAGIC = b"\x1f\x8b"
 _CRLF2 = b"\r\n\r\n"

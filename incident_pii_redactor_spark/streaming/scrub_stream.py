@@ -16,10 +16,7 @@ from pyspark.sql import functions as F
 
 from incident_pii_redactor_spark.operators.scrub import quality_scrub
 from incident_pii_redactor_spark.quality.scorer import QualityConfig, WEB_DEFAULT
-
-# single authoritative pages schema (review round 5: a StructType copy
-# here could drift from the canonical DDL the sources share)
-from incident_pii_redactor_spark.sources.warc import PAGES_SCHEMA
+from incident_pii_redactor_spark.sources.catalog import PAGES_SCHEMA
 
 
 def read_pages_stream(spark: SparkSession, path: str,

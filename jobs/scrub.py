@@ -27,9 +27,10 @@ Execution model (SURVEY.md §3.4):
   clock — completed_ts is a job ARG, FIXTURES.md F4).
 
 Scale notes: the scrub itself is shuffle-free; the only shuffles are the
-per-group redactions_by_type rollup (tiny) and the optional salted
-repartition for skewed inputs (--salt on). html:binary is pruned at the
-parquet scan because the operator selects only (url, text).
+per-group redactions_by_type rollup (tiny) and, with --salt, a url-hash
+exchange to defaultParallelism tasks that evens out task sizes over
+skewed, unsplittable input files; the scrub keeps its sizing. html:binary
+is pruned at the parquet scan because the operator selects only (url, text).
 """
 
 from __future__ import annotations
@@ -54,7 +55,6 @@ from incident_pii_redactor_spark.operators.resume import (
     completed_buckets,
     with_bucket,
 )
-from incident_pii_redactor_spark.operators.salting import salted_repartition
 from incident_pii_redactor_spark.sources.catalog import read_pages
 from incident_pii_redactor_spark.operators.scrub import quality_scrub
 from incident_pii_redactor_spark.plans import build_session
@@ -89,9 +89,9 @@ def parse_args(argv=None):
                         "<3 sentences) BEFORE quality scoring. Pure "
                         "Catalyst narrow map — no shuffle added")
     p.add_argument("--salt", action="store_true",
-                   help="salted repartition on url before scrubbing")
-    p.add_argument("--num-partitions", type=int, default=0,
-                   help="target partitions for --salt (0 = default parallelism)")
+                   help="url-hash repartition to default parallelism "
+                        "before scrubbing: evens out task sizes over "
+                        "skewed, unsplittable input files")
     p.add_argument("--master", default=None)
     p.add_argument("--ignore-corrupt-files", action="store_true",
                    help="skip unreadable input files instead of failing "
@@ -172,8 +172,8 @@ def run(args, spark=None) -> dict:
         for group in groups:
             chunk = df.filter(F.col(BUCKET_COL).isin(group))
             if args.salt:
-                nparts = args.num_partitions or spark.sparkContext.defaultParallelism
-                chunk = salted_repartition(chunk, "url", nparts)
+                chunk = chunk.repartition(
+                    spark.sparkContext.defaultParallelism, "url")
             out = quality_scrub(
                 chunk, id_cols=("url", "warc_ts", "lang", BUCKET_COL),
                 cfg=WEB_DEFAULT,

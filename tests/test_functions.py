@@ -111,24 +111,6 @@ def test_text_column_functions(spark):
     assert "[REDACTED_EMAIL]" in r.red and "a@b.co" not in r.red
 
 
-def test_salted_repartition_spreads_hot_key(spark):
-    from incident_pii_redactor_spark.operators.salting import (
-        salted_key,
-        salted_repartition,
-    )
-
-    df = spark.range(1000).select(
-        F.concat(F.lit("https://hot.example.com/p"), F.col("id")).alias("url")
-    )
-    out = salted_repartition(df, "url", 8, n_salts=8)
-    sizes = out.groupBy(F.spark_partition_id().alias("p")).count().collect()
-    assert len(sizes) > 1  # a single hot host spans multiple partitions
-    # salt is deterministic
-    a = df.select(salted_key(F.col("url"), 8).alias("s")).collect()
-    b = df.select(salted_key(F.col("url"), 8).alias("s")).collect()
-    assert a == b
-
-
 def test_recommendations_a6():
     from incident_pii_redactor_spark.core.validate import recommendations
 

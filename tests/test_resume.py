@@ -15,7 +15,7 @@ from jobs.scrub import parse_args, run
 def _read_all(spark, path):
     return (
         spark.read.parquet(path)
-        .select("url", "keep", "text_scrubbed")
+        .select("url", "keep", "text_scrubbed", "drop_reason")
         .toPandas()
         .set_index("url")
         .sort_index()
@@ -335,26 +335,33 @@ def test_manifest_is_rollup_of_written_output(spark, pages_parquet,
         assert all(m.loc[m.partition_id > 0, "redactions_by_type"])
 
 
-def test_scrub_job_count(spark, pages_parquet, tmp_path_factory):
+@pytest.mark.parametrize("extra", [[], ["--salt"]], ids=["plain", "salt"])
+def test_scrub_job_count(spark, pages_parquet, tmp_path_factory, cold_run,
+                         extra):
     """One run of 2 groups (8 buckets, 4 per group) runs 11 Spark jobs:
-    read_pages' 100-row sample check, then per group 2 for the write (the scan's
-    parallelism exchange and the write), 2 for the redaction rollup and 1
-    for the manifest append. Building the manifest by re-reading the
-    group's output with schema inference, two aggregations and a join
-    took 17."""
+    read_pages' 100-row sample check, then per group 2 for the write (the
+    scan's parallelism exchange, or the url exchange under --salt, and the
+    write), 2 for the redaction rollup and 1 for the manifest append.
+    Building the manifest by re-reading the group's output with schema
+    inference, two aggregations and a join took 17. Under --salt the
+    floor must not ask the exchanged frame for its partition count, which
+    runs the exchange as a job of its own (13). --salt only moves rows
+    between tasks, so every url's scrubbed row equals the cold run's."""
     d = tmp_path_factory.mktemp("job_count")
     sc = spark.sparkContext
-    sc.setJobGroup("scrub_job_count", "scrub job count")
+    group = "scrub_job_count" + "".join(extra)
+    sc.setJobGroup(group, "scrub job count")
     try:
         stats = run(parse_args(
             ["--input", pages_parquet, "--output", str(d / "out"),
              "--manifest", str(d / "mf"), "--n-buckets", "8",
-             "--bucket-group-size", "4"]), spark=spark)
+             "--bucket-group-size", "4", *extra]), spark=spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert stats["groups_run"] == 2
-    assert len(sc.statusTracker().getJobIdsForGroup("scrub_job_count")) == 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    pd.testing.assert_frame_equal(_read_all(spark, str(d / "out")), cold_run)
 
 
 def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):

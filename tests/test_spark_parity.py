@@ -112,15 +112,44 @@ def test_scrub_plan_is_narrow_and_pruned(spark, pages_parquet):
 
 def test_scan_parallelism_floor_is_noop_on_wide_input(spark, pages_parquet):
     """The floor must vanish when the source already has >= default
-    parallelism partitions — the production (many-splits) case."""
+    parallelism partitions — the production (many-splits) case — and
+    after an exchange, which already sized the stage. It decides from
+    the physical plan alone: no frame makes it start a Spark job, and
+    no module of the package asks a frame for its RDD."""
+    import pathlib
+
+    import incident_pii_redactor_spark
     from incident_pii_redactor_spark.plans import scan_parallelism_floor
 
-    p = spark.sparkContext.defaultParallelism
-    wide = spark.read.parquet(pages_parquet).repartition(p + 1)
-    assert scan_parallelism_floor(wide) is wide
-    narrow = spark.read.parquet(pages_parquet).coalesce(1)
-    floored = scan_parallelism_floor(narrow)
-    assert floored.rdd.getNumPartitions() == p
+    sc = spark.sparkContext
+    p = sc.defaultParallelism
+    scan = spark.read.parquet(pages_parquet)
+    assert scan.rdd.getNumPartitions() == 1  # one small file, one split
+    frames = {
+        "scan": scan,
+        "checkpoint": scan.localCheckpoint(),
+        "wide_checkpoint": scan.repartition(p + 1).localCheckpoint(),
+        "exchange": scan.repartition(8, "url"),
+        "distinct": scan.select("url").distinct(),
+    }
+    floored = {}
+    for name, df in frames.items():
+        group = "floor_jobs_" + name
+        sc.setJobGroup(group, "scan_parallelism_floor")
+        try:
+            floored[name] = scan_parallelism_floor(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, name
+    for name in ("scan", "checkpoint"):
+        assert floored[name].rdd.getNumPartitions() == p, name
+    for name in ("wide_checkpoint", "exchange", "distinct"):
+        assert floored[name] is frames[name], name
+    pkg = pathlib.Path(incident_pii_redactor_spark.__file__).parent
+    with_rdd = [str(f.relative_to(pkg)) for f in sorted(pkg.rglob("*.py"))
+                if ".rdd" in f.read_text()]
+    assert with_rdd == []
 
 
 def test_toxic_class_dropped(spark_out):
