@@ -10,7 +10,7 @@ bench:
 	python bench.py
 
 scaling:
-	python tools/bench_scaling.py --passes 2 --rows 100000
+	python tools/bench_scaling.py --passes 2
 
 # the linear-time regex gate alone: differential tests of the rewritten
 # patterns and the n -> 4n growth test of every detect/validate pattern,

@@ -61,17 +61,12 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        # honor spark-submit --master: setting .master() here would
-        # silently override it and run a "cluster" job in local mode on
-        # the submit host. Only default to local[] when nothing chose one.
-        from pyspark import SparkConf
-
-        try:
-            preset = SparkConf().get("spark.master", None)
-        except Exception:
-            preset = None
-        master = None if preset else f"local[{cpus}]"
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # Only a plain `python` run defaults to local[]. Under
+        # spark-submit (which starts the gateway and sets this variable
+        # before the script runs) .master() would override its --master
+        # and run a cluster job in local mode on the submit host.
+        master = f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 32)
 
     builder = (

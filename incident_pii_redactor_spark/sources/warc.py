@@ -194,25 +194,6 @@ def records_to_page_rows(data: bytes,
                    "lang": lang}
 
 
-def blobs_to_page_batches(blobs,
-                          max_record_bytes: int = 64 * 1024 * 1024,
-                          batch_rows: int = 1024) -> Iterator[pd.DataFrame]:
-    """Shared parse loop for the batch reader AND the streaming source
-    (one definition — the two inner closures had drifted-copy risk,
-    review round 5): WARC file blobs -> bounded pandas batches in the
-    ``pages`` shape."""
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-    for blob in blobs:
-        rows = []
-        for row in records_to_page_rows(bytes(blob), max_record_bytes):
-            rows.append(row)
-            if len(rows) >= batch_rows:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-
 def read_warc(spark, path, max_record_bytes: int = 64 * 1024 * 1024,
               batch_rows: int = 1024):
     """Distributed WARC/WET -> pages DataFrame.
@@ -228,10 +209,20 @@ def read_warc(spark, path, max_record_bytes: int = 64 * 1024 * 1024,
     files = (spark.read.format("binaryFile").load(path)
              .select("path", "content"))
 
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+
     def parse(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield from blobs_to_page_batches(
-                pdf["content"], max_record_bytes, batch_rows)
+            for blob in pdf["content"]:
+                rows = []
+                for row in records_to_page_rows(bytes(blob),
+                                                max_record_bytes):
+                    rows.append(row)
+                    if len(rows) >= batch_rows:
+                        yield pd.DataFrame(rows, columns=cols)
+                        rows = []
+                if rows:
+                    yield pd.DataFrame(rows, columns=cols)
 
     out = files.mapInPandas(parse, PAGES_SCHEMA)
     # binaryFile emits no row for an empty glob only at action time;

@@ -9,26 +9,23 @@ dedup-by-arbitrary-expression with TTL'd state, so this is the canonical
 * key  = content fingerprint (md5 of normalized text, computed JVM-side
   by `functions.text.fingerprint` so the shuffle key never enters Python)
 * state = a single seen-flag per fingerprint with an OPTIONAL
-  processing-time timeout (state TTL bounds memory at 10^12-doc scale:
+  event-time timeout (state TTL bounds memory at 10^12-doc scale:
   state size is O(distinct fingerprints within the TTL window), not
   O(stream))
 * output = only the first row per fingerprint.
 
-TTL semantics (round-2 fix): registering processing-time timers makes
+TTL semantics: the TTL is event time only. Processing-time timers make
 ``Trigger.AvailableNow`` queries NEVER terminate — Spark keeps
 scheduling ~0.8 s empty microbatches to service the pending timers
-(measured 200+ empty batches; round-1 tests masked this by reading
-committed output after an awaitTermination timeout while the query kept
-burning CPU). Three modes:
+(measured 200+ empty batches), so the operators offer none. Two modes:
 
-* ``event_ttl_ms > 0`` (recommended): EVENT-time TTL — a watermark on
-  the timestamp column drives eviction, so state is bounded to the TTL
-  window of event time AND drained queries terminate (measured ~11 s for
-  the same batch that hung forever with processing-time timers). Works
-  for continuous AND repeated availableNow (cron) deployments: each
-  run's new data advances the watermark and evicts old buckets.
-* ``ttl_ms > 0``: processing-time TTL — continuous deployments only.
-* both 0: NoTimeout — unbounded state, bounded/drain runs.
+* ``event_ttl_ms > 0``: a watermark on the timestamp column drives
+  eviction, so state is bounded to the TTL window of event time AND
+  drained queries terminate (measured ~11 s for the same batch that hung
+  forever with processing-time timers). Works for continuous AND
+  repeated availableNow (cron) deployments: each run's new data advances
+  the watermark and evicts old buckets.
+* ``event_ttl_ms == 0``: NoTimeout — unbounded state, bounded/drain runs.
 
 State store scaling: keys are uniform hashes, so the state shuffle has no
 skew; RocksDB state backend handles spill on real clusters.
@@ -53,7 +50,7 @@ from incident_pii_redactor_spark.functions.text import fingerprint
 STATE_SCHEMA = "seen boolean, anchor_ms bigint"
 
 
-def _set_ttl(state: GroupState, ttl_ms: int, event_ttl_ms: int,
+def _set_ttl(state: GroupState, event_ttl_ms: int,
              max_event_ms: int = 0) -> None:
     if event_ttl_ms > 0:
         # Evict when the watermark passes (group's event time + TTL).
@@ -66,8 +63,6 @@ def _set_ttl(state: GroupState, ttl_ms: int, event_ttl_ms: int,
         # late data carries an event time the watermark already passed.
         anchor = max(int(max_event_ms), state.getCurrentWatermarkMs())
         state.setTimeoutTimestamp(anchor + event_ttl_ms)
-    elif ttl_ms > 0:
-        state.setTimeoutDuration(ttl_ms)
 
 
 def _max_event_ms(pdf: pd.DataFrame, ts_col: str = "warc_ts") -> int:
@@ -82,16 +77,13 @@ def _max_event_ms(pdf: pd.DataFrame, ts_col: str = "warc_ts") -> int:
     return int(pd.Timestamp(m).value // 1_000_000)
 
 
-def _timeout_conf(ttl_ms: int, event_ttl_ms: int):
+def _timeout_conf(event_ttl_ms: int):
     if event_ttl_ms > 0:
         return GroupStateTimeout.EventTimeTimeout
-    if ttl_ms > 0:
-        return GroupStateTimeout.ProcessingTimeTimeout
     return GroupStateTimeout.NoTimeout
 
 
-def _make_emit_first(ttl_ms: int, event_ttl_ms: int = 0,
-                     ts_col: str = "warc_ts"):
+def _make_emit_first(event_ttl_ms: int = 0, ts_col: str = "warc_ts"):
     def emit_first(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -130,14 +122,13 @@ def _make_emit_first(ttl_ms: int, event_ttl_ms: int = 0,
             for pdf in pdfs:  # drain; duplicates still refresh the TTL
                 max_ev = max(max_ev, _max_event_ms(pdf, ts_col))
         state.update((True, max_ev))
-        _set_ttl(state, ttl_ms, event_ttl_ms, max_ev)
+        _set_ttl(state, event_ttl_ms, max_ev)
 
     return emit_first
 
 
 def streaming_exact_dedup(pages: DataFrame, text_col: str = "text",
-                          ttl_ms: int = 0, event_ttl_ms: int = 0,
-                          ts_col: str = "warc_ts",
+                          event_ttl_ms: int = 0, ts_col: str = "warc_ts",
                           watermark_delay: str = "10 minutes",
                           key_expr=None) -> DataFrame:
     """First occurrence per dedup key across the whole stream. The key
@@ -146,9 +137,8 @@ def streaming_exact_dedup(pages: DataFrame, text_col: str = "text",
     ``canonical_url('url')`` turns this into streaming cross-snapshot
     URL dedup (a crawler re-fetching the same page under tracking-param
     variants) with zero operator changes.
-    Input: streaming DataFrame with url/text[/ts_col]. TTL modes: see
-    module docstring — ``event_ttl_ms`` (event-time, recommended),
-    ``ttl_ms`` (processing-time, continuous only), both 0 = unbounded."""
+    Input: streaming DataFrame with url/text[/ts_col]. TTL: see module
+    docstring — ``event_ttl_ms`` (event time), 0 = unbounded."""
     if "_fp" in pages.columns:
         # refuse instead of silently clobbering: the output schema is
         # built from the input schema, so a clobbered _fp would die as
@@ -164,9 +154,9 @@ def streaming_exact_dedup(pages: DataFrame, text_col: str = "text",
         for f in pages.schema.fields
     )
     return keyed.groupBy("_fp").applyInPandasWithState(
-        _make_emit_first(ttl_ms, event_ttl_ms, ts_col),
+        _make_emit_first(event_ttl_ms, ts_col),
         outputStructType=out_schema,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=_timeout_conf(ttl_ms, event_ttl_ms),
+        timeoutConf=_timeout_conf(event_ttl_ms),
     )

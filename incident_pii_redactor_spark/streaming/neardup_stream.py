@@ -41,11 +41,10 @@ one band's collision probability — VERDICT item 6):
   routed to a single exact-fingerprint key (``_short:md5(text)``), so
   they dedup exactly but can never near-dup-collide with each other
   (the batch path filters them for the same reason).
-* TTL modes (shared with dedup_stream — see its module docstring for
-  the availableNow timer measurement): ``event_ttl_ms`` (event-time,
-  watermark-driven, anchored to the group's max event time — bounds
-  state AND terminates drained queries), ``ttl_ms`` (processing-time —
-  continuous deployments only), both 0 = NoTimeout.
+* TTL (shared with dedup_stream — see its module docstring for why it
+  is event time only): ``event_ttl_ms`` (watermark-driven, anchored to
+  the group's max event time — bounds state AND terminates drained
+  queries), 0 = NoTimeout.
 """
 
 from __future__ import annotations
@@ -79,8 +78,8 @@ def _agreement(a: list[str], b: list[str]) -> float:
     return sum(x == y for x, y in zip(a, b)) / max(len(a), 1)
 
 
-def _make_band_fn(threshold: float, max_kept: int, ttl_ms: int,
-                  event_ttl_ms: int = 0, ts_col: str = "warc_ts"):
+def _make_band_fn(threshold: float, max_kept: int, event_ttl_ms: int = 0,
+                  ts_col: str = "warc_ts"):
     """Stage 1: per band-bucket verdicts. Emits EVERY row, adding
     ``_matched`` (this band saw a stored near-dup signature)."""
 
@@ -120,7 +119,7 @@ def _make_band_fn(threshold: float, max_kept: int, ttl_ms: int,
             out["_matched"] = matched
             yield out
         state.update((_SIG_SEP.join("|".join(s) for s in kept), max_ev))
-        _set_ttl(state, ttl_ms, event_ttl_ms, max_ev)
+        _set_ttl(state, event_ttl_ms, max_ev)
 
     return band_group
 
@@ -157,7 +156,6 @@ def streaming_neardup_dedup(
     bands: int = 4,
     threshold: float = 0.5,
     max_kept: int = 16,
-    ttl_ms: int = 0,
     event_ttl_ms: int = 0,
     ts_col: str = "warc_ts",
     watermark_delay: str = "10 minutes",
@@ -214,11 +212,11 @@ def streaming_neardup_dedup(
         f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields
     )
     stage1 = keyed.groupBy("_key").applyInPandasWithState(
-        _make_band_fn(threshold, max_kept, ttl_ms, event_ttl_ms, ts_col),
+        _make_band_fn(threshold, max_kept, event_ttl_ms, ts_col),
         outputStructType=f"{carried}, _sig string, _nb int, _matched boolean",
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=_timeout_conf(ttl_ms, event_ttl_ms),
+        timeoutConf=_timeout_conf(event_ttl_ms),
     )
     # The _doc Project between the state op and the exchange is
     # LOAD-BEARING beyond being the grouping key: Spark 4.1's

@@ -130,7 +130,6 @@ def parse_args(argv=None):
                    help="no-op, kept for old callers: per-stage counts "
                         "ride each stage's one materialization and cost "
                         "no extra job")
-    p.add_argument("--master", default=None)
     args = p.parse_args(argv)
     # fail before the input read and the earlier stages run; 0-word
     # shingles would run as unigrams and a threshold above 1 (or NaN)
@@ -216,7 +215,7 @@ def near_dedup(df, args):
 def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
-        spark = build_session("pages-dedup", master=args.master)
+        spark = build_session("pages-dedup")
     try:
         df = read_pages(spark, args.input)
         if args.from_html:

@@ -48,14 +48,13 @@ def parse_args(argv=None):
     p.add_argument("--key-col", default="url")
     p.add_argument("--text-col", default="text")
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--master", default=None)
     return p.parse_args(argv)
 
 
 def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
-        spark = build_session("shard-export", master=args.master)
+        spark = build_session("shard-export")
     try:
         df = spark.read.parquet(args.input)
         # repartition on shard BEFORE the window: the window requires

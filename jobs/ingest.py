@@ -61,14 +61,13 @@ def parse_args(argv=None):
     p.add_argument("--mimes", nargs="+", default=["text/html"])
     p.add_argument("--keep-junk-urls", action="store_true",
                    help="skip the C4-era URL-shape junk filter")
-    p.add_argument("--master", default=None)
     return p.parse_args(argv)
 
 
 def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
-        spark = build_session("crawl-ingest", master=args.master)
+        spark = build_session("crawl-ingest")
     try:
         obs: dict = {}
 

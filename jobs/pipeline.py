@@ -54,7 +54,6 @@ def parse_args(argv=None):
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--bucket-group-size", type=int, default=8)
     p.add_argument("--run-id", default="run1")
-    p.add_argument("--master", default=None)
     args = p.parse_args(argv)
     if args.dedup_mode == "none":
         # fail fast instead of silently ignoring dedup-stage flags
@@ -79,7 +78,7 @@ def run(args, spark=None) -> dict:
 
     owns = spark is None
     if owns:
-        spark = build_session("pii-pipeline", master=args.master)
+        spark = build_session("pii-pipeline")
     try:
         deduped = os.path.join(args.workdir, "deduped")
         stats: dict = {}

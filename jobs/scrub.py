@@ -1,6 +1,6 @@
 """Production scrub job: resumable quality-filter + PII-scrub over a pages table.
 
-Usage (local test; on a cluster swap --master / add --py-files engine.zip):
+Usage (spark-submit chooses the master; ship the package with --py-files):
 
     spark-submit --py-files engine.zip jobs/scrub.py \
         --input  /data/pages_parquet \
@@ -92,7 +92,6 @@ def parse_args(argv=None):
                    help="url-hash repartition to default parallelism "
                         "before scrubbing: evens out task sizes over "
                         "skewed, unsplittable input files")
-    p.add_argument("--master", default=None)
     p.add_argument("--ignore-corrupt-files", action="store_true",
                    help="skip unreadable input files instead of failing "
                         "the job (spark.sql.files.ignoreCorruptFiles): at "
@@ -115,7 +114,7 @@ def parse_args(argv=None):
 def run(args, spark=None) -> dict:
     owns_session = spark is None
     if owns_session:
-        spark = build_session("pii-scrub-job", master=args.master)
+        spark = build_session("pii-scrub-job")
     _corrupt_key = "spark.sql.files.ignoreCorruptFiles"
     _corrupt_old = spark.conf.get(_corrupt_key)
     if args.ignore_corrupt_files:

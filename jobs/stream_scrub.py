@@ -71,7 +71,6 @@ def parse_args(argv=None):
                    help="drain existing files and exit (cron-style)")
     p.add_argument("--timeout-sec", type=int, default=0,
                    help="stop after N seconds (0 = run forever)")
-    p.add_argument("--master", default=None)
     return p.parse_args(argv)
 
 
@@ -91,8 +90,7 @@ def run(args, spark=None) -> dict:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider"
             )
-        spark = build_session("pii-scrub-stream", master=args.master,
-                              extra_conf=extra)
+        spark = build_session("pii-scrub-stream", extra_conf=extra)
     queries = []
     try:
         pages = read_pages_stream(

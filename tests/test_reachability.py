@@ -8,7 +8,8 @@ dead weight. These tests walk the code statically (``ast``, no Spark)
 from those seeds: first the import graph between modules, then the names
 each reached definition uses. They name every package module, and every
 top-level ``def``, ``class`` or assignment in a reached module, that the
-walk never reaches.
+walk never reaches. A last test keeps the other direction live: every
+script that the Makefile, README.md or CLAUDE.md names must exist.
 """
 
 from __future__ import annotations
@@ -199,3 +200,14 @@ def test_every_top_level_definition_is_reached():
     assert not unreached, (
         f"top-level definitions no job, tool, registry query or bench "
         f"path uses: {unreached}")
+
+
+def test_scripts_named_in_docs_exist():
+    named = set()
+    for doc in ("Makefile", "README.md", "CLAUDE.md"):
+        with open(os.path.join(REPO, doc)) as f:
+            named |= set(re.findall(r"\b(?:jobs|tools|perfbench)/\w+\.py",
+                                    f.read()))
+    missing = sorted(p for p in named
+                     if not os.path.exists(os.path.join(REPO, p)))
+    assert named and not missing, f"scripts named but missing: {missing}"

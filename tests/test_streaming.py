@@ -163,6 +163,8 @@ def test_event_time_ttl_evicts_dedup_state(spark, tmp_path_factory):
     still terminate under availableNow (the whole point vs
     processing-time timers)."""
     import datetime as dt
+    import os
+    import time
 
     import pandas as pd
     import pyarrow as pa
@@ -195,6 +197,11 @@ def test_event_time_ttl_evicts_dedup_state(spark, tmp_path_factory):
                                 "more unrelated words moving time on", "en")])
         mk(f"{d}/b3.parquet", [("u4", t0 + dt.timedelta(hours=6), b"",
                                 text_a, "en")])
+        # the file source reads files in modification-time order, and a
+        # fast loop can give two files the same mtime: space them 1 s apart
+        base = time.time() - 4
+        for i in range(4):
+            os.utime(f"{d}/b{i}.parquet", (base + i, base + i))
         pages = (spark.readStream.schema(
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string").option("maxFilesPerTrigger", 1).parquet(d))

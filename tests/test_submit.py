@@ -3,7 +3,7 @@
 package resolves only through the shipped zip (what a real cluster
 submit looks like — the Makefile's ``submit-smoke`` as a pytest gate),
 and so does one embedding path, whose UDFs import the package on the
-workers."""
+workers. A session built with no master keeps the one spark-submit chose."""
 
 from __future__ import annotations
 
@@ -74,6 +74,31 @@ def test_spark_submit_py_files_package(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert "centroids (3, 8) pairs 1" in out.stdout, out.stdout[-2000:]
 
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
+def test_build_session_keeps_spark_submit_master(tmp_path):
+    """``build_session()`` with no master runs at the master spark-submit
+    was given, not at its ``local[$SPARK_GRAFT_CPUS]`` default."""
+    script = tmp_path / "master.py"
+    script.write_text(MASTER_SCRIPT)
+    out = subprocess.run(
+        ["spark-submit", "--master", "local[3]",
+         "--conf", "spark.ui.enabled=false", str(script)],
+        cwd=str(tmp_path), env=dict(os.environ, PYTHONPATH=REPO),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "master local[3]" in out.stdout, out.stdout[-2000:]
+
+
+MASTER_SCRIPT = """
+from incident_pii_redactor_spark.plans import build_session
+
+spark = build_session()
+print("master", spark.sparkContext.master)
+spark.stop()
+"""
 
 EMB_SCRIPT = """
 import numpy as np

@@ -1,235 +1,123 @@
-"""Two-cluster-size scaling evidence (north rule: throughput scaling
-efficiency >= 0.8 between N and 4N executors).
+"""N -> 4N scaling ladder of the real scrub job (north-star criterion:
+throughput scaling efficiency >= 0.8 between N and 4N executors).
 
-No real cluster exists in this sandbox, so per BASELINE.md the same
-scrub job runs at local[8] (N) and local[32] (4N) on IDENTICAL input —
-the sharded page corpus (--rows, default 100k) — in fresh JVMs (subprocesses), measuring
-steady-state throughput (one warm-up pass per JVM, then the timed
-passes). Writes BENCH/BASELINE.md and prints a JSON summary.
+One host has no cluster, so the ladder runs ``jobs/scrub.py`` over the
+benchmark's ``scrub_adversarial`` corpus at ``local[N]`` and ``local[4N]``,
+N = max(1, usable cores // 4), each pass in a fresh JVM through
+``perfbench/scaling.py::spark_leg`` (the set-up and warm-up job of a timed
+benchmark run); a level reports its best pass. A bare ``multiprocessing``
+control makes the same per-document calls on the same corpus in N and 4N
+forked processes, with no Spark: when both lose efficiency together, the
+limit is the host, not the engine.
 
-Usage: python tools/bench_scaling.py [--rows 100000] [--passes 2]
+Each run prints a JSON summary and appends one dated section to
+``BENCH/BASELINE.md`` under "Real-job ladder (`jobs/scrub.py`)".
+
+Usage: python tools/bench_scaling.py [--passes 2]
 """
 
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
+import multiprocessing as mp
 import os
-import subprocess
+import shutil
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [os.path.join(REPO, "perfbench"), REPO]
 
-CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from incident_pii_redactor_spark.plans import build_session
-from incident_pii_redactor_spark.operators import quality_scrub
+import corpora  # noqa: E402
+import harness  # noqa: E402
+import scaling  # noqa: E402
 
-spark = build_session("scaling", master={master!r},
-                      shuffle_partitions={cores})
-spark.sparkContext.setLogLevel("ERROR")
-df = spark.read.parquet({corpus!r})
-quality_scrub(df).count()  # warm-up: JIT + python worker pool
-times = []
-for _ in range({passes}):
-    t0 = time.time()
-    n = quality_scrub(df).count()
-    times.append(time.time() - t0)
-print("RESULT " + json.dumps({{"rows": n, "times": times}}))
-spark.stop()
-"""
+WORKLOAD = "scrub_adversarial"
+SEED = 1
+LEG_TIMEOUT_S = 900
+BASELINE = os.path.join(REPO, "BENCH", "BASELINE.md")
+HEADING = "## Real-job ladder (`jobs/scrub.py`)"
+
+_TEXTS: list[str] = []  # fork-inherited (copy-on-write), never pickled
 
 
-_MP_TEXTS: "list[str]" = []  # fork-inherited shared corpus (copy-on-write)
+def _scrub_all(_: int) -> int:
+    return scaling._mp_work(_TEXTS)
 
 
-def _mp_work(_chunk_id: int) -> int:
-    from incident_pii_redactor_spark.core import scrub_document
-    from incident_pii_redactor_spark.quality.scorer import WEB_DEFAULT, quality_signals
-
-    import pandas as pd
-
-    sig = quality_signals(pd.Series(_MP_TEXTS), WEB_DEFAULT)
-    for t, k in zip(_MP_TEXTS, sig["keep"]):
-        if k:
-            scrub_document(t)
-    return len(_MP_TEXTS)
+def _raw_mp_throughput(procs: int) -> float:
+    """Docs/s of ``procs`` forked processes, each scoring and scrubbing
+    the whole corpus it inherited: only the per-document work is timed,
+    with no input sent to the workers."""
+    with mp.get_context("fork").Pool(procs) as pool:
+        pool.map(_scrub_all, range(procs))  # warm-up: imports, lazy tables
+        t0 = time.perf_counter()
+        done = sum(pool.map(_scrub_all, range(procs)))
+        return done / (time.perf_counter() - t0)
 
 
-def _raw_mp_throughput(procs: int, docs_per_proc: int = 2000) -> float:
-    """Raw fork+scrub throughput, data generated ONCE in the parent and
-    inherited by fork — measures only the per-doc work, no generation or
-    IPC, so it is a true hardware ceiling for this workload."""
-    import multiprocessing as mp
-    import time
-
-    global _MP_TEXTS
-    if not _MP_TEXTS:
-        from incident_pii_redactor_spark.sources.pages import synth_pages
-
-        _MP_TEXTS = list(synth_pages(docs_per_proc)["text"])
-    ctx = mp.get_context("fork")
-    with ctx.Pool(procs) as pool:
-        pool.map(_mp_work, range(procs))  # warm-up: imports + model tables
-        t0 = time.time()
-        pool.map(_mp_work, range(procs))
-        dt = time.time() - t0
-    return procs * docs_per_proc / dt
-
-
-def run_one(master: str, cores: int, corpus: str, passes: int) -> dict:
-    code = CHILD.format(repo=REPO, master=master, cores=cores,
-                        corpus=corpus, passes=passes)
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        timeout=1200,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"{master} failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
+def append_section(summary: dict) -> None:
+    n, n4 = summary["levels"]
+    rows = [f"| local[{lv}] | {summary['docs_per_s'][lv]:.1f} | "
+            f"{', '.join(f'{s:.2f}' for s in summary['job_s'][lv])} | "
+            f"{summary['control_docs_per_s'][lv]:.1f} |" for lv in (n, n4)]
+    with open(BASELINE) as f:
+        has_heading = HEADING in f.read()
+    with open(BASELINE, "a") as f:
+        if not has_heading:
+            f.write(f"\n{HEADING}\n\nAppended by `make scaling`, one section"
+                    " per run (`tools/bench_scaling.py`).\n")
+        f.write(
+            f"\n### {summary['date']}\n\n"
+            f"`{WORKLOAD}` seed {SEED} ({summary['rows']:,} pages), best of "
+            f"{summary['passes']} fresh-JVM passes per level, "
+            f"{summary['cores']} usable cores.\n\n"
+            "| level | docs/s (Spark, best pass) | job s, every pass | "
+            "docs/s (fork control) |\n|---|---|---|---|\n"
+            + "\n".join(rows) +
+            f"\n\nEfficiency {n} -> {n4}: Spark "
+            f"**{summary['efficiency']:.3f}**, control "
+            f"{summary['control_efficiency']:.3f}.\n")
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--rows", type=int, default=100_000)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--levels", type=int, nargs="+", default=[2, 8, 32])
-    args = ap.parse_args()
+    a = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    os.environ["BENCH_PAGES_N"] = str(args.rows)
-    import bench
+    harness.adopt_orphans()
+    work = os.path.join(harness.WORK_ROOT, f"scaling-{os.getpid()}")
+    cores = len(os.sched_getaffinity(0))
+    n = max(1, cores // 4)
+    levels = (n, 4 * n)
+    try:
+        corpus, _ = corpora.materialize(WORKLOAD, SEED, harness.CACHE_DIR)
+        warm = corpora.warmup_corpus(WORKLOAD, SEED,
+                                     os.path.join(work, "warm_in"))
+        job_s = {lv: [scaling.spark_leg(WORKLOAD, f"local[{lv}]", corpus.path,
+                                        warm, os.path.join(work, f"leg{lv}"),
+                                        LEG_TIMEOUT_S)
+                      for _ in range(a.passes)] for lv in levels}
+        _TEXTS[:] = corpus.pages["text"].fillna("").tolist()
+        control = {lv: _raw_mp_throughput(lv) for lv in levels}
+    finally:
+        harness.reap_all()
+        shutil.rmtree(work, ignore_errors=True)
 
-    bench.PAGES_N = args.rows
-    corpus = bench.pages_path()
-
-    # hardware calibration: raw python multiprocessing (zero Spark) on the
-    # same per-doc work -- bounds what ANY framework can achieve on this box
-    calib = {}
-    for procs in args.levels:
-        calib[procs] = _raw_mp_throughput(procs)
-        print(f"calibration {procs} procs: {calib[procs]:.0f} docs/sec (raw mp)")
-
-    results = {}
-    for cores in args.levels:
-        r = run_one(f"local[{cores}]", cores, corpus, args.passes)
-        best = min(r["times"])
-        results[cores] = {
-            "rows": r["rows"],
-            "times_sec": [round(t, 2) for t in r["times"]],
-            "best_sec": round(best, 2),
-            "docs_per_sec": round(r["rows"] / best, 1),
-        }
-        print(f"local[{cores}]: {results[cores]}")
-
-    pairs = []
-    for n in args.levels:
-        if n * 4 in results:
-            eff = results[n * 4]["docs_per_sec"] / results[n]["docs_per_sec"] / 4
-            hw = calib[n * 4] / calib[n] / 4
-            pairs.append(
-                {
-                    "N": n,
-                    "4N": n * 4,
-                    "efficiency": round(eff, 3),
-                    "hardware_ceiling_efficiency": round(hw, 3),
-                    "framework_relative_efficiency": round(min(eff / hw, 1.0), 3),
-                }
-            )
+    rate = {lv: corpus.rows / min(job_s[lv]) for lv in levels}
     summary = {
-        "metric": "scaling_efficiency_N_to_4N",
-        "pairs": pairs,
-        "throughput_docs_per_sec": {
-            str(c): results[c]["docs_per_sec"] for c in args.levels
-        },
-        "rows": args.rows,
-        "passes": args.passes,
+        "date": datetime.datetime.now(datetime.timezone.utc)
+        .strftime("%Y-%m-%d %H:%M UTC"),
+        "rows": corpus.rows, "passes": a.passes, "cores": cores,
+        "levels": levels, "job_s": job_s, "docs_per_s": rate,
+        "control_docs_per_s": control,
+        "efficiency": rate[4 * n] / (4 * rate[n]),
+        "control_efficiency": control[4 * n] / (4 * control[n]),
     }
     print(json.dumps(summary))
-
-    lvl_rows = "\n".join(
-        f"| local[{c}] | {c} | {results[c]['best_sec']} | "
-        f"{results[c]['docs_per_sec']} | {calib[c]:.0f} | "
-        f"{results[c]['times_sec']} |"
-        for c in args.levels
-    )
-    pair_rows = "\n".join(
-        f"| {p['N']} -> {p['4N']} | **{p['efficiency']}** | "
-        f"{p['hardware_ceiling_efficiency']} | "
-        f"{p['framework_relative_efficiency']} |"
-        for p in pairs
-    )
-    # prose generated FROM the numbers (round-1 verdict: the narrative
-    # must never overclaim what its own table shows)
-    pair_reading = "\n".join(
-        f"- {p['N']} -> {p['4N']} cores: Spark efficiency "
-        f"{p['efficiency']} ({'meets' if p['efficiency'] >= 0.8 else 'below'}"
-        f" the >= 0.8 target); the bare-multiprocessing ceiling on this box "
-        f"is {p['hardware_ceiling_efficiency']}, so framework-relative "
-        f"efficiency is {p['framework_relative_efficiency']}."
-        for p in pairs
-    )
-    md = f"""# BENCH -- scaling evidence (N vs 4N)
-
-North-rule criterion: throughput scaling efficiency >= 0.8 between N and
-4N executors. No real cluster exists in this sandbox, so per BASELINE.md
-the same fused quality+scrub job ran at multiple local parallelism
-levels on IDENTICAL input, in a fresh JVM per level, with one warm-up
-pass (JIT + Python worker pool) then {args.passes} timed passes
-(best-of reported).
-
-- Input: {args.rows:,} synthetic Common-Crawl-style pages (32 parquet
-  shards, deterministic, seed 42; avg ~730 chars of text per page).
-- Job: `quality_scrub` -- one narrow mapInPandas stage (langid ->
-  perplexity -> heuristics -> arbitrated PII scrub), zero shuffles.
-
-| level | cores | best time (s) | docs/sec (Spark) | docs/sec (raw mp ceiling) | all passes (s) |
-|---|---|---|---|---|---|
-{lvl_rows}
-
-## Pairwise N -> 4N efficiency
-
-"raw mp ceiling" = the same per-doc work under bare Python
-multiprocessing (zero Spark, zero Arrow, fork-shared input): the most
-this box can scale ANY implementation of this workload.
-
-| pair | Spark efficiency | hardware ceiling | framework-relative |
-|---|---|---|---|
-{pair_rows}
-
-## Reading
-
-{pair_reading}
-- Host-timing caveat: this VM shares its host and identical runs swing
-  2-3x (CLAUDE.md); the table reports best-of-{args.passes} per level in
-  fresh JVMs. The hardware-ceiling column is the control: when BOTH the
-  Spark job and bare multiprocessing lose efficiency at the same step,
-  the wall is the box (shared vCPU / memory bandwidth), not the engine.
-- The stage is embarrassingly parallel (no shuffle, no skewed key, no
-  driver collect, no cross-task state), which is the property that
-  matters on a real multi-NODE cluster: adding executors adds disjoint
-  file splits against separate memory buses. The single-box ceiling here
-  is a sandbox artifact, not a property of the job.
-
-## Versus the reference's single-node throughput
-
-The reference processes one document in 1-3 s (parallel mode, <1 KB docs,
-LLM-simulation path -- its own README.md:565; see BASELINE.md), i.e.
-~0.3-1 doc/sec per node. This engine scrubs the same class of documents
-at the throughputs above on one node -- roughly four orders of magnitude,
-from the same regex semantics expressed over Arrow batches instead of
-per-document asyncio.
-"""
-    # single-run report goes to last_scaling.md: BENCH/BASELINE.md is
-    # the CURATED multi-run history (every ladder ever run, with the
-    # host-state reading) and must never be clobbered by one invocation
-    # -- merge new runs into its run table by hand (bit round 4 AND 5)
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "last_scaling.md"), "w") as f:
-        f.write(md)
-    print("wrote BENCH/last_scaling.md (merge into BENCH/BASELINE.md's run history)")
+    append_section(summary)
 
 
 if __name__ == "__main__":

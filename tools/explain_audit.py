@@ -2,17 +2,22 @@
 join strategies, scan column width, pushed filters, and WholeStageCodegen
 coverage. The '.explain until it's the plan you'd want' loop, automated.
 
-Usage: python tools/explain_audit.py [sf_dir] [--md PLANS.md]
+Usage: python tools/explain_audit.py [sf_dir] [query ...] [--md PLANS.md]
+                                     [--dump DIR]
 (--md writes the audit as a markdown table — the committed PLANS.md
-artifact lets a reviewer read every query's plan shape without Spark.)
+artifact lets a reviewer read every query's plan shape without Spark.
+--dump writes each query's ``explain("formatted")`` to DIR/<query>.txt;
+a before/after comparison is two --dump directories. Query names limit
+the run to those queries.)
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _count_struct_cols(s: str) -> int:
@@ -34,10 +39,15 @@ def _count_struct_cols(s: str) -> int:
     return cols + 1
 
 
-def audit(sf_dir: str, md_path: str | None = None) -> None:
+def audit(sf_dir: str, md_path: str | None = None,
+          dump_dir: str | None = None, only: list[str] = ()) -> None:
     import __spark_entry__ as entrymod
     from incident_pii_redactor_spark.plans import build_session
 
+    queries = entrymod.queries()
+    unknown = sorted(set(only) - set(queries))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     spark = build_session("plan-audit", master="local[4]")
     # AQE wraps everything in AdaptiveSparkPlan(isFinalPlan=false), which
     # hides WholeStageCodegen spans until execution — disable it for the
@@ -45,11 +55,20 @@ def audit(sf_dir: str, md_path: str | None = None) -> None:
     # are unchanged; this session only explains)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
+    if dump_dir:
+        os.makedirs(dump_dir, exist_ok=True)
     rows = []
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
+        if only and name not in only:
+            continue
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            qe = df._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            if dump_dir:
+                with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
+                    f.write(spark._jvm.PythonSQLUtils.explainString(
+                        qe, "formatted"))
         except Exception as e:
             rows.append((name, None, str(e)[:80]))
             continue
@@ -113,7 +132,13 @@ if __name__ == "__main__":
 
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*", help="only these queries")
     ap.add_argument("--md", default=None,
                     help="also write the audit as a markdown table")
+    ap.add_argument("--dump", default=None, metavar="DIR",
+                    help="write each formatted plan to DIR/<query>.txt")
     ns = ap.parse_args()
-    audit(ns.sf_dir, ns.md)
+    if not os.path.isdir(ns.sf_dir):  # no sf_dir given, only query names
+        ns.queries.insert(0, ns.sf_dir)
+        ns.sf_dir = ap.get_default("sf_dir")
+    audit(ns.sf_dir, ns.md, ns.dump, ns.queries)
