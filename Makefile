@@ -12,11 +12,12 @@ bench:
 scaling:
 	python tools/bench_scaling.py --passes 2
 
-# the linear-time regex gate alone: differential tests of the rewritten
-# patterns and the n -> 4n growth test of every detect/validate pattern,
-# printing each pattern's worst growth ratio
+# the scrub's regex checks alone: differential tests of the rewritten
+# patterns, the n -> 4n growth test of every detect/validate pattern
+# (printing each pattern's worst growth ratio), and the per-batch RE2
+# gates: each a superset of its pattern, batch output = per-row oracle
 regex-growth:
-	python -m pytest tests/test_linear_regex.py -q -s -p no:cacheprovider
+	python -m pytest tests/test_linear_regex.py tests/test_regex_gates.py -q -s -p no:cacheprovider
 
 # package size in lines, the figure CHANGES.md and ROADMAP.md track
 loc:

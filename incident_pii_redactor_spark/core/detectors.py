@@ -37,6 +37,12 @@ each one at n and 4n characters of adversarial text. Patterns whose plain
 ``re`` form would rescan a long run from every start are ``_RunScan``
 objects with the same ``finditer`` results. The Java-regex twin the
 registry queries use (``functions/text.py::EMAIL_RE_SQL``) is separate.
+
+Every pass here and in ``core/validate.py`` can be skipped by name (see
+``NO_SKIP``). The Spark operator skips a pass on a page where its RE2
+gate finds nothing: the gate table is ``operators/scrub.py::
+DETECT_GATES``/``VALIDATE_GATES``, and an edit to a pattern here must
+update its gate there.
 """
 
 from __future__ import annotations
@@ -349,51 +355,66 @@ _DIGIT_RE = re.compile(r"\d")
 _UPPER_RE = re.compile(r"[A-Z]")
 _HOST_TLDS = (".internal", ".corp", ".local", ".lan")
 
+# Every detect and validate function also takes ``skip``: names of passes
+# its caller has already shown to find nothing in the text, which it then
+# does not run. The names are the entity types the passes emit, plus
+# ``residual_*``/``adversarial_*`` for the validate passes and
+# ``exclusion`` for the placeholder mask. The default runs every pass.
+NO_SKIP: frozenset = frozenset()
 
-def detect_pii(text: str) -> list[Span]:
+
+def detect_pii(text: str, skip: frozenset = NO_SKIP) -> list[Span]:
     """D1+D5: core PII entity scan with validation predicates.
 
     Confidence model mirrors the reference's scored spans
     (``pii_detector.py:50-90``): checksum/structure-validated types score
     0.99; plain pattern matches 0.85-0.95; gated person names 0.85.
+    ``skip`` names passes the caller knows find nothing in ``text``.
     """
     spans: list[Span] = []
     has_digit = _DIGIT_RE.search(text) is not None
-    if "@" in text:
+    if "@" in text and "email" not in skip:
         for m in EMAIL_RE.finditer(text):
             if _FP_EMAIL.search(m.group()):
                 continue  # D5: example-domain emails are FPs
             spans.append(Span(m.start(), m.end(), "email", 0.99, m.group()))
     if has_digit:
-        for m in SSN_RE.finditer(text):
-            if _valid_ssn(m.group()):
-                spans.append(Span(m.start(), m.end(), "ssn", 0.99, m.group()))
-        for m in CARD_RE.finditer(text):
-            digits = re.sub(r"[- ]", "", m.group())
-            if 13 <= len(digits) <= 19 and luhn_valid(digits):
+        if "ssn" not in skip:
+            for m in SSN_RE.finditer(text):
+                if _valid_ssn(m.group()):
+                    spans.append(
+                        Span(m.start(), m.end(), "ssn", 0.99, m.group()))
+        if "credit_card" not in skip:
+            for m in CARD_RE.finditer(text):
+                digits = re.sub(r"[- ]", "", m.group())
+                if 13 <= len(digits) <= 19 and luhn_valid(digits):
+                    spans.append(
+                        Span(m.start(), m.end(), "credit_card", 0.99,
+                             m.group()))
+        if "phone" not in skip:
+            for m in PHONE_RE.finditer(text):
+                digits = re.sub(r"\D", "", m.group())
+                if len(digits) < 10:  # D5: 4-digit "phones" are FPs
+                    continue
                 spans.append(
-                    Span(m.start(), m.end(), "credit_card", 0.99, m.group())
-                )
-        for m in PHONE_RE.finditer(text):
-            digits = re.sub(r"\D", "", m.group())
-            if len(digits) < 10:  # D5: 4-digit "phones" are FPs
-                continue
-            spans.append(Span(m.start(), m.end(), "phone", 0.95, m.group()))
-        for m in IP_RE.finditer(text):
-            if _valid_ip(m.group()):
-                spans.append(
-                    Span(m.start(), m.end(), "ip_address", 0.95, m.group())
-                )
+                    Span(m.start(), m.end(), "phone", 0.95, m.group()))
+        if "ip_address" not in skip:
+            for m in IP_RE.finditer(text):
+                if _valid_ip(m.group()):
+                    spans.append(
+                        Span(m.start(), m.end(), "ip_address", 0.95,
+                             m.group()))
     # NOT digit-gated: letter-only keys ('sk_abcdef...') are valid matches.
     # Exact gate = the literal prefixes the regex requires.
-    if any(p in text for p in ("sk", "pk", "ak", "ghp", "xox", "AKIA")):
+    if "api_key" not in skip and any(
+            p in text for p in ("sk", "pk", "ak", "ghp", "xox", "AKIA")):
         for m in API_KEY_RE.finditer(text):
             spans.append(Span(m.start(), m.end(), "api_key", 0.95, m.group()))
-    if any(t in text for t in _HOST_TLDS):
+    if "hostname" not in skip and any(t in text for t in _HOST_TLDS):
         for m in HOSTNAME_RE.finditer(text):
             spans.append(Span(m.start(), m.end(), "hostname", 0.9, m.group()))
     has_upper = _UPPER_RE.search(text) is not None
-    if has_upper:
+    if has_upper and "person_name" not in skip:
         for m in PERSON_RE.finditer(text):
             first, last = m.group(1), m.group(2)
             if first.lower() in FIRST_NAMES and last not in _NOT_SURNAMES:
@@ -404,17 +425,24 @@ def detect_pii(text: str) -> list[Span]:
                 )
     # round-2 entity types (reference pii_detector.py:31-37)
     if has_upper and has_digit:
-        for m in IBAN_RE.finditer(text):
-            if iban_valid(m.group()):
-                spans.append(Span(m.start(), m.end(), "iban", 0.99, m.group()))
-        for m in ADDRESS_RE.finditer(text):
-            spans.append(Span(m.start(), m.end(), "address", 0.85, m.group()))
+        if "iban" not in skip:
+            for m in IBAN_RE.finditer(text):
+                if iban_valid(m.group()):
+                    spans.append(
+                        Span(m.start(), m.end(), "iban", 0.99, m.group()))
+        if "address" not in skip:
+            for m in ADDRESS_RE.finditer(text):
+                spans.append(
+                    Span(m.start(), m.end(), "address", 0.85, m.group()))
     if has_digit:
-        for m in NHS_RE.finditer(text):
-            if nhs_valid(re.sub(r"[ -]", "", m.group())):
-                spans.append(Span(m.start(), m.end(), "nhs", 0.99, m.group()))
+        if "nhs" not in skip:
+            for m in NHS_RE.finditer(text):
+                if nhs_valid(re.sub(r"[ -]", "", m.group())):
+                    spans.append(
+                        Span(m.start(), m.end(), "nhs", 0.99, m.group()))
         lower = text.lower()
-        if "birth" in lower or "born" in lower or "dob" in lower:
+        if "date_of_birth" not in skip and (
+                "birth" in lower or "born" in lower or "dob" in lower):
             for c in _DOB_CONTEXT_RE.finditer(text):
                 # date must START within 24 chars of the cue (tolerates a
                 # short filler like 'born on the '); endpos leaves room
@@ -425,7 +453,7 @@ def detect_pii(text: str) -> list[Span]:
                         Span(m.start(), m.end(), "date_of_birth", 0.9,
                              m.group())
                     )
-    if has_upper:
+    if has_upper and "location" not in skip:
         for m in LOCATION_RE.finditer(text):
             spans.append(Span(m.start(), m.end(), "location", 0.85, m.group()))
     return spans
@@ -475,13 +503,14 @@ _CUSTOM_GATES = {
 }
 
 
-def detect_custom(text: str, existing: list[Span]) -> list[Span]:
+def detect_custom(text: str, existing: list[Span],
+                  skip: frozenset = NO_SKIP) -> list[Span]:
     """D3: infra-pattern scan, skipping positions already covered by
     higher-priority detections (reference deterministic_extractor.py:223-265)."""
     covered = covered_positions(existing)
     spans: list[Span] = []
     for name, pat in CUSTOM_PATTERNS.items():
-        if _CUSTOM_GATES[name] not in text:
+        if name in skip or _CUSTOM_GATES[name] not in text:
             continue
         for m in pat.finditer(text):
             if any(p in covered for p in (m.start(), m.end() - 1)):
@@ -513,16 +542,16 @@ _SECRET_ASSIGN_RE = re.compile(
 )
 
 
-def detect_keywords(text: str, existing: list[Span]) -> list[Span]:
+def detect_keywords(text: str, existing: list[Span],
+                    skip: frozenset = NO_SKIP) -> list[Span]:
     """D4: secret-assignment spans (REDACT, 0.9) + bare-keyword advisory
     spans (category SECRETS, confidence 0.3 — reference semantics; these
     low-confidence spans rarely survive arbitration, same as the reference
     where 0.3 < the 0.8 splice threshold at deterministic_extractor.py:368-383)."""
     covered = covered_positions(existing)
     spans: list[Span] = []
-    if ":" not in text and "=" not in text:
-        pass  # secret-assignment form needs a separator
-    else:
+    # the secret-assignment form needs a separator
+    if "secret_value" not in skip and (":" in text or "=" in text):
         for m in _SECRET_ASSIGN_RE.finditer(text):
             s, e = m.start(1), m.end(1)
             if any(p in covered for p in (s, e - 1)):
@@ -537,7 +566,8 @@ def detect_keywords(text: str, existing: list[Span]) -> list[Span]:
     # IGNORECASE matches Unicode case variants ('paſsword', 'İNTERNAL')
     # that a lower() substring test misses, so non-ASCII text always scans
     lower = text.lower()  # once, not once per keyword
-    if not text.isascii() or any(kw in lower for kw in INTERNAL_KEYWORDS):
+    if "internal_keyword" not in skip and (
+            not text.isascii() or any(kw in lower for kw in INTERNAL_KEYWORDS)):
         for m in _KEYWORD_RE.finditer(text):
             if m.start() in covered:
                 continue
@@ -548,15 +578,15 @@ def detect_keywords(text: str, existing: list[Span]) -> list[Span]:
     return spans
 
 
-def detect_deterministic(text: str) -> list[Span]:
+def detect_deterministic(text: str, skip: frozenset = NO_SKIP) -> list[Span]:
     """Full deterministic stage: D1 -> D3 -> D4 -> C1 overlap resolve.
 
     Mirrors the reference stage orchestration at
     ``deterministic_extractor.py:194-344``.
     """
-    spans = detect_pii(text)
-    spans += detect_custom(text, spans)
-    spans += detect_keywords(text, spans)
+    spans = detect_pii(text, skip)
+    spans += detect_custom(text, spans, skip)
+    spans += detect_keywords(text, spans, skip)
     for s in spans:
         s.source = SRC_DETERMINISTIC
     return resolve_overlaps(spans)
@@ -639,14 +669,16 @@ _CONTEXTUAL_GATES = {
 }
 
 
-def detect_contextual(text: str, existing: list[Span]) -> list[Span]:
+def detect_contextual(text: str, existing: list[Span],
+                      skip: frozenset = NO_SKIP) -> list[Span]:
     """D6: contextual finder — dedup vs existing spans, admit conf >= 0.6
     (reference llm_detector.py:97-141)."""
     covered = covered_positions(existing)
     spans: list[Span] = []
     lower = text.lower()
     for category, pat in CONTEXTUAL_PATTERNS.items():
-        if not any(g in lower for g in _CONTEXTUAL_GATES[category]):
+        if category in skip or not any(
+                g in lower for g in _CONTEXTUAL_GATES[category]):
             continue
         for m in pat.finditer(text):
             if any(p in covered for p in (m.start(), m.end() - 1)):

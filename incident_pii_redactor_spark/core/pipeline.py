@@ -1,11 +1,14 @@
 """The fused per-document scrub pipeline: detect -> find -> judge ->
 arbitrate -> splice -> validate.
 
-This single pure function IS the semantic contract the reference exposes
-as ``await pipeline.process_text(text)`` (``src/processing_pipeline.py:
-61-126``, the 5 stages run strictly sequentially at :66-86). It is called
-per-row by the test oracle and per-Arrow-batch by the Spark operators in
-``operators/scrub.py`` — one shared implementation, so Spark output is
+``scrub_document`` IS the semantic contract the reference exposes as
+``await pipeline.process_text(text)`` (``src/processing_pipeline.py:
+61-126``, the 5 stages run strictly sequentially at :66-86). The test
+oracle calls it per row. The Spark operator in ``operators/scrub.py``
+calls its two halves, ``redact_document`` for the whole Arrow batch and
+then ``validate_document``, so that between them it can gate the next
+half's regex passes over the batch. The halves are ``scrub_document``'s
+own code, and a pass they skip finds nothing, so Spark output is
 byte-identical to the oracle by construction.
 """
 
@@ -15,6 +18,7 @@ from dataclasses import dataclass, field
 
 from incident_pii_redactor_spark.core.arbitration import arbitrate
 from incident_pii_redactor_spark.core.detectors import (
+    NO_SKIP,
     detect_contextual,
     detect_deterministic,
 )
@@ -51,11 +55,19 @@ def scrub_document(text: str, policy=None, judge_fn=None) -> ScrubResult:
     in Spark it ships in the UDF closure and is invoked per document
     inside the Arrow batch (amortized model state lives in the closure).
     None = built-in simulation, output byte-identical to round 1."""
+    return validate_document(text, redact_document(text, policy, judge_fn))
+
+
+def redact_document(text: str, policy=None, judge_fn=None,
+                    skip: frozenset = NO_SKIP) -> ScrubResult:
+    """Stages 1-4 of ``scrub_document``: detect, arbitrate and splice; the
+    result's ``issues`` and ``metrics`` stay empty. ``skip`` names detect
+    passes known to find nothing in ``text`` (core/detectors.py)."""
     if not text:
         return ScrubResult(text_scrubbed=text or "")
 
-    deterministic = detect_deterministic(text)          # stage 1 (D1-D5, C1)
-    finder = detect_contextual(text, deterministic)     # stage 2 (D6-D8)
+    deterministic = detect_deterministic(text, skip)    # stage 1 (D1-D5, C1)
+    finder = detect_contextual(text, deterministic, skip)  # stage 2 (D6-D8)
     decisions, arb_stats = arbitrate(text, deterministic, finder, policy,
                                      judge_fn=judge_fn)  # 3+4
     scrubbed, lineage = splice(text, decisions)         # stage 4b (R1-R4)
@@ -65,15 +77,23 @@ def scrub_document(text: str, policy=None, judge_fn=None) -> ScrubResult:
     for rec in applied:
         by_type[rec["entity_type"]] = by_type.get(rec["entity_type"], 0) + 1
 
-    n_decisions = sum(1 for d in decisions if d.action != RETAIN)
-    issues, metrics = validate(text, scrubbed, n_decisions)  # stage 5
-
     return ScrubResult(
         text_scrubbed=scrubbed,
         spans=decisions,
         n_redactions=len(applied),
         redactions_by_type=by_type,
-        issues=issues,
-        metrics=metrics,
         arbitration_stats=arb_stats,
     )
+
+
+def validate_document(text: str, result: ScrubResult,
+                      skip: frozenset = NO_SKIP) -> ScrubResult:
+    """Stage 5 of ``scrub_document``: fill ``result``'s issues and metrics
+    from ``text`` and its scrubbed form. ``skip`` names validate passes
+    known to find nothing in the scrubbed text."""
+    if not text:
+        return result
+    n_decisions = sum(1 for d in result.spans if d.action != RETAIN)
+    result.issues, result.metrics = validate(        # stage 5
+        text, result.text_scrubbed, n_decisions, skip)
+    return result

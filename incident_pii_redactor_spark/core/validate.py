@@ -29,6 +29,7 @@ from incident_pii_redactor_spark.core.detectors import (
     IBAN_RE,
     IP_RE,
     NHS_RE,
+    NO_SKIP,
     PHONE_RE,
     SSN_RE,
     _DIGIT_RE,
@@ -142,7 +143,8 @@ def _mask_exclusions(text: str) -> str:
     return _EXCLUSION_RE.sub(lambda m: "\x00" * len(m.group()), text)
 
 
-def residual_pii(processed: str, masked: str | None = None) -> list[dict]:
+def residual_pii(processed: str, masked: str | None = None,
+                 skip: frozenset = NO_SKIP) -> list[dict]:
     """D9+D10: re-run core PII regexes on scrubbed text; each hit is a
     CRITICAL issue (a redaction the pipeline missed). ``masked`` lets the
     caller share one exclusion-masking pass with adversarial_scan."""
@@ -159,27 +161,33 @@ def residual_pii(processed: str, masked: str | None = None) -> list[dict]:
              "location": m.start(), "text": m.group()}
         )
 
-    if "@" in masked:
+    if "@" in masked and "residual_email" not in skip:
         for m in EMAIL_RE.finditer(masked):
             add("email", m)
     if has_digit:
-        for m in SSN_RE.finditer(masked):
-            add("ssn", m)
-        for m in CARD_RE.finditer(masked):
-            digits = re.sub(r"[- ]", "", m.group())
-            if 13 <= len(digits) <= 19 and luhn_valid(digits):
-                add("credit_card", m)
-        for m in PHONE_RE.finditer(masked):
-            if len(re.sub(r"\D", "", m.group())) >= 10:
-                add("phone", m)
-        for m in IP_RE.finditer(masked):
-            add("ip_address", m, severity="high")
-        for m in NHS_RE.finditer(masked):
-            if nhs_valid(re.sub(r"[ -]", "", m.group())):
-                add("nhs", m)
-        for m in IBAN_RE.finditer(masked):
-            if iban_valid(m.group()):
-                add("iban", m)
+        if "residual_ssn" not in skip:
+            for m in SSN_RE.finditer(masked):
+                add("ssn", m)
+        if "residual_credit_card" not in skip:
+            for m in CARD_RE.finditer(masked):
+                digits = re.sub(r"[- ]", "", m.group())
+                if 13 <= len(digits) <= 19 and luhn_valid(digits):
+                    add("credit_card", m)
+        if "residual_phone" not in skip:
+            for m in PHONE_RE.finditer(masked):
+                if len(re.sub(r"\D", "", m.group())) >= 10:
+                    add("phone", m)
+        if "residual_ip_address" not in skip:
+            for m in IP_RE.finditer(masked):
+                add("ip_address", m, severity="high")
+        if "residual_nhs" not in skip:
+            for m in NHS_RE.finditer(masked):
+                if nhs_valid(re.sub(r"[ -]", "", m.group())):
+                    add("nhs", m)
+        if "residual_iban" not in skip:
+            for m in IBAN_RE.finditer(masked):
+                if iban_valid(m.group()):
+                    add("iban", m)
     return issues
 
 
@@ -194,12 +202,15 @@ _ADVERSARIAL_GATES = {
 }
 
 
-def adversarial_scan(processed: str, masked: str | None = None) -> list[dict]:
+def adversarial_scan(processed: str, masked: str | None = None,
+                     skip: frozenset = NO_SKIP) -> list[dict]:
     """D11: obfuscated-PII heuristics on scrubbed text (severity high)."""
     if masked is None:
         masked = _mask_exclusions(processed)
     issues: list[dict] = []
     for kind, pat in ADVERSARIAL_PATTERNS.items():
+        if f"adversarial_{kind}" in skip:
+            continue
         gates = _ADVERSARIAL_GATES.get(kind)
         if gates is not None and not any(g in masked for g in gates):
             continue
@@ -292,12 +303,15 @@ def recommendations(metrics: dict, issues: list[dict]) -> list[str]:
     return recs
 
 
-def validate(original: str, processed: str, n_decisions: int) -> tuple[list[dict], dict]:
-    """Full validation pass: D9-D11 + A9 + A11 issues, then A5 metrics."""
-    masked = _mask_exclusions(processed)
+def validate(original: str, processed: str, n_decisions: int,
+             skip: frozenset = NO_SKIP) -> tuple[list[dict], dict]:
+    """Full validation pass: D9-D11 + A9 + A11 issues, then A5 metrics.
+    ``skip`` holding ``exclusion`` says no placeholder occurs in
+    ``processed``, so masking would return it unchanged."""
+    masked = processed if "exclusion" in skip else _mask_exclusions(processed)
     issues = (
-        residual_pii(processed, masked)
-        + adversarial_scan(processed, masked)
+        residual_pii(processed, masked, skip)
+        + adversarial_scan(processed, masked, skip)
         + replacement_frequency_issues(processed)
         + schema_integrity_issues(original, processed)
     )
