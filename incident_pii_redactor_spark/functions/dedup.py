@@ -14,6 +14,9 @@ Scale design:
   ``band_pairs``, the candidate-pair skeleton embedding LSH shares: a
   self equi-join on the key, candidate pairs only; never all-pairs.
   Minhashes are uniform, so the join keys are too — no skew.
+* Jaccard verify = the candidate pairs, spread over every slot by
+  ``band_pairs``, broadcast-joined to their shingle sets: one
+  ``array_intersect`` per pair (the union size is derived from it).
 * SimHash = 64-bit signature, bucket on 4x16-bit sub-bands (Hamming
   neighbors share a band with prob 1 for distance <= band count - 1).
 """
@@ -130,7 +133,7 @@ def minhash_signature(text_col: str = "text", n: int = 3,
     return F.aggregate(shingle_base_hashes(text_col, n), init, step)
 
 
-def band_pairs(keys: DataFrame) -> DataFrame:
+def band_pairs(keys: DataFrame, spread: bool = False) -> DataFrame:
     """The banded-LSH candidate-pair skeleton shared by MinHash and
     embedding LSH: ``(_id, band_key)`` rows, one per document and band,
     -> distinct ``(id_a, id_b)`` pairs with ``id_a < id_b`` of documents
@@ -139,7 +142,22 @@ def band_pairs(keys: DataFrame) -> DataFrame:
     add candidate pairs (and so change unverified dedup output). The join
     is a single-column equi-join — never a cross join — and the
     ``distinct`` dedupes pairs that agree in several bands over narrow
-    (two-id) rows."""
+    (two-id) rows.
+
+    ``spread=True`` hash-partitions the pairs on ``(id_a, id_b)`` into
+    max(``defaultParallelism``, the key checkpoint's partition count)
+    partitions just before the ``distinct``, so the verify that inherits
+    them through its broadcast joins uses every slot: AQE merges a few
+    thousand narrow pairs into one task, but never an explicit-count
+    repartition, and ``distinct`` needs no further exchange on it. The
+    price is the map-side partial ``distinct``: every join row crosses
+    the shuffle. MinHash LSH takes it (4 bands, so few repeats, and a
+    Jaccard per pair that ran in one task); embedding LSH does not (its
+    40 bands give ~10 join rows per pair at sf0.1, the query ran 30-50%
+    slower with it, and AQE already splits that verify over several
+    tasks)."""
+    from incident_pii_redactor_spark.plans.session import planned_partitions
+
     # Materialization barrier: without it Catalyst inlines the signature
     # or band-key expression into BOTH join sides (measured 31 s -> ~3 s
     # on 5k docs for MinHash; 9.9 s -> 7.8 s warm at sf0.1 for the
@@ -151,15 +169,19 @@ def band_pairs(keys: DataFrame) -> DataFrame:
     keys = keys.localCheckpoint(eager=True)
     a = keys.select(F.col("_id").alias("id_a"), "band_key")
     b = keys.select(F.col("_id").alias("id_b"), "band_key")
-    return (
+    pairs = (
         a.join(b, "band_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct()
     )
+    if spread:
+        pairs = pairs.repartition(
+            max(keys.sparkSession.sparkContext.defaultParallelism,
+                planned_partitions(keys)), "id_a", "id_b")
+    return pairs.distinct()
 
 
-def minhash_lsh_pairs(
+def minhash_band_keys(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -167,12 +189,10 @@ def minhash_lsh_pairs(
     n_perm: int = 8,
     bands: int = 4,
 ) -> DataFrame:
-    """Candidate near-dup pairs via banding: docs sharing any band of
-    rows_per_band consecutive minhashes. Returns (id_a, id_b) distinct
-    CANDIDATE pairs with id_a < id_b — banding has false positives
-    (P ~ 1-(1-s^rows_per_band)^bands for true shingle-Jaccard s), so
-    dedup decisions should verify candidates with ``jaccard_on_pairs``
-    (jobs/dedup.py does by default). Pairs come from ``band_pairs``."""
+    """``(_id, band_key)`` rows, one per shingleable document and band:
+    the band id followed by that band's ``n_perm // bands`` minhashes,
+    as one exact ``array<bigint>`` (equal values in different bands
+    never meet). The input of ``band_pairs``."""
     if bands < 1 or n_perm % bands:
         raise ValueError(
             f"bands ({bands}) must be >= 1 and divide n_perm ({n_perm}) "
@@ -190,23 +210,42 @@ def minhash_lsh_pairs(
         df.select(F.col(id_col).alias("_id"), F.col(text_col)))
     sig = base.select("_id",
                       minhash_signature(text_col, n, n_perm).alias("_sig"))
-    # docs too short to shingle keep the sentinel signature [P]*n_perm —
-    # without this filter every such doc collides with every other in all
-    # bands (an O(k^2) bucket AND mass false near-dups: a dedup job would
-    # delete k-1 unrelated short docs). Shingle-based similarity is simply
-    # undefined for them; they never enter LSH.
-    sig = sig.filter(F.element_at("_sig", 1) != F.lit(_MH_P).cast("long"))
-    # band key = [band id, that band's minhashes] as one array<bigint>:
-    # exact, so equal values in different bands never meet
-    keys = sig.select(
-        "_id",
-        F.explode(F.array(*[
-            F.concat(F.array(F.lit(b).cast("long")),
-                     F.slice("_sig", b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)
-        ])).alias("band_key"),
-    )
-    return band_pairs(keys)
+    # Docs too short to shingle (and NULL text) keep the sentinel
+    # signature [P]*n_perm: they get no band keys, or every such doc
+    # would collide with every other in all bands (an O(k^2) bucket AND
+    # mass false near-dups: a dedup job would delete k-1 unrelated short
+    # docs). The sentinel test lives INSIDE the generator — a NULL array
+    # explodes to no rows — because a .filter on _sig is pushed below
+    # the Project that computes it, and the MinHash fold then runs twice
+    # per page (once in the Filter, once in the Project).
+    band_keys = F.array(*[
+        F.concat(F.array(F.lit(b).cast("long")),
+                 F.slice("_sig", b * rows_per_band + 1, rows_per_band))
+        for b in range(bands)
+    ])
+    shingled = F.element_at("_sig", 1) != F.lit(_MH_P).cast("long")
+    return sig.select(
+        "_id", F.explode(F.when(shingled, band_keys)).alias("band_key"))
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    n_perm: int = 8,
+    bands: int = 4,
+) -> DataFrame:
+    """Candidate near-dup pairs via banding: docs sharing any band of
+    rows_per_band consecutive minhashes. Returns (id_a, id_b) distinct
+    CANDIDATE pairs with id_a < id_b — banding has false positives
+    (P ~ 1-(1-s^rows_per_band)^bands for true shingle-Jaccard s), so
+    dedup decisions should verify candidates with ``jaccard_on_pairs``
+    (jobs/dedup.py does by default). Pairs come from ``band_pairs`` over
+    ``minhash_band_keys``."""
+    return band_pairs(
+        minhash_band_keys(df, id_col, text_col, n, n_perm, bands),
+        spread=True)
 
 
 # --- paragraph-level dedup ---------------------------------------------------
@@ -304,12 +343,18 @@ def jaccard_on_pairs(
         .join(sh.withColumnRenamed("_jid", "id_b")
                 .withColumnRenamed("_sh", "sh_b"), "id_b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return j.select(
-        "id_a", "id_b",
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-    )
+    # |A ∪ B| = |A| + |B| - |A ∩ B|, exact for the array_distinct sets,
+    # so each pair builds ONE hash set. The intersection size is bound
+    # once through a one-element transform: a caller's ``jaccard >= t``
+    # filter is pushed into the broadcast-join condition, where a plain
+    # ``sa + sb - inter`` would re-run array_intersect at every mention.
+    size_a, size_b = F.size("sh_a"), F.size("sh_b")
+    jaccard = F.element_at(F.transform(
+        F.array(F.size(F.array_intersect("sh_a", "sh_b"))),
+        lambda i: F.when(size_a + size_b - i > 0,
+                         i / (size_a + size_b - i)).otherwise(F.lit(0.0)),
+    ), 1)
+    return j.select("id_a", "id_b", jaccard.alias("jaccard"))
 
 
 # --- SimHash ----------------------------------------------------------------

@@ -12,7 +12,7 @@ predicates"), while the full model-based scoring lives in the Arrow UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 30 common English stop words — shared constant with the SQL twin
@@ -323,3 +323,17 @@ def c4_page_keep(text: str | Column = "text",
     n_sent = F.size(F.regexp_extract_all(cleaned, F.lit("[.!?]"), F.lit(0)))
     return (~low.contains("lorem ipsum") & ~c.contains("{")
             & (n_sent >= C4_MIN_SENTENCES))
+
+
+def c4_line_filter(df: DataFrame, text: str = "text") -> DataFrame:
+    """Drop the pages ``c4_page_keep`` rejects and replace ``text`` by
+    its C4-cleaned lines, columns in place. The line cleaning runs ONCE
+    per page: in the Project under a generator that emits the cleaned
+    text for a kept page and no row otherwise. A ``.filter`` on the
+    cleaned column would be pushed below that Project and clean every
+    page twice (once in the Filter, once in the Project)."""
+    cleaned = df.withColumn("_c4", clean_lines_c4(text))
+    kept = F.explode(F.when(c4_page_keep(text, cleaned=F.col("_c4")),
+                            F.array("_c4")))
+    return cleaned.select(*[kept.alias(c) if c == text else c
+                            for c in df.columns])

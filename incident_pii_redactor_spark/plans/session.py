@@ -45,13 +45,23 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     the file index or the checkpointed RDD. Streams pass through."""
     if df.isStreaming:
         return df
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        return df
+    planned = planned_partitions(df)
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if plan.execute().getNumPartitions() >= parallelism:
+    if planned is None or planned >= parallelism:
         return df
     return df.repartition(parallelism)
+
+
+def planned_partitions(df: DataFrame) -> int | None:
+    """Partition count of an exchange-free frame (a scan or a
+    checkpoint), read from its physical plan: the file index or the
+    checkpointed RDD, never a Spark job. ``None`` for a plan holding an
+    exchange (``AdaptiveSparkPlanExec``): AQE sizes that stage only when
+    it runs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return None
+    return plan.execute().getNumPartitions()
 
 
 def build_session(

@@ -8,10 +8,14 @@ jobs/scrub.py; its output is the scrub job's input).
 Scale design:
 * exact: one hash-aggregate on md5(normalized text) — the shuffle carries
   (32-hex, url) pairs, never document text; keeper = min(url).
-* near: MinHash signatures (single-pass expression) -> one exact key
-  per (row, band) -> candidate pairs from ``band_pairs`` (the banded-LSH
-  skeleton in functions/dedup.py, shared with embedding near-dup: one
-  self equi-join on the key, distinct id_a < id_b pairs) -> exact n-gram
+* near: MinHash signatures (single-pass expression, evaluated once per
+  row) -> one exact key per (row, band); rows too short to shingle (or
+  NULL) keep the sentinel signature and get no key -> candidate pairs
+  from ``band_pairs`` (the banded-LSH skeleton in functions/dedup.py,
+  shared with embedding near-dup: one self equi-join on the key,
+  distinct id_a < id_b pairs, hash-partitioned into max(default
+  parallelism, the key checkpoint's partitions) so the verify below
+  uses every slot) -> exact n-gram
   Jaccard VERIFICATION of each candidate (on by default: with
   n_perm=8/bands=4 the banding FP rate is ~1-(1-s^2)^4, so unrelated
   docs with ~20% shingle overlap would otherwise be deleted ~15% of the
@@ -32,7 +36,9 @@ Scale design:
   lineage, --mode both reads it 12 times). Trade-off: localCheckpoint
   blocks live on the executors and cannot be recomputed, so a lost
   executor fails the job; the output is overwritten, so rerun it.
-  --no-stage-counts is accepted and ignored.
+  --no-stage-counts is accepted and ignored. Each stage's jobs (and the
+  band-key checkpoint's, and the final write's) run under a job
+  description ``dedup: <stage>``, so event logs name them.
 * min-url-wins per pair is one union-by-min step, not full connected
   components: for a chain A-B-C it keeps A and drops B and C, which is
   the standard first-order near-dup policy (full CC costs an iterative
@@ -52,6 +58,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import argparse
+import contextlib
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -147,11 +154,26 @@ def parse_args(argv=None):
     return args
 
 
-def _stage(df, stats: dict, key: str):
-    """The stage boundary: materialize ``df`` once, eagerly, and record
-    its row count in ``stats[key]`` from an Observation on that job."""
+@contextlib.contextmanager
+def _described(sc, what: str):
+    """Run the enclosed Spark jobs under the job description
+    ``dedup: <what>``, the name event logs and the UI give them, then
+    restore the caller's description (its job group is left as is)."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"dedup: {what}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _stage(df, stats: dict, key: str, what: str):
+    """The stage boundary: materialize ``df`` once, eagerly, under the
+    job description ``dedup: <what>``, and record its row count in
+    ``stats[key]`` from an Observation on that job."""
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    with _described(df.sparkSession.sparkContext, what):
+        df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
     stats[key] = obs.get["n"]
     return df
 
@@ -183,10 +205,12 @@ def near_dedup(df, args):
     # across recrawl snapshots, so dropping a url would also drop a
     # same-url row whose DISTINCT content was never a near-dup
     keyed = df.withColumn("_rid", _row_id())
-    pairs = minhash_lsh_pairs(
-        keyed, id_col="_rid", text_col="text",
-        n=args.shingle_words, n_perm=args.n_perm, bands=args.bands,
-    )
+    # the one eager job here: band_pairs' checkpoint of the band keys
+    with _described(df.sparkSession.sparkContext, "near band keys"):
+        pairs = minhash_lsh_pairs(
+            keyed, id_col="_rid", text_col="text",
+            n=args.shingle_words, n_perm=args.n_perm, bands=args.bands,
+        )
     if not args.no_verify_jaccard:
         # exact verification on candidates only — kills banding FPs
         pairs = jaccard_on_pairs(
@@ -217,7 +241,9 @@ def run(args, spark=None) -> dict:
     if owns:
         spark = build_session("pages-dedup")
     try:
-        df = read_pages(spark, args.input)
+        # read_pages probes a 100-row sample: the input's first job
+        with _described(spark.sparkContext, "input"):
+            df = read_pages(spark, args.input)
         if args.from_html:
             from incident_pii_redactor_spark.functions.html import (
                 extract_text,
@@ -231,7 +257,7 @@ def run(args, spark=None) -> dict:
 
             df = with_clean_text(df)
         stats: dict = {}
-        df = _stage(df, stats, "rows_in")
+        df = _stage(df, stats, "rows_in", "input")
 
         if args.against:
             # Incremental snapshot ingestion: anti-join the NEW
@@ -242,7 +268,8 @@ def run(args, spark=None) -> dict:
             # precomputed hash INDEX (store hashes once, not re-hash
             # the corpus each snapshot); reading the pages table here
             # keeps the job self-contained.
-            hist = read_pages(spark, args.against)
+            with _described(spark.sparkContext, "against"):
+                hist = read_pages(spark, args.against)
             if args.from_html:
                 # hash the SAME derivation on both sides: a raw-crawl
                 # history table has the same stale text column the new
@@ -277,14 +304,15 @@ def run(args, spark=None) -> dict:
                     build_bloom, filter_might_contain,
                 )
 
-                bloom, k, m = build_bloom(
-                    df, "_h", expected_keys=max(stats["rows_in"], 1),
-                    fpp=args.against_bloom_fpp)
+                with _described(spark.sparkContext, "against bloom"):
+                    bloom, k, m = build_bloom(
+                        df, "_h", expected_keys=max(stats["rows_in"], 1),
+                        fpp=args.against_bloom_fpp)
                 stats["against_bloom_bytes"] = m // 8
                 hist = filter_might_contain(hist, "_h", bloom, k, m)
             hist = hist.distinct()
             df = df.join(hist, "_h", "left_anti").drop("_h")
-            df = _stage(df, stats, "rows_after_against")
+            df = _stage(df, stats, "rows_after_against", "against")
 
         if args.url_canonical:
             # latest-wins per canonical URL: one hash-aggregate carrying
@@ -313,7 +341,8 @@ def run(args, spark=None) -> dict:
                 & keyed["warc_ts"].eqNullSafe(keep["_k_ts"]),
                 "left_semi",
             ).drop("_cu"))
-            df = _stage(df, stats, "rows_after_url_canonical")
+            df = _stage(df, stats, "rows_after_url_canonical",
+                        "url canonical")
 
         if args.mode in ("exact", "both"):
             # keeper identity is (url, content-hash), not url alone
@@ -341,11 +370,12 @@ def run(args, spark=None) -> dict:
                 & (content["_h"] == keepers["_k_h"]),
                 "left_semi",
             ).drop("_h").unionByName(null_text))
-            df = _stage(df, stats, "rows_after_exact")
+            df = _stage(df, stats, "rows_after_exact", "exact")
 
         if args.mode in ("near", "both"):
             df = near_dedup(df, args)
-            df = _stage(df, stats, "rows_after_near")
+            df = _stage(df, stats, "rows_after_near",
+                        "near verify and drop")
 
         if args.paragraph:
             from incident_pii_redactor_spark.functions.dedup import (
@@ -364,11 +394,12 @@ def run(args, spark=None) -> dict:
                 .select("_pid", F.col("text_dedup").alias("text"))
             # inner join: docs with zero surviving paragraphs drop here
             df = keyed.drop("text").join(rewritten, on="_pid").drop("_pid")
-            df = _stage(df, stats, "rows_after_paragraph")
+            df = _stage(df, stats, "rows_after_paragraph", "paragraph")
 
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows_out")) \
-            .write.mode("overwrite").parquet(args.output)
+        with _described(spark.sparkContext, "write output"):
+            df.observe(obs, F.count(F.lit(1)).alias("rows_out")) \
+                .write.mode("overwrite").parquet(args.output)
         stats["rows_out"] = obs.get["rows_out"]
         return stats
     finally:

@@ -151,13 +151,10 @@ def run(args, spark=None) -> dict:
             df = df.withColumn("text", extract_text("html"))
         if args.c4_line_filter:
             from incident_pii_redactor_spark.functions.text import (
-                c4_page_keep,
-                clean_lines_c4,
+                c4_line_filter,
             )
 
-            cleaned = clean_lines_c4("text")
-            df = (df.filter(c4_page_keep("text", cleaned=cleaned))
-                    .withColumn("text", cleaned))
+            df = c4_line_filter(df)
         df = with_bucket(df, "url", args.n_buckets)
 
         done = completed_buckets(spark, args.manifest, args.run_id)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from incident_pii_redactor_spark.functions.text import (
     c4_kept_lines,
     c4_kept_lines_sql,
+    c4_line_filter,
     c4_page_keep,
     clean_lines_c4,
 )
@@ -67,6 +68,37 @@ def test_duckdb_twin_matches_spark(spark, pages_pdf):
     d_got = {i: kept for i, kept in con.execute(
         f"SELECT id, {c4_kept_lines_sql('text')} FROM t").fetchall()}
     assert s_got == d_got
+
+
+def test_c4_line_filter_cleans_each_page_once(spark, pages_parquet):
+    """c4_line_filter returns exactly the rows and columns of the
+    filter-then-replace it stands for, and its plan cleans each page's
+    lines once (one ``javascript`` rule): the filter form is pushed
+    below the Project that computes the cleaned text, and its plan
+    cleans twice."""
+    def naive(df):
+        cleaned = clean_lines_c4("text")
+        return (df.filter(c4_page_keep("text", cleaned=cleaned))
+                .withColumn("text", cleaned))
+
+    def plan(f):
+        return f._jdf.queryExecution().executedPlan().toString()
+
+    df = spark.read.parquet(pages_parquet)
+    assert plan(naive(df)).count("javascript") == 2
+    assert plan(c4_line_filter(df)).count("javascript") == 1
+
+    edge = spark.createDataFrame(
+        [("https://e/1", None), ("https://e/2", ""),
+         ("https://e/3", "\n".join([GOOD1, GOOD2, GOOD3, BAD_SHORT])),
+         ("https://e/4", "\n".join([GOOD1, GOOD2, GOOD3]) + " {")],
+        "url string, text string")
+    df = df.unionByName(edge, allowMissingColumns=True)
+    got, want = c4_line_filter(df), naive(df)
+    assert got.columns == df.columns
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert {r.url for r in got.filter(F.col("url").startswith("https://e/"))
+            .collect()} == {"https://e/3"}
 
 
 def test_scrub_job_c4_line_filter(spark, pages_parquet, tmp_path_factory):

@@ -4,6 +4,8 @@ data."""
 import hashlib
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -207,7 +209,14 @@ def test_minhash_lsh_pairs_equal_python_banding(spark):
         texts.append(" ".join(words[:i] + ["dog"] + words[i + 1:]))
     texts += ["spark shuffles parquet files across the cluster nodes",
               "spark shuffles parquet files across the cluster racks",
-              "tiny", "two words", None]
+              "tiny", "two words", None,
+              # short and NULL docs repeat: the sentinel must keep each
+              # out of LSH, never pair them with each other
+              "tiny", "two words", None, "", "",
+              # exactly one shingle, repeated words, non-ASCII: these do
+              # shingle and pair with their copies
+              "one shingle only", "one shingle only",
+              "a a a a", "a a a a", "größe über straße", "größe über straße"]
     df = spark.createDataFrame(list(enumerate(texts)),
                                "doc_id long, text string")
     n_perm, bands = 12, 4
@@ -231,8 +240,120 @@ def test_minhash_lsh_pairs_equal_python_banding(spark):
     assert len(got) == len(set(got))
     assert set(got) == want
     assert (0, 1) in want and len(want) > 1
+    assert not {i for p in want for i in p} & {
+        i for i, t in enumerate(texts) if t is None or len(t.split(" ")) < 3}
     with pytest.raises(ValueError):
         minhash_lsh_pairs(df, bands=0)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_near_dup_plans_evaluate_each_expression_once(spark):
+    """The MinHash band keys hold ONE ``aggregate(`` fold: a ``.filter``
+    on the signature's sentinel was pushed below the Project computing
+    it, and the plan held two. ``near_dedup``'s plan holds one
+    ``array_intersect`` and no ``array_union``: its ``jaccard >= t``
+    filter is pushed into the broadcast-join condition, where the
+    union-based formula ran 1 intersect and 2 unions per pair. Plans
+    only: no job beyond near_dedup's own band-key checkpoint."""
+    from incident_pii_redactor_spark.functions.dedup import (
+        minhash_band_keys)
+    from jobs.dedup import near_dedup, parse_args
+
+    words = "the cat sat on the mat and watched the quiet river bend"
+    df = spark.createDataFrame(
+        [(f"https://a/{i}", f"{words} {i}") for i in range(6)],
+        "url string, text string").withColumn("warc_ts", F.lit(None)
+                                              .cast("timestamp"))
+    assert _plan(minhash_band_keys(df, id_col="url")).count(
+        "aggregate(") == 1
+    plan = _plan(near_dedup(df, parse_args(["--input", "x",
+                                            "--output", "y"])))
+    assert plan.count("array_intersect(") == 1
+    assert "array_union(" not in plan
+
+
+def test_jaccard_verify_runs_in_every_slot(spark, tmp_path):
+    """The Jaccard verify stage runs in at least defaultParallelism
+    tasks: ``minhash_lsh_pairs`` has ``band_pairs`` hash-partition the
+    candidate pairs with an explicit count, which AQE does not merge (it
+    merged a few pairs into one partition, and the verify ran in one
+    task). The documents come from parquet, as in the dedup job: its
+    size statistics let the planner broadcast the shingle sets, so the
+    pairs stream through both joins. (An in-memory frame has none, and
+    AQE then broadcasts whichever side's stage finishes first.) Read
+    from the status tracker: the collect's last job's result stage is
+    the verify stage."""
+    from incident_pii_redactor_spark.functions.dedup import (
+        jaccard_on_pairs,
+        minhash_lsh_pairs,
+    )
+
+    base = "the cat sat on the mat and watched the quiet river bend"
+    texts = [base, base, base + " slowly", "spark shuffles parquet files "
+             "across the cluster nodes", "spark shuffles parquet files "
+             "across the cluster racks", "tiny"]
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    verified = jaccard_on_pairs(minhash_lsh_pairs(df), df) \
+        .filter(F.col("jaccard") >= 0.7)
+    sc = spark.sparkContext
+    group = "jaccard_verify_tasks"
+    sc.setJobGroup(group, group)
+    try:
+        rows = verified.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (0, 1) in {(r.id_a, r.id_b) for r in rows}
+    # the status store is filled by the asynchronous listener bus: drain
+    # it, or the collect's own job may not be listed yet
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    result_stage = tracker.getStageInfo(max(last_job.stageIds))
+    assert result_stage.numTasks >= sc.defaultParallelism
+
+
+_WORDS = ["a", "b", "cat", "größe", "日本", ""]
+_doc_text = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(_WORDS), max_size=7).map(" ".join),
+)
+
+
+def _py_jaccard(a, b, n=3) -> float:
+    def shingles(t):
+        w = [] if t is None else t.split(" ")
+        return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+    sa, sb = shingles(a), shingles(b)
+    union = len(sa | sb)
+    return len(sa & sb) / union if union else 0.0
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(_doc_text, min_size=2, max_size=6))
+def test_jaccard_on_pairs_equals_python_sets(spark, texts):
+    """jaccard_on_pairs on every pair of a small document set equals a
+    pure-Python set Jaccard of the 3-word shingles, with 0.0 for an
+    empty union: NULL, empty, under-3-word, repeated-word and non-ASCII
+    texts included. |A ∪ B| is derived as |A| + |B| - |A ∩ B|, so this
+    pins that the derivation is exact."""
+    from incident_pii_redactor_spark.functions.dedup import jaccard_on_pairs
+
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    ids = range(len(texts))
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
+    got = {(r.id_a, r.id_b): r.jaccard
+           for r in jaccard_on_pairs(pairs, docs).collect()}
+    assert got == {(a, b): _py_jaccard(texts[a], texts[b])
+                   for a in ids for b in ids if a < b}
 
 
 def test_anonymize_emails_methods(spark):

@@ -364,15 +364,14 @@ def test_scrub_job_count(spark, pages_parquet, tmp_path_factory, cold_run,
     pd.testing.assert_frame_equal(_read_all(spark, str(d / "out")), cold_run)
 
 
-def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
+def _write_dedup_pages(d) -> str:
+    """Four pages: a keeper, its exact dup, its one-word near dup and an
+    unrelated page."""
+    import datetime as dt
+
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import datetime as dt
-    import pandas as pd
 
-    from jobs.dedup import parse_args as dedup_args, run as dedup_run
-
-    d = tmp_path_factory.mktemp("dedup")
     ts = dt.datetime(2025, 1, 1)
     base = ("the quick brown fox jumps over the lazy dog and runs through "
             "the field while the sun rises slowly over the quiet hills")
@@ -391,10 +390,17 @@ def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
                           ("lang", pa.string())]),
         preserve_index=False)
     pq.write_table(tbl, str(d / "pages.parquet"))
+    return str(d / "pages.parquet")
 
+
+def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
+    from jobs.dedup import parse_args as dedup_args, run as dedup_run
+
+    d = tmp_path_factory.mktemp("dedup")
+    pages = _write_dedup_pages(d)
     with no_cache_or_count():
         stats = dedup_run(dedup_args(
-            ["--input", str(d / "pages.parquet"), "--output", str(d / "out"),
+            ["--input", pages, "--output", str(d / "out"),
              "--mode", "both"]), spark=spark)
     assert stats["rows_in"] == 4
     assert stats["rows_after_exact"] == 3   # exact dup gone
@@ -402,6 +408,37 @@ def test_dedup_job_end_to_end(spark, tmp_path_factory, no_cache_or_count):
     assert "https://a/1" in urls and "https://a/4" in urls
     assert "https://a/2" not in urls        # exact dup dropped
     assert "https://a/3" not in urls        # near dup dropped (min-url wins)
+
+
+def test_dedup_job_names_its_stages(spark, tmp_path_factory):
+    """Each dedup stage, the near stage's band-key checkpoint and the
+    final write run under a job description ``dedup: <stage>``, so
+    event logs name the MinHash and Jaccard stages. The caller's job
+    group holds every job (as many as before the names) and its
+    description is restored."""
+    from jobs.dedup import parse_args as dedup_args, run as dedup_run
+
+    d = tmp_path_factory.mktemp("dedup_names")
+    pages = _write_dedup_pages(d)
+    sc = spark.sparkContext
+    group = "dedup_stage_names"
+    sc.setJobGroup(group, "caller")
+    try:
+        dedup_run(dedup_args(["--input", pages, "--output", str(d / "out"),
+                              "--mode", "both"]), spark=spark)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # drain the asynchronous listener bus that fills the status store
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(ids) == 16
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    names = {jobs.apply(i).description().get() for i in range(jobs.size())
+             if jobs.apply(i).jobId() in ids}
+    assert names == {"dedup: input", "dedup: exact", "dedup: near band keys",
+                     "dedup: near verify and drop", "dedup: write output"}
 
 
 def test_dedup_exact_mode_keeps_null_text_rows(spark, tmp_path_factory):
