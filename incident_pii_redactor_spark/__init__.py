@@ -17,8 +17,8 @@ quality/    langid, perplexity, heuristic keep/drop rules, classifier
             and DSIR selection, toxicity, compression ratio (numpy).
 functions/  Spark Column-level helpers (JVM-side expressions): text
             stats, HTML extraction, dedup (exact / MinHash-LSH /
-            SimHash), similarity and ANN, Bloom filters, connected
-            components, BPE training, ranking, sampling.
+            SimHash), similarity and ANN, connected components, BPE
+            training, ranking, sampling.
 operators/  DataFrame-level operators: the fused mapInPandas quality +
             scrub stage, manifest resume, as-of and range joins.
 sources/    page-table and WARC / CDX / robots.txt readers, catalog

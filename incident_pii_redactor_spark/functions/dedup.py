@@ -241,7 +241,7 @@ def minhash_lsh_pairs(
     CANDIDATE pairs with id_a < id_b — banding has false positives
     (P ~ 1-(1-s^rows_per_band)^bands for true shingle-Jaccard s), so
     dedup decisions should verify candidates with ``jaccard_on_pairs``
-    (jobs/dedup.py does by default). Pairs come from ``band_pairs`` over
+    (jobs/dedup.py always does). Pairs come from ``band_pairs`` over
     ``minhash_band_keys``."""
     return band_pairs(
         minhash_band_keys(df, id_col, text_col, n, n_perm, bands),

@@ -124,9 +124,12 @@ def predict_language(texts: "list[str] | np.ndarray") -> tuple[np.ndarray, np.nd
     Empty/too-short docs predict "und" with confidence 0. Per-doc sums use
     ``np.add.reduceat`` over the doc-contiguous trigram layout (no
     byte-level doc-id materialization); trigrams straddling a document
-    boundary are routed to a zero-weight dummy bucket, so every doc's
-    score is EXACTLY a function of its own bytes — required for batch- and
-    partition-order invariance (pinned by a hypothesis property test).
+    boundary are routed to a zero-weight dummy bucket. Every doc's
+    segment is its own byte length: its trigrams, then two zero rows (the
+    last doc's come from the padding), so the float32 summation order,
+    and with it every score, is a function of the doc's bytes alone, bit
+    for bit, whatever its batch or position in it (pinned by the
+    batch-order property tests).
     """
     n = len(texts)
     encoded = [(t or "")[:MAX_CHARS].lower().encode("utf-8") for t in texts]
@@ -135,8 +138,10 @@ def predict_language(texts: "list[str] | np.ndarray") -> tuple[np.ndarray, np.nd
     buf = b"".join(encoded)
     b = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
 
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(byte_lens[:-1], out=starts[1:])
+    # bounds[i]:bounds[i+1] are doc i's byte (and trigram) positions
+    bounds = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(byte_lens, out=bounds[1:])
+    starts = bounds[:-1]
 
     if b.size >= 3:
         codes = (b[:-2] << 16) | (b[1:-1] << 8) | b[2:]
@@ -151,14 +156,14 @@ def predict_language(texts: "list[str] | np.ndarray") -> tuple[np.ndarray, np.nd
     else:
         buckets = np.empty(0, dtype=np.int32)
 
-    # sentinel dummy element so every start offset (including == size, for
-    # trailing empty docs) is a legal reduceat index WITHOUT clipping into
-    # a real doc's trigrams (clipping made the last doc's score depend on
-    # whether empty docs followed it — caught by the order-invariance
-    # property test)
+    # pad with dummy rows up to bounds[-1] + 1: the last doc's segment
+    # gets its two zero rows like every other doc's (with one, numpy's
+    # pairwise float32 sum split it differently, so a doc's score moved
+    # when it came last in its batch), and the extra final offset
+    # bounds[-1] ends it, leaving trailing empty docs legal offsets
     n_tri = buckets.size
-    buckets_ext = np.append(buckets, np.int32(N_BUCKETS))
-    seg = np.minimum(starts, n_tri)
+    buckets_ext = np.concatenate([
+        buckets, np.full(bounds[-1] + 1 - n_tri, N_BUCKETS, np.int32)])
 
     scores = np.zeros((len(LANGS), n), dtype=np.float64)
     if n_tri:
@@ -167,9 +172,9 @@ def predict_language(texts: "list[str] | np.ndarray") -> tuple[np.ndarray, np.nd
         # per-language loop — bit-identical scores (asserted when this
         # landed), ~1.7x faster from gather locality
         W = _PROFILES_T[buckets_ext]  # float32; dummy-bucket row is 0
-        sums = np.add.reduceat(W, seg, axis=0).astype(np.float64)
-        # reduceat repeats the previous segment's value for empty
-        # segments (duplicate offsets) — zero those out
+        sums = np.add.reduceat(W, bounds, axis=0)[:n].astype(np.float64)
+        # for an empty segment (duplicate offsets) reduceat returns the
+        # row at its offset — zero those out
         sums[lengths <= 0, :] = 0.0
         scores = sums.T
     denom = np.maximum(lengths, 1).astype(np.float64)

@@ -8,6 +8,9 @@ jobs/scrub.py; its output is the scrub job's input).
 Scale design:
 * exact: one hash-aggregate on md5(normalized text) — the shuffle carries
   (32-hex, url) pairs, never document text; keeper = min(url).
+* --against: one LEFT ANTI join of the new snapshot's content hashes
+  against the history's. Both tables are read through ``_read_derived``,
+  so --from-html and --clean-unicode derive both sides' text alike.
 * near: MinHash signatures (single-pass expression, evaluated once per
   row) -> one exact key per (row, band); rows too short to shingle (or
   NULL) keep the sentinel signature and get no key -> candidate pairs
@@ -15,19 +18,18 @@ Scale design:
   shared with embedding near-dup: one self equi-join on the key,
   distinct id_a < id_b pairs, hash-partitioned into max(default
   parallelism, the key checkpoint's partitions) so the verify below
-  uses every slot) -> exact n-gram
-  Jaccard VERIFICATION of each candidate (on by default: with
-  n_perm=8/bands=4 the banding FP rate is ~1-(1-s^2)^4, so unrelated
-  docs with ~20% shingle overlap would otherwise be deleted ~15% of the
-  time; --no-verify-jaccard restores the unverified path and documents
-  that rate) -> per-pair min-url-wins drop set. Verification runs on
-  candidates only, never the corpus. The final filter is a plain LEFT ANTI join on the
-  uniform url key — NOT a forced broadcast: at web scale the near-dup
-  fraction runs 20-40% of the corpus, so the drop list is unbounded
-  (round-4 verdict: force-broadcasting it OOMs the driver at 10^12
-  docs). AQE still picks a broadcast at runtime whenever the list
-  measures small, so small jobs lose nothing. Near-dup options that
-  cannot run are rejected by parse_args, before any stage runs.
+  uses every slot) -> exact n-gram Jaccard VERIFICATION of each
+  candidate (always: with n_perm=8/bands=4 the banding FP rate is
+  ~1-(1-s^2)^4, so unrelated docs with ~20% shingle overlap would
+  otherwise be deleted ~15% of the time) -> per-pair min-url-wins drop
+  set. Verification runs on candidates only, never the corpus. The final
+  filter is a plain LEFT ANTI join on the uniform url key — NOT a forced
+  broadcast: at web scale the near-dup fraction runs 20-40% of the
+  corpus, so the drop list is unbounded (round-4 verdict:
+  force-broadcasting it OOMs the driver at 10^12 docs). AQE still picks
+  a broadcast at runtime whenever the list measures small, so small jobs
+  lose nothing. Near-dup options that cannot run are rejected by
+  parse_args, before any stage runs.
 * every stage ends at one boundary, ``_stage``: an eager
   ``localCheckpoint`` with an Observation of the stage's row count.
   Each stage reads its input more than once (self-joins), so each is
@@ -83,16 +85,6 @@ def parse_args(argv=None):
                         "BEFORE intra-snapshot dedup — incremental "
                         "ingestion of a new crawl snapshot against the "
                         "historical corpus")
-    p.add_argument("--against-bloom", action="store_true",
-                   help="bloom semijoin pushdown for --against: build a "
-                        "Bloom filter over the NEW snapshot's hashes "
-                        "(the small side), broadcast it, and map-side "
-                        "prune the HISTORY scan before the exact "
-                        "anti-join — the history never shuffles in "
-                        "full. Results are EXACTLY the plain path's "
-                        "(bloom FPs only add rows to the exact join); "
-                        "see functions/bloom.py")
-    p.add_argument("--against-bloom-fpp", type=float, default=0.01)
     p.add_argument("--shingle-words", type=int, default=3)
     p.add_argument("--n-perm", type=int, default=8)
     p.add_argument("--bands", type=int, default=4)
@@ -101,9 +93,6 @@ def parse_args(argv=None):
                         "count as a duplicate (0.7 keeps one-word edits of "
                         "short docs in the duplicate class; LSH banding FPs "
                         "sit far below it)")
-    p.add_argument("--no-verify-jaccard", action="store_true",
-                   help="treat raw LSH candidates as duplicates (FP rate "
-                        "~1-(1-s^2)^4 at default n_perm=8/bands=4)")
     p.add_argument("--exact-clusters", action="store_true",
                    help="resolve near-dup CHAINS with connected "
                         "components (one keeper per full cluster) instead "
@@ -193,8 +182,8 @@ def _row_id():
 
 
 def near_dedup(df, args):
-    """MinHash/LSH near-dup removal: candidate pairs -> (optional)
-    Jaccard verification -> drop set -> LEFT ANTI filter. The anti join
+    """MinHash/LSH near-dup removal: candidate pairs -> exact Jaccard
+    verification -> drop set -> LEFT ANTI filter. The anti join
     carries NO broadcast hint: the drop list is unbounded (20-40% of a
     web corpus is near-dup — round-4 verdict: forcing a broadcast OOMs
     at 10^12 docs), the url key is uniform so a sort-merge anti is
@@ -211,12 +200,11 @@ def near_dedup(df, args):
             keyed, id_col="_rid", text_col="text",
             n=args.shingle_words, n_perm=args.n_perm, bands=args.bands,
         )
-    if not args.no_verify_jaccard:
-        # exact verification on candidates only — kills banding FPs
-        pairs = jaccard_on_pairs(
-            pairs, keyed, id_col="_rid", text_col="text",
-            n=args.shingle_words,
-        ).filter(F.col("jaccard") >= args.jaccard_threshold)
+    # exact verification on candidates only — kills banding FPs
+    pairs = jaccard_on_pairs(
+        pairs, keyed, id_col="_rid", text_col="text",
+        n=args.shingle_words,
+    ).filter(F.col("jaccard") >= args.jaccard_threshold)
     if args.exact_clusters:
         # exact cluster policy: one keeper per connected component (a
         # chain A-B-C keeps only A even though A-C was never itself a
@@ -236,6 +224,29 @@ def near_dedup(df, args):
     return keyed.join(drops, on="_rid", how="left_anti").drop("_rid")
 
 
+def _read_derived(spark, path: str, args):
+    """Read a pages table and derive its text as the run's options say:
+    ``extract_text(html)`` under --from-html, then ``with_clean_text``
+    under --clean-unicode. The input and the --against history are both
+    read here, so both sides hash the same derivation by construction.
+    A mismatch would silently re-ingest every cross-snapshot duplicate:
+    a raw-crawl history has the same stale text column the new snapshot
+    does, and a history page with NFD accents, NBSP or CRLF hashes apart
+    from its normalized re-crawl."""
+    df = read_pages(spark, path)
+    if args.from_html:
+        from incident_pii_redactor_spark.functions.html import extract_text
+
+        df = df.withColumn("text", extract_text("html"))
+    if args.clean_unicode:
+        from incident_pii_redactor_spark.quality.unicode_clean import (
+            with_clean_text,
+        )
+
+        df = with_clean_text(df)
+    return df
+
+
 def run(args, spark=None) -> dict:
     owns = spark is None
     if owns:
@@ -243,19 +254,7 @@ def run(args, spark=None) -> dict:
     try:
         # read_pages probes a 100-row sample: the input's first job
         with _described(spark.sparkContext, "input"):
-            df = read_pages(spark, args.input)
-        if args.from_html:
-            from incident_pii_redactor_spark.functions.html import (
-                extract_text,
-            )
-
-            df = df.withColumn("text", extract_text("html"))
-        if args.clean_unicode:
-            from incident_pii_redactor_spark.quality.unicode_clean import (
-                with_clean_text,
-            )
-
-            df = with_clean_text(df)
+            df = _read_derived(spark, args.input, args)
         stats: dict = {}
         df = _stage(df, stats, "rows_in", "input")
 
@@ -269,48 +268,9 @@ def run(args, spark=None) -> dict:
             # the corpus each snapshot); reading the pages table here
             # keeps the job self-contained.
             with _described(spark.sparkContext, "against"):
-                hist = read_pages(spark, args.against)
-            if args.from_html:
-                # hash the SAME derivation on both sides: a raw-crawl
-                # history table has the same stale text column the new
-                # snapshot does (review round 3 — mismatched hashing
-                # would silently re-ingest everything)
-                from incident_pii_redactor_spark.functions.html import (
-                    extract_text,
-                )
-
-                hist = hist.withColumn("text", extract_text("html"))
-            if args.clean_unicode:
-                # same rule as --from-html directly above: hash the SAME
-                # derivation on both sides. Without this, a historical
-                # page containing normalizable bytes (NFD accents, NBSP,
-                # CRLF) hashes differently from its NFC-clean re-crawl
-                # and true cross-snapshot dups are silently re-ingested.
-                from incident_pii_redactor_spark.quality.unicode_clean import (
-                    with_clean_text,
-                )
-
-                hist = with_clean_text(hist)
-            hist = hist.select(content_hash("text").alias("_h"))
+                hist = _read_derived(spark, args.against, args)
+            hist = hist.select(content_hash("text").alias("_h")).distinct()
             df = df.withColumn("_h", content_hash("text"))
-            if args.against_bloom:
-                # semijoin pushdown (functions/bloom.py): bloom the NEW
-                # snapshot (the small side), broadcast, prune history
-                # map-side — only |snapshot ∩ history| + fpp·|history|
-                # rows reach the exact anti-join below, so the history
-                # never shuffles in full. Exactness unchanged: bloom
-                # FPs add rows to the exact join, never drop matches.
-                from incident_pii_redactor_spark.functions.bloom import (
-                    build_bloom, filter_might_contain,
-                )
-
-                with _described(spark.sparkContext, "against bloom"):
-                    bloom, k, m = build_bloom(
-                        df, "_h", expected_keys=max(stats["rows_in"], 1),
-                        fpp=args.against_bloom_fpp)
-                stats["against_bloom_bytes"] = m // 8
-                hist = filter_might_contain(hist, "_h", bloom, k, m)
-            hist = hist.distinct()
             df = df.join(hist, "_h", "left_anti").drop("_h")
             df = _stage(df, stats, "rows_after_against", "against")
 

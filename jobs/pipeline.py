@@ -4,7 +4,7 @@ the full production path a training-data run takes.
 
     spark-submit --py-files dist/engine.zip jobs/pipeline.py \
         --input /data/pages --workdir /data/run1 \
-        [--dedup-mode both] [--paragraph] [--salt] [--rocksdb-n/a]
+        [--dedup-mode both] [--paragraph] [--salt]
 
 Stages (each independently restartable — the scrub stage's manifest
 makes rerunning this CLI resume instead of recompute):

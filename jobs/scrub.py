@@ -22,9 +22,10 @@ Execution model (SURVEY.md §3.4):
   A row whose scrub raises is quarantined (keep=false,
   drop_reason='error:<Type>') and counted; it never fails the task.
   A crash loses at most one in-flight group; restart skips everything
-  manifested. Output is byte-identical to a cold run because every
-  per-row value is a pure function of the row (md5 pseudonyms, no wall
-  clock — completed_ts is a job ARG, FIXTURES.md F4).
+  manifested (tests/test_resume.py crashes runs right after a chosen
+  manifest append and resumes them). Output is byte-identical to a cold
+  run because every per-row value is a pure function of the row (md5
+  pseudonyms, no wall clock — completed_ts is a job ARG, FIXTURES.md F4).
 
 Scale notes: the scrub itself is shuffle-free; the only shuffles are the
 per-group redactions_by_type rollup (tiny) and, with --salt, a url-hash
@@ -99,8 +100,6 @@ def parse_args(argv=None):
                         "footers, and one of ~800k files must not kill a "
                         "resume-capable run. Default off — silent data "
                         "loss should be an explicit operator decision")
-    p.add_argument("--fail-after-groups", type=int, default=0,
-                   help="TESTING ONLY: exit(1) after N completed groups")
     args = p.parse_args(argv)
     # zero buckets would run zero groups and report success with nothing
     # written; a zero group size would crash in range()
@@ -195,8 +194,6 @@ def run(args, spark=None) -> dict:
             stats["buckets_done"] += len(group)
             stats["rows"] += observed["rows"]
             stats["quarantined"] += observed["quarantined"]
-            if args.fail_after_groups and stats["groups_run"] >= args.fail_after_groups:
-                sys.exit(1)
         return stats
     finally:
         if owns_session:

@@ -97,6 +97,25 @@ def test_quality_signals_batch_order_invariance(texts):
         assert bool(fwd["keep"][i]) == bool(rev["keep"][j])
         assert fwd["drop_reason"][i] == rev["drop_reason"][j]
         assert abs(fwd["ppl"][i] - rev["ppl"][j]) < 1e-9
+        # bit for bit: reversing moves the last doc of the batch
+        assert fwd["lang_conf"][i] == rev["lang_conf"][j]
+
+
+def test_lang_conf_of_a_page_is_independent_of_its_batch():
+    """Page 28 of the 2,000 conftest pages scored alone, where it is the
+    last doc of its batch, and scored before page 29 got confidences
+    that differed in the 8th digit when the last doc's float32 trigram
+    sum was split differently from every other doc's."""
+    import pandas as pd
+
+    from incident_pii_redactor_spark.quality.scorer import quality_signals
+    from incident_pii_redactor_spark.sources.pages import synth_pages
+
+    texts = synth_pages(2000)["text"]
+    alone = quality_signals(pd.Series([texts[28]]))
+    paired = quality_signals(pd.Series([texts[28], texts[29]]))
+    assert alone["lang_conf"][0] == paired["lang_conf"][0]
+    assert alone["lang_pred"][0] == paired["lang_pred"][0]
 
 
 @given(st.text(alphabet=st.characters(codec="utf-8"), max_size=200))

@@ -8,8 +8,9 @@ dead weight. These tests walk the code statically (``ast``, no Spark)
 from those seeds: first the import graph between modules, then the names
 each reached definition uses. They name every package module, and every
 top-level ``def``, ``class`` or assignment in a reached module, that the
-walk never reaches. A last test keeps the other direction live: every
-script that the Makefile, README.md or CLAUDE.md names must exist.
+walk never reaches. A job option is dead weight too when its job never
+reads it. A last test keeps the other direction live: every script that
+the Makefile, README.md or CLAUDE.md names must exist.
 """
 
 from __future__ import annotations
@@ -40,6 +41,13 @@ EXEMPT_DEFS = {
     f"{PKG}.core.validate.recommendations",
     # reference parity (COVERAGE.md D8)
     f"{PKG}.core.detectors.context_window",
+}
+
+# Job options that no code reads but that stay, as (job, dest).
+EXEMPT_OPTIONS = {
+    # perfbench/run.py passes it to jobs/dedup.py, whose stage counts
+    # ride each stage's one materialization and cost no extra job
+    ("dedup.py", "no_stage_counts"),
 }
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
@@ -211,3 +219,38 @@ def test_scripts_named_in_docs_exist():
     missing = sorted(p for p in named
                      if not os.path.exists(os.path.join(REPO, p)))
     assert named and not missing, f"scripts named but missing: {missing}"
+
+
+def _option_dest(call: ast.Call) -> str:
+    """The ``args`` attribute argparse stores an ``add_argument`` in."""
+    for kw in call.keywords:
+        if kw.arg == "dest":
+            return kw.value.value
+    flags = [a.value for a in call.args if isinstance(a, ast.Constant)]
+    flag = next((f for f in flags if f.startswith("--")), flags[0])
+    return flag.lstrip("-").replace("-", "_")
+
+
+def test_every_job_option_is_read():
+    """Every option a job declares appears as ``args.<dest>`` in its own
+    module: an option nothing reads is a fork no caller can reach."""
+    unread = set()
+    jobs_dir = os.path.join(REPO, "jobs")
+    for f in sorted(os.listdir(jobs_dir)):
+        if not f.endswith(".py"):
+            continue
+        dests, read = set(), set()
+        for node in ast.walk(_parse(os.path.join(jobs_dir, f))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "add_argument"):
+                dests.add(_option_dest(node))
+            elif (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "args"):
+                read.add(node.attr)
+        unread |= {(f, d) for d in dests - read}
+    dead = sorted(unread - EXEMPT_OPTIONS)
+    stale = sorted(EXEMPT_OPTIONS - unread)
+    assert not dead, f"job options their job never reads: {dead}"
+    assert not stale, f"drop from EXEMPT_OPTIONS (now read or gone): {stale}"

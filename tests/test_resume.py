@@ -22,6 +22,29 @@ def _read_all(spark, path):
     )
 
 
+class _Crash(Exception):
+    """The driver dying between two bucket groups."""
+
+
+def _run_crashing_after_groups(spark, args, n):
+    """Run the scrub job and let it die right after its ``n``-th manifest
+    append: those groups stay committed, the later ones never run."""
+    import jobs.scrub as scrub_job
+
+    real, calls = scrub_job.append_manifest, []
+
+    def append_then_crash(*a, **kw):
+        real(*a, **kw)
+        calls.append(a)
+        if len(calls) == n:
+            raise _Crash(f"after group {n}")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scrub_job, "append_manifest", append_then_crash)
+        with pytest.raises(_Crash):
+            run(args, spark=spark)
+
+
 @pytest.fixture(scope="module")
 def cold_run(spark, pages_parquet, tmp_path_factory):
     d = tmp_path_factory.mktemp("cold")
@@ -43,8 +66,7 @@ def test_interrupted_then_resumed_equals_cold(spark, pages_parquet,
             "--manifest", str(d / "mf"), "--n-buckets", "8",
             "--bucket-group-size", "2"]
     # first attempt dies after 2 of 4 groups
-    with pytest.raises(SystemExit):
-        run(parse_args(base + ["--fail-after-groups", "2"]), spark=spark)
+    _run_crashing_after_groups(spark, parse_args(base), 2)
     manifest = spark.read.parquet(str(d / "mf"))
     assert manifest.select("partition_id").distinct().count() == 4
     # resume: must process exactly the remaining 4 buckets
@@ -324,8 +346,7 @@ def test_manifest_is_rollup_of_written_output(spark, pages_parquet,
             "--manifest", str(d / "mf"), "--n-buckets", n_buckets,
             "--bucket-group-size", "3"]
     if case == "resumed":
-        with pytest.raises(SystemExit):
-            run(parse_args(base + ["--fail-after-groups", "1"]), spark=spark)
+        _run_crashing_after_groups(spark, parse_args(base), 1)
     run(parse_args(base), spark=spark)
     m = _assert_manifest_is_rollup_of_output(spark, d).toPandas()
     assert sorted(m["partition_id"]) == list(range(int(n_buckets)))
@@ -675,13 +696,16 @@ def test_dedup_job_jaccard_verification_kills_lsh_fps(spark, tmp_path_factory):
     """ADVICE round 1: raw LSH candidates must not be treated as confirmed
     duplicates. This pair shares one minhash band (verified offline with
     the exact signature formula) but has n-gram Jaccard ~0.31 — the
-    verified path must RETAIN both docs; --no-verify-jaccard drops one."""
+    job must RETAIN both docs, although the pair is an LSH candidate."""
     import datetime as dt
 
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from incident_pii_redactor_spark.functions.dedup import (
+        minhash_lsh_pairs,
+    )
     from jobs.dedup import parse_args as dedup_args, run as dedup_run
 
     d = tmp_path_factory.mktemp("dedup_fp")
@@ -701,15 +725,17 @@ def test_dedup_job_jaccard_verification_kills_lsh_fps(spark, tmp_path_factory):
         preserve_index=False)
     pq.write_table(tbl, str(d / "pages.parquet"))
 
-    base = ["--input", str(d / "pages.parquet"), "--mode", "near"]
-    verified = dedup_run(dedup_args(
-        base + ["--output", str(d / "out_v")]), spark=spark)
+    args = dedup_args(["--input", str(d / "pages.parquet"), "--mode",
+                       "near", "--output", str(d / "out")])
+    # the job's banding at its defaults makes the pair a candidate
+    pairs = minhash_lsh_pairs(
+        spark.read.parquet(str(d / "pages.parquet")), id_col="url",
+        text_col="text", n=args.shingle_words, n_perm=args.n_perm,
+        bands=args.bands)
+    assert [tuple(r) for r in pairs.select("id_a", "id_b").collect()] == \
+        [("https://a/1", "https://a/2")]
+    verified = dedup_run(args, spark=spark)
     assert verified["rows_after_near"] == 2  # FP candidate retained
-
-    raw = dedup_run(dedup_args(
-        base + ["--output", str(d / "out_raw"), "--no-verify-jaccard"]),
-        spark=spark)
-    assert raw["rows_after_near"] == 1  # unverified path drops the FP
 
 
 def test_results_cli_surface(spark, pages_parquet, tmp_path_factory, capsys):
@@ -1210,12 +1236,10 @@ def test_dedup_job_against_history_respects_clean_unicode(
     assert urls == {"https://n/2"}
 
 
-def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory,
-                                           no_cache_or_count):
-    """functions/bloom.py semijoin pushdown: --against-bloom must
-    produce EXACTLY the plain --against output (false positives only
-    add rows to the exact anti-join; false negatives are impossible),
-    while the history side is pruned map-side before its shuffle."""
+def test_dedup_against_drops_history_hashes(spark, tmp_path_factory,
+                                            no_cache_or_count):
+    """--against drops exactly the new rows whose content hash appears in
+    the history, with no cache and no count job."""
     import datetime as dt
 
     import pandas as pd
@@ -1224,7 +1248,7 @@ def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory,
 
     from jobs.dedup import parse_args as dargs, run as drun
 
-    d = tmp_path_factory.mktemp("against_bloom")
+    d = tmp_path_factory.mktemp("against_plain")
     ts = dt.datetime(2025, 1, 1)
 
     def mk(rows, path):
@@ -1247,55 +1271,14 @@ def test_dedup_against_bloom_matches_plain(spark, tmp_path_factory,
     mk(hist, str(d / "history.parquet"))
     mk(new, str(d / "new.parquet"))
 
-    base = ["--input", str(d / "new.parquet"),
-            "--against", str(d / "history.parquet"), "--mode", "exact"]
     with no_cache_or_count():
-        plain = drun(dargs(base + ["--output", str(d / "out_plain")]),
-                     spark=spark)
-        bloomed = drun(dargs(base + ["--output", str(d / "out_bloom"),
-                                     "--against-bloom"]), spark=spark)
-    assert plain["rows_after_against"] == 25
-    assert bloomed["rows_after_against"] == 25
-    assert bloomed["against_bloom_bytes"] > 0
-    a = sorted(r.url for r in
-               spark.read.parquet(str(d / "out_plain")).collect())
-    b = sorted(r.url for r in
-               spark.read.parquet(str(d / "out_bloom")).collect())
-    assert a == b and len(a) == 25
-
-
-def test_bloom_filter_properties(spark):
-    """No false negatives ever; measured FP rate within ~3x the target;
-    oversized blooms refuse to broadcast; deterministic across builds."""
-    import pytest
-
-    from incident_pii_redactor_spark.functions.bloom import (
-        bloom_params, build_bloom, filter_might_contain,
-    )
-    import pyspark.sql.functions as F
-
-    inserted = spark.range(2000).select(
-        F.md5(F.concat(F.lit("in-"), F.col("id"))).alias("h"))
-    bloom, k, m = build_bloom(inserted, "h", expected_keys=2000, fpp=0.01)
-    bloom2, k2, m2 = build_bloom(inserted.repartition(7), "h",
-                                 expected_keys=2000, fpp=0.01)
-    assert (bloom, k, m) == (bloom2, k2, m2)  # partition-invariant bits
-
-    # every inserted key passes (false negatives impossible)
-    kept = filter_might_contain(inserted, "h", bloom, k, m).count()
-    assert kept == 2000
-
-    # disjoint keys: FP rate near the target
-    other = spark.range(10_000).select(
-        F.md5(F.concat(F.lit("out-"), F.col("id"))).alias("h"))
-    fp = filter_might_contain(other, "h", bloom, k, m).count()
-    assert fp / 10_000 < 0.03, f"fp rate {fp / 10_000}"
-
-    m_exp, k_exp = bloom_params(2000, 0.01)
-    assert (m, k) == (m_exp, k_exp) and m % 8 == 0 and k >= 1
-
-    with pytest.raises(ValueError, match="512 MB"):
-        bloom_params(10**12, 0.01)
+        stats = drun(dargs(
+            ["--input", str(d / "new.parquet"),
+             "--against", str(d / "history.parquet"), "--mode", "exact",
+             "--output", str(d / "out")]), spark=spark)
+    assert stats["rows_after_against"] == 25
+    urls = sorted(r.url for r in spark.read.parquet(str(d / "out")).collect())
+    assert urls == sorted(f"https://n/{i}" for i in range(15, 40))
 
 
 def test_dedup_exact_keeps_keeper_rows_not_keeper_urls(spark,

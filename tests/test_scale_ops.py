@@ -473,26 +473,3 @@ def test_fixture_backed_embedding_query_matches_oracle(spark, query):
     assert len(srows) == len(orows)
     assert value_hash(sorted(row_keys(srows, sdf.columns))) == \
         value_hash(sorted(row_keys(orows, orel.columns)))
-
-
-def test_bloom_tolerates_null_hashes(spark):
-    """NULL hashes: skipped at build, PASSED THROUGH by the prefilter
-    (the exact anti-join keeps NULL-key rows; review round 5)."""
-    from incident_pii_redactor_spark.functions.bloom import (
-        build_bloom,
-        filter_might_contain,
-    )
-
-    import hashlib as _hl
-
-    h1, h2, h3 = (_hl.md5(x).hexdigest() for x in (b"a", b"b", b"c"))
-    hist = spark.createDataFrame(
-        [(h1,), (h2,), (None,)], "h string")
-    bits, k, m = build_bloom(hist, "h", expected_keys=10)
-    probe = spark.createDataFrame(
-        [(1, h1), (2, h3), (3, None)], "id int, h string")
-    got = {r.id for r in
-           filter_might_contain(probe, "h", bits, k, m).collect()}
-    assert 1 in got          # present key kept
-    assert 2 not in got      # absent key filtered
-    assert 3 in got          # NULL passes through to the exact join
